@@ -28,9 +28,10 @@ def build_parser() -> argparse.ArgumentParser:
                    help="parquet path(s) for one day of data, comma-separated")
     p.add_argument("--output", required=True, help="output directory for the scored TSV")
     p.add_argument("--feedback", default=None,
-                   help="analyst feedback TSV (severity-3 rows oversampled)")
+                   help="analyst feedback TSV (severity-3 rows weighted ×dupfactor)")
     p.add_argument("--dupfactor", type=int, default=1000,
-                   help="feedback oversampling factor (ml_ops.sh:49)")
+                   help="weight of each severity-3 feedback row in training "
+                        "(ml_ops.sh:49)")
     p.add_argument("--ldatopiccount", type=int, default=20,
                    help="LDA topic count (ml_ops.sh:67)")
     p.add_argument("--lda-alpha", type=float, default=2.5,
@@ -136,10 +137,15 @@ def main(argv: list[str] | None = None) -> int:
     suspicious = result.suspicious
     if audit is not None:
         suspicious = audit.observe(suspicious, "suspicious")
-    write_tsv(
-        suspicious, args.output,
-        single_file=args.single_file, delimiter=args.delimiter,
-    )
+    try:
+        write_tsv(
+            suspicious, args.output,
+            single_file=args.single_file, delimiter=args.delimiter,
+        )
+    finally:
+        # a later analysis in the same session must not be served this
+        # one's cached frames (stale if the input files were rewritten)
+        result.release()
     if audit is not None:
         import json as _json
         import sys as _sys

@@ -11,18 +11,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oni_ml_spark.pipelines.common import FEEDBACK_FLAG, SuspiciousConnectsResult, train_and_score
+from oni_ml_spark.pipelines.common import (
+    SuspiciousConnectsResult,
+    train_and_score,
+    training_union,
+    weight_of,
+)
 from oni_ml_spark.transforms import (
     DECILES,
     QUINTILES,
     bin_expr,
     dns_word,
     extract_subdomain_cols,
-    oversample,
     string_entropy,
     top_domain_expr,
 )
-from oni_ml_spark.transforms.feedback import conform_feedback, severity_filter
 
 
 def null_filter(df: DataFrame) -> DataFrame:
@@ -31,14 +34,19 @@ def null_filter(df: DataFrame) -> DataFrame:
 
 
 def featurize(
-    df: DataFrame, top_domains: list[str], exact_quantiles: bool = True
+    df: DataFrame,
+    top_domains: list[str],
+    exact_quantiles: bool = True,
+    cached: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Subdomain struct + entropy + five quantile-cut bins + word, one pass.
 
     The reference runs five separate full-scan quantile jobs
     (dns/DNSWordCreation.scala:78-122); filtering >0 values per-column is
     preserved (P5). With exact_quantiles=False all five use the single-pass
-    approxQuantile sketch.
+    approxQuantile sketch. Rows carrying ``WEIGHT_COL`` count that many
+    times in the cuts. The frame this call caches is appended to
+    ``cached`` when given, so the caller can release it.
     """
     from oni_ml_spark.transforms.quantiles import (
         approx_quantile_cuts_multi,
@@ -48,10 +56,13 @@ def featurize(
     df = df.withColumns(extract_subdomain_cols("dns_qry_name"))
     df = df.withColumn("subdomain_entropy", string_entropy("subdomain"))
     df = df.cache()
+    if cached is not None:
+        cached.append(df)
 
     if exact_quantiles:
-        # the reference's five full-scan quantile jobs in 3 jobs total,
-        # >0 predicates (P5) applied per column inside the melt
+        # the reference's five full-scan quantile jobs in one plan (4 jobs
+        # in a warm analysis), >0 predicates (P5) applied per column
+        # inside the melt
         cuts = quantile_cuts_multi(
             df,
             {
@@ -62,6 +73,7 @@ def featurize(
                 "num_periods": QUINTILES,
             },
             positive_only={"subdomain_length", "subdomain_entropy", "num_periods"},
+            weight_col=weight_of(df),
         )
         time_cuts, frame_len_cuts = cuts["unix_tstamp"], cuts["frame_len"]
         subdomain_len_cuts = cuts["subdomain_length"]
@@ -75,6 +87,7 @@ def featurize(
              "subdomain_entropy", "num_periods"],
             DECILES,
             positive_only={"subdomain_length", "subdomain_entropy", "num_periods"},
+            weight_col=weight_of(df),
         )
         time_cuts, frame_len_cuts = cuts["unix_tstamp"], cuts["frame_len"]
         subdomain_len_cuts = cuts["subdomain_length"][1::2]
@@ -115,14 +128,13 @@ def run(
     exact_quantiles: bool = True,
     max_count_per_word: int | None = 10_000,
 ) -> SuspiciousConnectsResult:
-    df = null_filter(df).withColumn(FEEDBACK_FLAG, F.lit(False))
-    if feedback is not None:
-        fb = oversample(severity_filter(feedback, "dns_sev"), dup_factor).withColumn(
-            FEEDBACK_FLAG, F.lit(True)
-        )
-        df = df.unionByName(conform_feedback(fb, df))
+    df = training_union(null_filter(df), feedback, "dns_sev", dup_factor)
 
-    featurized = featurize(df, top_domains or [], exact_quantiles=exact_quantiles).cache()
+    cached: list[DataFrame] = []
+    featurized = featurize(
+        df, top_domains or [], exact_quantiles=exact_quantiles, cached=cached
+    ).cache()
+    cached.append(featurized)
     return train_and_score(
         featurized,
         doc_col="ip_dst",
@@ -134,4 +146,5 @@ def run(
         seed=seed,
         max_iter=max_iter,
         max_count_per_word=max_count_per_word,
+        cached=cached,
     )

@@ -17,13 +17,21 @@ from oni_ml_spark.pipelines.common import SuspiciousConnectsResult, train_and_sc
 from oni_ml_spark.transforms import DECILES, QUINTILES, bin_expr
 
 
-def featurize(df: DataFrame, exact_quantiles: bool = True) -> DataFrame:
+def featurize(
+    df: DataFrame,
+    exact_quantiles: bool = True,
+    cached: list[DataFrame] | None = None,
+) -> DataFrame:
+    """Value deciles × hour quintiles × event type; the frame this call
+    caches is appended to ``cached`` when given."""
     from oni_ml_spark.transforms.quantiles import (
         approx_quantile_cuts_multi,
         quantile_cuts_multi,
     )
 
     df = df.withColumn("hour", F.hour("ts").cast("double")).cache()
+    if cached is not None:
+        cached.append(df)
     if exact_quantiles:
         cuts = quantile_cuts_multi(df, {"value": DECILES, "hour": QUINTILES})
         value_cuts, hour_cuts = cuts["value"], cuts["hour"]
@@ -59,7 +67,9 @@ def run(
     max_count_per_word: int | None = 10_000,
     exact_quantiles: bool = True,
 ) -> SuspiciousConnectsResult:
-    featurized = featurize(df, exact_quantiles=exact_quantiles).cache()
+    cached: list[DataFrame] = []
+    featurized = featurize(df, exact_quantiles=exact_quantiles, cached=cached).cache()
+    cached.append(featurized)
     return train_and_score(
         featurized.withColumn("doc_id", F.col("user_id").cast("string")),
         doc_col="doc_id",
@@ -70,4 +80,5 @@ def run(
         seed=seed,
         max_iter=max_iter,
         max_count_per_word=max_count_per_word,
+        cached=cached,
     )

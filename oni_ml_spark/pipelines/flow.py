@@ -2,7 +2,7 @@
 
 Reference dataflow: netflow/FlowSuspiciousConnects.scala:12-27 →
 FlowPreLDA → OniLDACWrapper → FlowPostLDA (SURVEY.md §3.1). Re-expressed:
-one featurization over raw ∪ oversampled-feedback, cached, feeding both
+one featurization over raw ∪ weighted feedback, cached, feeding both
 training corpus (both endpoints) and scoring; LDA in-cluster; per-endpoint
 scores via broadcast joins; record score = least(src, dst).
 """
@@ -13,9 +13,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from oni_ml_spark.pipelines.common import (
-    FEEDBACK_FLAG,
+    WEIGHT_COL,
     SuspiciousConnectsResult,
-    train_and_score,
+    records_to_score,
+    training_union,
+    weight_of,
 )
 from oni_ml_spark.scoring import min_endpoint_score, most_suspicious, score_records
 from oni_ml_spark.topics import fit_topic_model
@@ -25,9 +27,7 @@ from oni_ml_spark.transforms import (
     bin_expr,
     flow_word_cols,
     fractional_hour,
-    oversample,
 )
-from oni_ml_spark.transforms.feedback import conform_feedback, severity_filter
 
 
 def valid_time_filter(df: DataFrame) -> DataFrame:
@@ -39,12 +39,18 @@ def valid_time_filter(df: DataFrame) -> DataFrame:
     )
 
 
-def featurize(df: DataFrame, exact_quantiles: bool = True) -> DataFrame:
+def featurize(
+    df: DataFrame,
+    exact_quantiles: bool = True,
+    cached: list[DataFrame] | None = None,
+) -> DataFrame:
     """num_time + three quantile-cut bins + flow words, single pass.
 
-    The three cut computations are Spark actions that each return a ≤10-double
-    array to the driver — the only driver-boundary crossings in the pipeline
-    (reference had the same, netflow/FlowWordCreation.scala:26-49).
+    The three cut lists come back to the driver as ≤10-double arrays from
+    one collect — the only driver-boundary crossing in the featurization
+    (the reference collected the same, netflow/FlowWordCreation.scala:26-49).
+    Rows carrying ``WEIGHT_COL`` count that many times in the cuts; the
+    frame this call caches is appended to ``cached`` when given.
     """
     from oni_ml_spark.transforms.quantiles import (
         approx_quantile_cuts_multi,
@@ -53,15 +59,21 @@ def featurize(df: DataFrame, exact_quantiles: bool = True) -> DataFrame:
 
     df = df.withColumn("num_time", fractional_hour("trhour", "trminute", "trsec"))
     df = df.cache()
+    if cached is not None:
+        cached.append(df)
     if exact_quantiles:
-        # all three cut sets in 3 jobs total (vs 3 per column)
+        # all three cut sets from one plan (vs one pass per column)
         cuts = quantile_cuts_multi(
-            df, {"num_time": DECILES, "ibyt": DECILES, "ipkt": QUINTILES}
+            df,
+            {"num_time": DECILES, "ibyt": DECILES, "ipkt": QUINTILES},
+            weight_col=weight_of(df),
         )
         time_cuts, ibyt_cuts, ipkt_cuts = cuts["num_time"], cuts["ibyt"], cuts["ipkt"]
     else:
         # one sketch pass for all three columns; quintiles = every 2nd decile
-        cuts = approx_quantile_cuts_multi(df, ["num_time", "ibyt", "ipkt"], DECILES)
+        cuts = approx_quantile_cuts_multi(
+            df, ["num_time", "ibyt", "ipkt"], DECILES, weight_col=weight_of(df)
+        )
         time_cuts, ibyt_cuts = cuts["num_time"], cuts["ibyt"]
         ipkt_cuts = cuts["ipkt"][1::2]
 
@@ -91,21 +103,19 @@ def run(
     exact_quantiles: bool = True,
     max_count_per_word: int | None = 10_000,
 ) -> SuspiciousConnectsResult:
-    df = valid_time_filter(df).withColumn(FEEDBACK_FLAG, F.lit(False))
-    if feedback is not None:
-        fb = oversample(severity_filter(feedback), dup_factor).withColumn(
-            FEEDBACK_FLAG, F.lit(True)
-        )
-        df = df.unionByName(conform_feedback(fb, df))
+    df = training_union(valid_time_filter(df), feedback, "sev", dup_factor)
 
-    featurized = featurize(df, exact_quantiles=exact_quantiles).cache()
+    cached: list[DataFrame] = []
+    featurized = featurize(df, exact_quantiles=exact_quantiles, cached=cached).cache()
+    cached.append(featurized)
 
     # Corpus: each IP's document collects words from both endpoints
     # (netflow/FlowPreLDA.scala:131-139). One explode + one groupBy — a
     # single shuffle over 2N rows, instead of the reference's two
-    # reduceByKeys + union (three shuffles).
+    # reduceByKeys + union (three shuffles). Each row counts its weight.
     counts = (
         featurized.select(
+            F.col(WEIGHT_COL),
             F.explode(
                 F.array(
                     F.struct(F.col("sip").alias("doc"), F.col("source_word").alias("word")),
@@ -113,16 +123,16 @@ def run(
                 )
             ).alias("dw")
         )
-        .select("dw.doc", "dw.word")
+        .select("dw.doc", "dw.word", WEIGHT_COL)
         .groupBy("doc", "word")
-        .agg(F.count(F.lit(1)).alias("count"))
+        .agg(F.sum(WEIGHT_COL).alias("count"))
     )
     model = fit_topic_model(counts, topic_count=topic_count,
                             doc_concentration=doc_concentration,
                             seed=seed, max_iter=max_iter,
                             max_count_per_word=max_count_per_word)
 
-    to_score = featurized.filter(~F.col(FEEDBACK_FLAG)).drop(FEEDBACK_FLAG)
+    to_score = records_to_score(featurized)
     # Flow quirk preserved: inner join drops IPs unseen in training
     # (netflow/FlowPostLDA.scala:94, SURVEY.md §7.4.4).
     scored = score_records(
@@ -133,4 +143,4 @@ def run(
     )
     scored = scored.withColumn("score", min_endpoint_score("src_score", "dst_score"))
     suspicious = most_suspicious(scored, threshold=threshold, top_k=top_k)
-    return SuspiciousConnectsResult(scored, suspicious, model)
+    return SuspiciousConnectsResult(scored, suspicious, model, cached)

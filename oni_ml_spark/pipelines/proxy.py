@@ -16,16 +16,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oni_ml_spark.pipelines.common import FEEDBACK_FLAG, SuspiciousConnectsResult, train_and_score
+from oni_ml_spark.pipelines.common import (
+    SuspiciousConnectsResult,
+    train_and_score,
+    training_union,
+    weight_of,
+)
 from oni_ml_spark.transforms import (
     DECILES,
     QUINTILES,
     bin_expr,
-    oversample,
     string_entropy,
     proxy_word,
 )
-from oni_ml_spark.transforms.feedback import conform_feedback, severity_filter
 from oni_ml_spark.transforms.time import seconds_of_day
 
 
@@ -37,12 +40,18 @@ def null_filter(df: DataFrame) -> DataFrame:
 
 
 def featurize(
-    df: DataFrame, top_domains: list[str], exact_quantiles: bool = True
+    df: DataFrame,
+    top_domains: list[str],
+    exact_quantiles: bool = True,
+    cached: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Time/entropy/agent-count features + proxy word.
 
     Reference cuts: time deciles (ProxySuspiciousConnectsModel.scala:106-107),
     fulluri-entropy quintiles (:109-110), agent-count quintiles (:112-118).
+    Rows carrying ``WEIGHT_COL`` count that many times in the agent counts
+    and the cuts; the frame this call caches is appended to ``cached`` when
+    given.
     """
     from oni_ml_spark.transforms.quantiles import (
         approx_quantile_cuts_multi,
@@ -52,19 +61,25 @@ def featurize(
     df = df.withColumn("num_time", seconds_of_day("p_time"))
     df = df.withColumn("uri_entropy", string_entropy("fulluri"))
 
-    agent_counts = df.groupBy("useragent").agg(F.count(F.lit(1)).alias("agent_count"))
+    weight_col = weight_of(df)
+    agent_count = F.sum(weight_col) if weight_col else F.count(F.lit(1))
+    agent_counts = df.groupBy("useragent").agg(agent_count.alias("agent_count"))
     df = df.join(F.broadcast(agent_counts), "useragent", "left").cache()
+    if cached is not None:
+        cached.append(df)
 
     if exact_quantiles:
         cuts = quantile_cuts_multi(
             df,
             {"num_time": DECILES, "uri_entropy": QUINTILES, "agent_count": QUINTILES},
+            weight_col=weight_col,
         )
         time_cuts = cuts["num_time"]
         entropy_cuts, agent_cuts = cuts["uri_entropy"], cuts["agent_count"]
     else:
         cuts = approx_quantile_cuts_multi(
-            df, ["num_time", "uri_entropy", "agent_count"], DECILES
+            df, ["num_time", "uri_entropy", "agent_count"], DECILES,
+            weight_col=weight_col,
         )
         time_cuts = cuts["num_time"]
         entropy_cuts = cuts["uri_entropy"][1::2]
@@ -101,14 +116,13 @@ def run(
     max_count_per_word: int | None = 10_000,
     exact_quantiles: bool = True,
 ) -> SuspiciousConnectsResult:
-    df = null_filter(df).withColumn(FEEDBACK_FLAG, F.lit(False))
-    if feedback is not None:
-        fb = oversample(severity_filter(feedback, "uri_sev"), dup_factor).withColumn(
-            FEEDBACK_FLAG, F.lit(True)
-        )
-        df = df.unionByName(conform_feedback(fb, df))
+    df = training_union(null_filter(df), feedback, "uri_sev", dup_factor)
 
-    featurized = featurize(df, top_domains or [], exact_quantiles=exact_quantiles).cache()
+    cached: list[DataFrame] = []
+    featurized = featurize(
+        df, top_domains or [], exact_quantiles=exact_quantiles, cached=cached
+    ).cache()
+    cached.append(featurized)
     return train_and_score(
         featurized,
         doc_col="clientip",
@@ -120,4 +134,5 @@ def run(
         seed=seed,
         max_iter=max_iter,
         max_count_per_word=max_count_per_word,
+        cached=cached,
     )

@@ -48,16 +48,21 @@ def normalize_topic_mix(weights: list[float]) -> list[float]:
     return [w / s for w in weights]
 
 
-def corpus_counts(df: DataFrame, doc_col: str, word_col: str) -> DataFrame:
+def corpus_counts(
+    df: DataFrame, doc_col: str, word_col: str, weight_col: str | None = None
+) -> DataFrame:
     """(doc, word) → count — the core corpus aggregation (A1).
 
     Reference: RDD reduceByKey (netflow/FlowPreLDA.scala:131-139). groupBy
     gets Catalyst's partial+final hash aggregate (map-side combine) for free.
+    ``weight_col`` names an integer row multiplicity: count is then the sum
+    of the weights, as if each row appeared ``weight`` times.
     """
+    weight = [F.col(weight_col).cast("long").alias("__w")] if weight_col else []
     return (
-        df.select(F.col(doc_col).alias("doc"), F.col(word_col).alias("word"))
+        df.select(F.col(doc_col).alias("doc"), F.col(word_col).alias("word"), *weight)
         .groupBy("doc", "word")
-        .agg(F.count(F.lit(1)).alias("count"))
+        .agg((F.sum("__w") if weight_col else F.count(F.lit(1))).alias("count"))
     )
 
 
@@ -98,7 +103,7 @@ def fit_topic_model(
 
     from pyspark.ml.feature import CountVectorizer
 
-    counts = counts.cache()
+    pinned = counts.cache()
     spark = counts.sparkSession
 
     if max_count_per_word is not None:
@@ -173,7 +178,7 @@ def fit_topic_model(
     # doubles as the doc tally the scorer's broadcast decision needs
     n_docs = doc_topic_mix.count()
     docs.unpersist()
-    counts.unpersist()
+    pinned.unpersist()
     return TopicModel(doc_topic_mix, word_probs, topic_count, vocabulary, n_docs)
 
 

@@ -1,10 +1,12 @@
-"""Analyst-feedback ingestion and oversampling.
+"""Analyst-feedback ingestion.
 
 Reference reads the TSV on the driver with scala.io.Source and replicates
 confirmed-benign (severity 3) rows duplicationFactor times via flatMap
 (netflow/FlowPreLDA.scala:73-99, dns/DNSPreLDA.scala:69-85,
-proxy/ProxyFeedback.scala:53-67). Here: a distributed CSV read and an
-explode(array_repeat(...)) — no driver materialization, no Python loop.
+proxy/ProxyFeedback.scala:53-67). Here: a distributed CSV read; the
+pipelines keep each feedback row once and weight it ×duplicationFactor
+(``pipelines.common.training_union``). ``oversample`` builds the physical
+copies for callers that need real rows.
 """
 
 from __future__ import annotations

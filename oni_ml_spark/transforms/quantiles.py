@@ -42,10 +42,12 @@ def _cdf_table(
     key_cols: list[str] | None = None,
     cast_double: bool = True,
     num_buckets: int | None = None,
+    weight_col: str | None = None,
 ) -> DataFrame:
     """THE prefix-sum CDF core — the single home (r7 verdict item 3) for
     every exact distinct-value CDF in the package: the global ``ecdf``
-    family, ``grouped_quantile_cuts``/``grouped_quantile_cont_cuts``, and
+    family, ``grouped_quantile_cuts``/``grouped_quantile_cont_cuts``,
+    ``quantile_cuts_multi`` (keyed by column name), and
     ``percentile_rank``'s grouped path all read from this table.
 
     DataFrame[*key_cols, value, cnt, cdf, __prev, __total, __lo, __hi]:
@@ -62,6 +64,11 @@ def _cdf_table(
     (exact for every orderable type, for equi-join-back consumers — only
     supported with keys, because the global path's bucket boundaries come
     from a numeric percentile sketch).
+
+    ``weight_col`` names an integer multiplicity per row: ``cnt`` becomes
+    the sum of the weights instead of the row count, so every CDF, total
+    and rank interval equals the unweighted table over the rows physically
+    copied ``weight`` times — without building the copies.
 
     Plan shape: with keys — one (keys, value) hash aggregate (the only
     full-data shuffle, map-side combinable) + ONE window partitioned by
@@ -89,11 +96,12 @@ def _cdf_table(
             "path buckets by a numeric percentile sketch)"
         )
     v = F.col(value_col).cast("double") if cast_double else F.col(value_col)
+    weight = [F.col(weight_col).cast("long").alias("__w")] if weight_col else []
     counts = (
-        df.select(*[F.col(k) for k in keys], v.alias("value"))
+        df.select(*[F.col(k) for k in keys], v.alias("value"), *weight)
         .where(F.col("value").isNotNull())
         .groupBy(*keys, "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        .agg((F.sum("__w") if weight_col else F.count(F.lit(1))).alias("cnt"))
     )
     if keys:
         w = (
@@ -457,91 +465,45 @@ def quantile_cuts_multi(
     df: DataFrame,
     probs_by_col: dict[str, list[float]],
     positive_only: set[str] | frozenset[str] = frozenset(),
-    num_buckets: int | None = None,
+    weight_col: str | None = None,
 ) -> dict[str, list[float]]:
-    """EXACT discrete quantile cutoffs for SEVERAL columns in ONE Spark job.
+    """EXACT discrete quantile cutoffs for SEVERAL columns in one plan.
 
     The reference ran one full-scan quantile job per featurization column
     (five per day for dns, dns/DNSWordCreation.scala:78-122). Here all
-    columns melt into one (col, value) frame; a single plan aggregates
-    distinct-value counts for every column, derives per-column bucket
-    boundaries from an in-plan grouped ``percentile_approx`` (broadcast, not
-    collected), computes per-(col, bucket) prefix sums, and picks cutoffs by
-    interval cover — the only action is the final |cols|·|probs|-row collect.
+    columns melt into one (col, value) frame that reads the keyed
+    ``_cdf_table`` core with the column name as key: one (col, value) hash
+    aggregate, one prefix-sum window partitioned by column, and cutoffs by
+    interval cover — the only action is the final |cols|·|probs|-row
+    collect. Measured on a warm local session: 3 Spark jobs over an
+    already-cached input (AQE runs each of the two shuffle map stages as
+    its own job, then the collect); 4 in a warm dns analysis, where this
+    is the first action over featurize's freshly cached frame. Each
+    window task sees one column's distinct values, which stays bounded for
+    featurization columns (times of day, packet sizes); raw
+    high-cardinality columns belong on ``approx_quantile_cuts_multi``.
 
     ``positive_only`` columns replicate the reference's >0 predicate before
     the quantile (P5, dns/DNSWordCreation.scala:98-101). Semantics per
     column are identical to ``quantile_cuts`` (least x with P(X<=x) >= t;
-    empty/all-filtered input → +inf).
+    empty/all-filtered input → +inf). ``weight_col`` names an integer row
+    multiplicity (see ``_cdf_table``): the cuts equal those over the rows
+    copied ``weight`` times.
     """
-    spark = df.sparkSession
     cols = list(probs_by_col)
-    b = num_buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     def _val(c: str):
         v = F.col(c).cast("double")
         return F.when(v > 0, v) if c in positive_only else v
 
+    weight = [F.col(weight_col)] if weight_col else []
     melted = df.select(
+        *weight,
         F.explode(
             F.array(*[F.struct(F.lit(c).alias("col"), _val(c).alias("value")) for c in cols])
-        ).alias("cv")
-    ).select("cv.col", "cv.value").where(F.col("value").isNotNull())
-    counts = melted.groupBy("col", "value").agg(F.count(F.lit(1)).alias("cnt"))
-
-    # per-column boundary sketch, in-plan (balance only — correctness never
-    # depends on the boundary values); ≤ |cols| rows, broadcast back
-    if b > 1:
-        probs_b = F.array(*[F.lit(i / b) for i in range(1, b)])
-        acc = max(100, 4 * b)
-        bnd = counts.groupBy("col").agg(
-            F.array_sort(
-                F.array_distinct(
-                    F.coalesce(
-                        F.percentile_approx("value", probs_b, F.lit(acc)),
-                        F.array().cast("array<double>"),
-                    )
-                )
-            ).alias("__bs")
-        )
-        bucketed = (
-            counts.join(F.broadcast(bnd), "col")
-            .withColumn(
-                "bucket",
-                F.size(F.filter(F.col("__bs"), lambda x: x < F.col("value"))).cast("int"),
-            )
-            .drop("__bs")
-        )
-    else:
-        bucketed = counts.withColumn("bucket", F.lit(0))
-
-    # cross-bucket offsets + per-column totals from the ≤ |cols|·b subtotal
-    # rows — tiny windows partitioned by col, broadcast back
-    subtot = bucketed.groupBy("col", "bucket").agg(F.sum("cnt").alias("__s"))
-    w_off = (
-        Window.partitionBy("col").orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = Window.partitionBy("col").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = subtot.select(
-        "col", "bucket",
-        F.coalesce(F.sum("__s").over(w_off), F.lit(0)).alias("__offset"),
-        F.sum("__s").over(w_tot).alias("__total"),
-    )
-
-    w = (
-        Window.partitionBy("col", "bucket")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("cnt").over(w) + F.col("__offset")
-    cdf = bucketed.join(F.broadcast(offsets), ["col", "bucket"]).select(
-        "col", "value", "cnt",
-        (cum / F.col("__total").cast("double")).alias("cdf"),
-        ((cum - F.col("cnt")) / F.col("__total").cast("double")).alias("__prev"),
-    )
+        ).alias("cv"),
+    ).select(*weight, "cv.col", "cv.value")
+    cdf = _cdf_table(melted, "value", key_cols=["col"], weight_col=weight_col)
 
     # interval cover: value x is the cutoff for probs in (cdf(prev), cdf(x)]
     probs_of = None
@@ -649,6 +611,7 @@ def approx_quantile_cuts_multi(
     probs: list[float],
     rel_err: float = 0.001,
     positive_only: set[str] | frozenset[str] = frozenset(),
+    weight_col: str | None = None,
 ) -> dict[str, list[float]]:
     """One-pass approximate quantiles for SEVERAL columns — one Spark action
     total, vs one per column (the reference ran five separate full-scan
@@ -656,13 +619,23 @@ def approx_quantile_cuts_multi(
 
     ``positive_only`` columns apply the reference's >0 predicate (P5) by
     masking non-positive values to null INSIDE the one pass — approxQuantile
-    ignores nulls, so a per-column pre-filter job is never needed."""
+    ignores nulls, so a per-column pre-filter job is never needed.
+
+    ``weight_col`` names an integer row multiplicity. The Greenwald-Khanna
+    sketch takes no weights, so each row is repeated ``weight`` times
+    inside the same pass — after projecting to the numeric cut columns, so
+    the copies are a few doubles wide and never materialize as a frame."""
 
     def _val(c: str):
         v = F.col(c).cast("double")
         return (F.when(v > 0, v) if c in positive_only else v).alias(c)
 
-    casted = df.select(*[_val(c) for c in cols])
+    casted = df.select(*[_val(c) for c in cols], *([F.col(weight_col)] if weight_col else []))
+    if weight_col:
+        casted = casted.select(
+            *cols,
+            F.explode(F.array_repeat(F.lit(0), F.col(weight_col).cast("int"))).alias("__dup"),
+        )
     got = casted.approxQuantile(cols, [min(p, 1.0) for p in probs], rel_err)
     return {
         c: (vals if vals else [float("inf")] * len(probs))

@@ -43,10 +43,27 @@ def test_flow_cli_end_to_end(spark, tmp_path):
     assert all("," in ln and "\t" not in ln for ln in lines)
 
 
+def test_cli_releases_what_the_analysis_cached(spark, tmp_path):
+    """cli.main unpersists every frame its pipeline cached, so a later
+    analysis in the same session is never served this one's (possibly
+    stale) frames: the persistent-RDD count is back where it started."""
+    inp = str(tmp_path / "flow.parquet")
+    _flow_fixture(spark, n_common=200, n_rare=2).write.parquet(inp)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    rc = main(
+        ["--analysis", "flow", "--input", inp, "--output", str(tmp_path / "out"),
+         "--ldatopiccount", "3", "--lda-maxiter", "3", "--maxresults", "5"]
+    )
+    assert rc == 0
+    assert jsc.getPersistentRDDs().size() == before
+
+
 @pytest.mark.slow  # r13 budget: feedback oversampling covered by test_pipelines TestFeedbackLoop; flow CLI e2e by test_flow_cli_end_to_end
 def test_flow_cli_with_feedback(spark, tmp_path):
     """The --feedback path end-to-end: feedback TSV in the reference layout
-    is mapped onto raw columns, oversampled, and trains without error."""
+    is mapped onto raw columns, weighted ×dupfactor, and trains without
+    error."""
     inp = str(tmp_path / "flow_fb.parquet")
     out = str(tmp_path / "out_fb")
     _flow_fixture(spark, n_common=300, n_rare=2).write.parquet(inp)

@@ -4,7 +4,7 @@ seed-dependent, so we assert structure and ranking behavior, not values):
 - topic mixes are simplexes (sum to 1), scores in [0, 1]
 - planted-anomaly ranking: records with rare (doc, word) combinations score
   below records with common ones
-- feedback oversampling makes confirmed-benign patterns boring (score rises)
+- weighted feedback makes confirmed-benign patterns boring (score rises)
 - flow/dns/proxy pipelines run end-to-end on synthetic network fixtures
 """
 
@@ -207,7 +207,7 @@ class TestProxyPipeline:
 
 class TestFeedbackLoop:
     def test_feedback_raises_score_of_confirmed_benign(self, spark):
-        """Oversampled severity-3 feedback must make its pattern more
+        """Weighted severity-3 feedback must make its pattern more
         'boring' (higher probability) than the same pattern unseen."""
         base = _flow_fixture(spark, n_common=1000, n_rare=10)
         no_fb = flow_pipe.run(base, topic_count=5, top_k=-1, max_iter=5, seed=42)

@@ -69,9 +69,9 @@ def test_bin_expr_matches_python_oracle(spark, values, raw_cuts):
 
 
 def test_quantile_cuts_multi_matches_per_column(spark):
-    """The 3-jobs-total multi-column exact path must produce IDENTICAL cuts
-    to the per-column exact path, including the positive-only (P5) filter
-    and the empty-input +inf edge."""
+    """The multi-column exact path (one plan, 3 jobs over a cached input)
+    must produce IDENTICAL cuts to the per-column exact path, including the
+    positive-only (P5) filter and the empty-input +inf edge."""
     from pyspark.sql import functions as F
 
     from oni_ml_spark.io import load_table
