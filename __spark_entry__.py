@@ -20,7 +20,7 @@ from oni_ml_spark.entry_queries import ORACLES, QUERIES, flagship
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: end-to-end suspicious-connects (featurize → in-cluster LDA →
+    """Flagship: end-to-end suspicious-connects (featurize → batch LDA →
     broadcast scoring → bottom-K) on the sf0.001 events table."""
     return flagship(spark, "/root/testdata/sf0.001")
 

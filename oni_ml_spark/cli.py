@@ -14,7 +14,24 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import math
 import sys
+
+
+def _positive_int(s: str) -> int:
+    # LDA arguments fail at parse time, not after minutes of featurization
+    # (k = 0 would divide by zero in η = 1/k)
+    v = int(s)
+    if v < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {v}")
+    return v
+
+
+def _positive_float(s: str) -> float:
+    v = float(s)
+    if not (math.isfinite(v) and v > 0):
+        raise argparse.ArgumentTypeError(f"must be a finite number > 0, got {s}")
+    return v
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -32,11 +49,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--dupfactor", type=int, default=1000,
                    help="weight of each severity-3 feedback row in training "
                         "(ml_ops.sh:49)")
-    p.add_argument("--ldatopiccount", type=int, default=20,
+    p.add_argument("--ldatopiccount", type=_positive_int, default=20,
                    help="LDA topic count (ml_ops.sh:67)")
-    p.add_argument("--lda-alpha", type=float, default=2.5,
+    p.add_argument("--lda-alpha", type=_positive_float, default=2.5,
                    help="doc concentration (OniLDACWrapper.scala:83-84)")
-    p.add_argument("--lda-maxiter", type=int, default=20)
+    p.add_argument("--lda-maxiter", type=_positive_int, default=20,
+                   help="LDA variational-EM passes")
     p.add_argument("--seed", type=int, default=0)
     p.add_argument("--threshold", type=float, default=1.0,
                    help="max score to report (P4 predicate)")
@@ -53,18 +71,9 @@ def build_parser() -> argparse.ArgumentParser:
             )
         return s
 
-    def _non_negative(s: str) -> int:
-        v = int(s)
-        if v < 0:
-            raise argparse.ArgumentTypeError(f"must be >= 0, got {v}")
-        return v
-
     p.add_argument("--delimiter", default="\t", type=_one_char,
                    help="output field delimiter, one character "
                         "(SuspiciousConnectsArgumentParser.scala:107)")
-    p.add_argument("--max-count-per-word", type=_non_negative, default=10_000,
-                   help="cap per-(doc,word) corpus counts before LDA; "
-                        "0 = uncapped (adversarial hot-doc guard)")
     p.add_argument("--audit", action="store_true",
                    help="print per-stage row counts (input / suspicious) to "
                         "stderr as one JSON line — measured via df.observe "
@@ -108,7 +117,6 @@ def main(argv: list[str] | None = None) -> int:
         seed=args.seed,
         max_iter=args.lda_maxiter,
         exact_quantiles=not args.approx_quantiles,
-        max_count_per_word=args.max_count_per_word or None,
     )
 
     if args.analysis == "flow":

@@ -4,7 +4,7 @@ Estimator/Transformer components.
 Lets users compose the engine with the standard MLlib pipeline API:
 
     pipe = Pipeline(stages=[SuspiciousConnectsEstimator(doc_col=..., word_col=...)])
-    model = pipe.fit(featurized_df)         # trains in-cluster LDA
+    model = pipe.fit(featurized_df)         # trains the batch LDA
     scored = model.transform(other_df)      # broadcast-join scoring
 
 The estimator consumes a featurized DataFrame (doc + word columns — build

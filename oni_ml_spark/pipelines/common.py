@@ -69,7 +69,6 @@ def train_and_score(
     top_k: int = -1,
     drop_unseen_docs: bool = False,
     extra_corpus: DataFrame | None = None,
-    max_count_per_word: int | None = 10_000,
     cached: list[DataFrame] | None = None,
 ) -> SuspiciousConnectsResult:
     """Train LDA on the full featurized corpus (feedback rows included when
@@ -92,7 +91,6 @@ def train_and_score(
         doc_concentration=doc_concentration,
         seed=seed,
         max_iter=max_iter,
-        max_count_per_word=max_count_per_word,
     )
 
     scored = score_records(

@@ -126,7 +126,6 @@ def run(
     seed: int = 0,
     max_iter: int = 10,
     exact_quantiles: bool = True,
-    max_count_per_word: int | None = 10_000,
 ) -> SuspiciousConnectsResult:
     df = training_union(null_filter(df), feedback, "dns_sev", dup_factor)
 
@@ -145,6 +144,5 @@ def run(
         top_k=top_k,
         seed=seed,
         max_iter=max_iter,
-        max_count_per_word=max_count_per_word,
         cached=cached,
     )

@@ -4,7 +4,7 @@ The reference's flagship question — "what are today's K most suspicious
 connections?" (README.md:103-124) — applied to the driver's synthetic
 events stream: document = user_id, word = event_type × value-decile ×
 hour-of-day-bin. Same dataflow as the flow/dns/proxy pipelines (featurize →
-corpus → in-cluster LDA → broadcast scoring → bottom-K), demonstrating the
+corpus → batch LDA → broadcast scoring → bottom-K), demonstrating the
 engine end-to-end on a schema the oracle tables provide.
 """
 
@@ -64,7 +64,6 @@ def run(
     top_k: int = 100,
     seed: int = 0,
     max_iter: int = 10,
-    max_count_per_word: int | None = 10_000,
     exact_quantiles: bool = True,
 ) -> SuspiciousConnectsResult:
     cached: list[DataFrame] = []
@@ -79,6 +78,5 @@ def run(
         top_k=top_k,
         seed=seed,
         max_iter=max_iter,
-        max_count_per_word=max_count_per_word,
         cached=cached,
     )

@@ -3,8 +3,8 @@
 Reference dataflow: netflow/FlowSuspiciousConnects.scala:12-27 →
 FlowPreLDA → OniLDACWrapper → FlowPostLDA (SURVEY.md §3.1). Re-expressed:
 one featurization over raw ∪ weighted feedback, cached, feeding both
-training corpus (both endpoints) and scoring; LDA in-cluster; per-endpoint
-scores via broadcast joins; record score = least(src, dst).
+training corpus (both endpoints) and scoring; LDA on the collected corpus;
+per-endpoint scores via broadcast joins; record score = least(src, dst).
 """
 
 from __future__ import annotations
@@ -101,7 +101,6 @@ def run(
     seed: int = 0,
     max_iter: int = 10,
     exact_quantiles: bool = True,
-    max_count_per_word: int | None = 10_000,
 ) -> SuspiciousConnectsResult:
     df = training_union(valid_time_filter(df), feedback, "sev", dup_factor)
 
@@ -129,8 +128,7 @@ def run(
     )
     model = fit_topic_model(counts, topic_count=topic_count,
                             doc_concentration=doc_concentration,
-                            seed=seed, max_iter=max_iter,
-                            max_count_per_word=max_count_per_word)
+                            seed=seed, max_iter=max_iter)
 
     to_score = records_to_score(featurized)
     # Flow quirk preserved: inner join drops IPs unseen in training

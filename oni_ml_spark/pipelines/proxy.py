@@ -113,7 +113,6 @@ def run(
     top_k: int = -1,
     seed: int = 0,
     max_iter: int = 10,
-    max_count_per_word: int | None = 10_000,
     exact_quantiles: bool = True,
 ) -> SuspiciousConnectsResult:
     df = training_union(null_filter(df), feedback, "uri_sev", dup_factor)
@@ -133,6 +132,5 @@ def run(
         top_k=top_k,
         seed=seed,
         max_iter=max_iter,
-        max_count_per_word=max_count_per_word,
         cached=cached,
     )

@@ -1,12 +1,14 @@
-"""Topic modeling: corpus aggregation → in-cluster LDA → model tables.
+"""Topic modeling: corpus aggregation → batch variational-EM LDA → model tables.
 
-Replaces the reference's entire out-of-band LDA machinery — driver-side
-corpus serialization to LDA-C text, ssh/scp distribution, and an external
-MPI C program (OniLDACWrapper.scala:63-84, .gitmodules:1-3) — with
-pyspark.ml.clustering.LDA. Nothing but the k×V topic matrix ever reaches
-the driver; corpus and per-doc topic mixes stay distributed
-(SURVEY.md §7.4.9: the driver-collect pattern is the reference's
-scalability cliff).
+The reference fits LDA-C's batch variational EM over the (doc, word, count)
+corpus collected to one machine, serialized to LDA-C text and shipped over
+ssh/scp to an external MPI program (OniLDACWrapper.scala:40-60, 63-84). Here
+the aggregated corpus reaches the driver as ONE Arrow collect, its doc and
+word columns dictionary-encoded (no Python object per nonzero), and the same
+algorithm — batch variational EM (Blei et al. 2003, in the batch form of
+Hoffman et al. 2010) — runs as a vectorized numpy kernel. A distributed fit
+costs a Spark job per iteration; at one day's corpus size (10³-10⁵ docs)
+job count, not rows, sets its time. SCALE.md gives the driver's bound.
 
 Model tables exposed (the reference's gamma/beta maps, OniLDACWrapper.scala:91-144):
 - doc_topic_mix:  DataFrame[doc string, topic_mix array<double>] (rows sum to 1)
@@ -18,9 +20,17 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.ml.clustering import LDA
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: nonzeros per E-step chunk: bounds the nnz×k temporaries (~10 MB each at
+#: k=20) while keeping each numpy call long enough to amortize its overhead
+CHUNK_NNZ = 1 << 16
+#: a doc's E-step stops once the mean |Δγ| over its topics falls below this,
+#: or after MAX_INNER_ITER updates (LDA-C's var_max_iter role)
+GAMMA_TOL = 1e-3
+MAX_INNER_ITER = 100
 
 
 def normalize_log_probs(log_probs: list[float]) -> list[float]:
@@ -28,9 +38,9 @@ def normalize_log_probs(log_probs: list[float]) -> list[float]:
     normalization, OniLDACWrapper.scala:121-130). Golden:
     [1..5] → [0.0117, 0.0317, 0.0861, 0.2341, 0.6364] (OniLDACWrapperTest:11-23).
 
-    Kept as an explicit utility: `ml.LDA` makes it unnecessary in the main
-    path, but any externally-trained topic matrix imported in log space goes
-    through this."""
+    Kept as an explicit utility: the kernel's λ is normalized directly, but
+    any externally-trained topic matrix imported in log space goes through
+    this."""
     import math
 
     exps = [math.exp(x) for x in log_probs]
@@ -66,15 +76,133 @@ def corpus_counts(
     )
 
 
+def digamma(x) -> np.ndarray:
+    """ψ(x) elementwise for x > 0 (numpy has none): the recurrence
+    ψ(x) = ψ(x+n) − Σ_{i<n} 1/(x+i) lifts every argument to ≥ 6 (one n for
+    the whole array, so no masked updates), where the asymptotic series
+    through x⁻¹⁴ is accurate to ~2e-13."""
+    x = np.array(x, dtype=np.float64)
+    out = np.zeros_like(x)
+    for _ in range(int(np.ceil(6.0 - x.min())) if x.size else 0):
+        out -= 1.0 / x
+        x += 1.0
+    z = 1.0 / (x * x)
+    series = z * (1 / 12 - z * (1 / 120 - z * (1 / 252 - z * (
+        1 / 240 - z * (1 / 132 - z * (691 / 32760 - z / 12))))))
+    return out + np.log(x) - 0.5 / x - series
+
+
+def _exp_elog(p: np.ndarray) -> np.ndarray:
+    """exp(E[log θ]) of Dirichlet rows: exp(ψ(p) − ψ(Σ p))."""
+    return np.exp(digamma(p) - digamma(p.sum(axis=1))[:, None])
+
+
+def _infer_chunk(ids, cts, lengths, exp_elog_beta, gamma, alpha, sstats) -> None:
+    """Variational inference for one chunk of docs, vectorized over them.
+
+    ``ids``/``cts`` are the chunk's nonzeros grouped by doc, ``lengths`` the
+    nonzeros per doc; ``gamma`` (a view, updated in place) holds the warm
+    start. Each doc iterates γ ← α + exp(E[log θ]) · Σ_w n_w β_w / φnorm_w
+    until its own mean |Δγ| < GAMMA_TOL, then drops out of the active set;
+    the final γ's expected counts are added to ``sstats`` (k×V). Per-nonzero
+    arrays are topic-major (k×nnz), so every reduction runs over contiguous
+    memory."""
+    beta_nz = exp_elog_beta[:, ids]  # fixed for this pass
+    active = np.arange(len(lengths))
+    a_beta, a_cts, a_len = beta_nz, cts, lengths
+    for _ in range(MAX_INNER_ITER):
+        g = gamma[active]
+        theta = _exp_elog(g)
+        phinorm = np.einsum("ij,ij->j", np.repeat(theta.T, a_len, axis=1), a_beta) + 1e-100
+        seg = np.concatenate(([0], np.cumsum(a_len[:-1])))
+        new = alpha + theta * np.add.reduceat(a_beta * (a_cts / phinorm), seg, axis=1).T
+        gamma[active] = new
+        done = np.abs(new - g).mean(axis=1) < GAMMA_TOL
+        if done.all():
+            break
+        if done.any():
+            keep = ~done
+            nz_keep = np.repeat(keep, a_len)
+            active, a_len = active[keep], a_len[keep]
+            a_beta, a_cts = a_beta[:, nz_keep], a_cts[nz_keep]
+    theta_nz = np.repeat(_exp_elog(gamma).T, lengths, axis=1)
+    contrib = theta_nz * (cts / (np.einsum("ij,ij->j", theta_nz, beta_nz) + 1e-100))
+    for t in range(sstats.shape[0]):
+        sstats[t] += np.bincount(ids, weights=contrib[t], minlength=sstats.shape[1])
+
+
+def e_step(doc, word, cnt, exp_elog_beta, gamma, alpha) -> np.ndarray:
+    """One E-step over the corpus, updating ``gamma`` (n_docs×k) in place.
+
+    ``doc``/``word``/``cnt`` are the nonzeros sorted by doc, every doc
+    0..n_docs-1 owning at least one. Docs are processed in chunks of about
+    CHUNK_NNZ nonzeros (a doc larger than that is a chunk of its own).
+    Returns the M-step's sufficient statistics Σ_d n_dw φ_dwt (k×V)."""
+    n_docs = gamma.shape[0]
+    starts = np.searchsorted(doc, np.arange(n_docs + 1))
+    bounds = np.unique(np.concatenate((
+        np.searchsorted(starts[:-1], np.arange(0, len(doc), CHUNK_NNZ)), [n_docs],
+    )))
+    sstats = np.zeros_like(exp_elog_beta)
+    for d0, d1 in zip(bounds[:-1], bounds[1:]):
+        lo, hi = starts[d0], starts[d1]
+        _infer_chunk(word[lo:hi], cnt[lo:hi], np.diff(starts[d0:d1 + 1]),
+                     exp_elog_beta, gamma[d0:d1], alpha, sstats)
+    return sstats
+
+
+def fit_lda(doc, word, cnt, n_docs, n_words, topic_count, alpha, seed, max_iter):
+    """Batch variational EM: ``max_iter`` passes of E-step then
+    λ ← η + sufficient statistics, η = 1/k. λ and γ start from
+    Gamma(100, 1/100) draws; γ is warm-started across passes.
+    Returns (γ n_docs×k, λ k×n_words)."""
+    rng = np.random.default_rng(seed)
+    lam = rng.gamma(100.0, 1.0 / 100.0, (topic_count, n_words))
+    gamma = rng.gamma(100.0, 1.0 / 100.0, (n_docs, topic_count))
+    for _ in range(max_iter):
+        exp_elog_beta = _exp_elog(lam)
+        sstats = e_step(doc, word, cnt, exp_elog_beta, gamma, alpha)
+        lam = 1.0 / topic_count + sstats * exp_elog_beta
+    return gamma, lam
+
+
+def _sorted_codes(column):
+    """Dictionary-encode an Arrow column: (its distinct values sorted, null
+    last; the int32 position of each row's value among them)."""
+    import pyarrow.compute as pc
+
+    enc = pc.dictionary_encode(column, null_encoding="encode").combine_chunks()
+    order = pc.array_sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty(len(order), dtype=np.int32)
+    rank[order] = np.arange(len(order), dtype=np.int32)
+    return enc.dictionary.take(order), rank[enc.indices.to_numpy()]
+
+
+def _model_table(spark, key, key_type, values, probs, col):
+    """DataFrame[key, col array<double>] from a key column and an n×k
+    matrix, built through Arrow on the driver."""
+    import pyarrow as pa
+    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+
+    k = probs.shape[1]
+    offsets = pa.array(np.arange(0, probs.size + 1, k, dtype=np.int32))
+    table = pa.table({
+        key: values,
+        col: pa.ListArray.from_arrays(offsets, pa.array(probs.ravel())),
+    })
+    schema = StructType([StructField(key, key_type), StructField(col, ArrayType(DoubleType()))])
+    return spark.createDataFrame(table, schema)
+
+
 @dataclass
 class TopicModel:
     doc_topic_mix: DataFrame  # doc, topic_mix array<double>
     word_probs: DataFrame     # word, word_given_topic array<double>
     topic_count: int
     vocabulary: list[str]
-    #: |docs|, captured from the cache-materializing count in fit_topic_model
-    #: so scoring's size-adaptive broadcast decision is free (None → the
-    #: scorer counts lazily once)
+    #: |docs|, known on the driver once fit_topic_model has collected the
+    #: corpus, so scoring's size-adaptive broadcast decision is free (None →
+    #: the scorer counts lazily once)
     n_docs: int | None = None
 
 
@@ -84,102 +212,45 @@ def fit_topic_model(
     doc_concentration: float = 2.5,
     seed: int = 0,
     max_iter: int = 20,
-    max_count_per_word: int | None = 10_000,
 ) -> TopicModel:
-    """Fit LDA over a (doc, word, count) corpus, all in-cluster.
+    """Fit LDA over a (doc, word, count) corpus on the driver.
 
-    Vocabulary (distinct words) is collected to the driver for indexing —
-    bounded by design: words are crosses of small categorical alphabets
-    (~10-bin × 5-bin products, SURVEY.md §7.4.9), so V stays ~1e4-1e5 even at
-    100 TB input. Docs are never collected; per-doc sparse count vectors are
-    assembled executor-side at doc granularity.
+    One Arrow collect brings the aggregated corpus over: per nonzero an
+    int32 doc code, an int32 word code and a float64 count (weighted counts
+    stay real-valued). Docs and vocabulary are sorted and duplicate
+    (doc, word) rows summed, so the model does not depend on how the input
+    was partitioned. The Spark jobs are those of the collect alone,
+    whatever ``max_iter`` (the number of EM passes).
 
     Hyperparameters mirror ml_ops.sh:67 (k=20) and OniLDACWrapper.scala:83-84
-    (α=2.5). Numerical parity with the MPI LDA-C is impossible (seeded
-    randomized algorithms, SURVEY.md §7.4.1) — consumers should test
-    distributional invariants, not values.
+    (α=2.5); η=1/k. Numerical parity with the MPI LDA-C is impossible
+    (seeded randomized initialization, SURVEY.md §7.4.1) — consumers should
+    test distributional invariants, not values.
     """
-    import pandas as pd
-
-    from pyspark.ml.feature import CountVectorizer
-
-    pinned = counts.cache()
     spark = counts.sparkSession
-
-    if max_count_per_word is not None:
-        # adversarial-doc guard (SCALE.md): one IP with 10^8 identical events
-        # would otherwise build a token array of that length below. Capping
-        # the per-(doc,word) count bounds the array at |distinct words| × cap
-        # and barely moves the topic posterior (counts enter LDA sublinearly).
-        # ON BY DEFAULT — every pipeline hits this path unless a caller
-        # explicitly passes max_count_per_word=None for uncapped parity runs.
-        counts = counts.withColumn(
-            "count", F.least(F.col("count"), F.lit(max_count_per_word))
-        )
-
-    # Per-doc sparse count vectors via CountVectorizer — fully JVM-side
-    # (no Python UDF, no driver-side vocabulary join). The token array per
-    # doc is the doc's distinct words repeated by count; its length is the
-    # doc's event count, the same order of magnitude CountVectorizer handles
-    # in any Spark NLP pipeline. Replaces the reference's driver-collected
-    # dictionaries + LDA-C text corpus (OniLDACWrapper.scala:40-60,146-168).
-    tokens = counts.groupBy("doc").agg(
-        F.flatten(
-            F.collect_list(F.array_repeat("word", F.col("count").cast("int")))
-        ).alias("tokens")
+    table = counts.select(
+        "doc", "word", F.col("count").cast("double").alias("count")
+    ).toArrow()
+    docs, doc_codes = _sorted_codes(table.column("doc"))
+    vocab, word_codes = _sorted_codes(table.column("word"))
+    n_docs, n_words = len(docs), len(vocab)
+    keys, inverse = np.unique(
+        doc_codes.astype(np.int64) * n_words + word_codes, return_inverse=True
     )
-    cv = CountVectorizer(inputCol="tokens", outputCol="features", vocabSize=1 << 21, minDF=1.0)
-    cv_model = cv.fit(tokens)
-    vocabulary = list(cv_model.vocabulary)
-    v_size = len(vocabulary)
-    # CACHE the vectorized docs: the online LDA optimizer samples a
-    # mini-batch from this dataset EVERY iteration, and without residency
-    # each iteration re-runs the whole corpus->tokens->CountVectorizer
-    # chain (measured 8x: 13.3s -> 1.7s fit on the sf0.1 flow corpus).
-    # Bounded: one sparse vector per doc. Unpersisted before return.
-    docs = cv_model.transform(tokens).select("doc", "features").cache()
+    cnt = np.bincount(inverse, weights=table.column("count").to_numpy())
+    doc, word = (a.astype(np.int32) for a in np.divmod(keys, max(n_words, 1)))
 
-    lda = LDA(
-        k=topic_count,
-        maxIter=max_iter,
-        seed=seed,
-        docConcentration=[doc_concentration] * topic_count,
-        featuresCol="features",
+    gamma, lam = fit_lda(doc, word, cnt, n_docs, n_words, topic_count,
+                         doc_concentration, seed, max_iter)
+    doc_topic_mix = _model_table(
+        spark, "doc", counts.schema["doc"].dataType, docs,
+        gamma / gamma.sum(axis=1, keepdims=True), "topic_mix",
     )
-    model = lda.fit(docs)
-
-    from pyspark.ml.functions import vector_to_array
-
-    transformed = model.transform(docs)
-    doc_topic_mix = transformed.select(
-        "doc", vector_to_array("topicDistribution").alias("topic_mix")
-    ).cache()
-
-    # topicsMatrix: V x k. NOT normalized for the online optimizer (columns
-    # are expected word-count weights), so normalize each topic column to a
-    # distribution — the reference does the same exp-normalize for beta
-    # (OniLDACWrapper.scala:121-130). The matrix is V*k doubles — the only
-    # model state that transits the driver. Ship it back to the cluster via
-    # Arrow (pandas) columns, not pickled Python rows: at V ~ 10^5-10^6 the
-    # pickle path croaks Python workers; Arrow stays columnar end to end.
-    import numpy as np
-
-    tm = model.topicsMatrix().toArray()  # V x k numpy
-    col_sums = tm.sum(axis=0)
-    col_sums[col_sums == 0.0] = 1.0
-    tm = tm / col_sums
-    pdf = pd.DataFrame({"word": vocabulary})
-    for t in range(topic_count):
-        pdf[f"p{t}"] = tm[:, t]
-    word_probs = spark.createDataFrame(pdf).select(
-        "word", F.array(*[f"p{t}" for t in range(topic_count)]).alias("word_given_topic")
+    word_probs = _model_table(
+        spark, "word", counts.schema["word"].dataType, vocab,
+        (lam / lam.sum(axis=1, keepdims=True)).T, "word_given_topic",
     )
-    # materialize the cache before counts/docs are unpersisted; the count
-    # doubles as the doc tally the scorer's broadcast decision needs
-    n_docs = doc_topic_mix.count()
-    docs.unpersist()
-    pinned.unpersist()
-    return TopicModel(doc_topic_mix, word_probs, topic_count, vocabulary, n_docs)
+    return TopicModel(doc_topic_mix, word_probs, topic_count, vocab.to_pylist(), n_docs)
 
 
 def save_model(model: TopicModel, path: str) -> None:

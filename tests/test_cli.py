@@ -20,6 +20,20 @@ def test_parser_defaults():
     assert args.maxresults == -1
 
 
+@pytest.mark.parametrize("bad", [
+    ["--ldatopiccount", "0"], ["--ldatopiccount", "-3"],
+    ["--lda-maxiter", "0"],
+    ["--lda-alpha", "0"], ["--lda-alpha", "-1.5"], ["--lda-alpha", "nan"],
+])
+def test_parser_rejects_bad_lda_arguments(bad):
+    # rejected at parse time, before any Spark work (k = 0 would divide by
+    # zero in the topic-word prior η = 1/k)
+    with pytest.raises(SystemExit):
+        build_parser().parse_args(
+            ["--analysis", "flow", "--input", "/x", "--output", "/y", *bad]
+        )
+
+
 def test_flow_cli_end_to_end(spark, tmp_path):
     inp = str(tmp_path / "flow.parquet")
     out = str(tmp_path / "out")
