@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 from oni_ml_spark.topics import TopicModel
 
@@ -128,8 +129,14 @@ def most_suspicious(
     count + RDD takeOrdered + re-parallelize + sortBy chain
     (dns/DNSPostLDA.scala:51-69, utilities/DataFrameUtils.scala:21-38).
     top_k = -1 means "no limit" (DataFrameUtils.scala:22 semantics).
+
+    Every repeat of a (doc, word) pair gets the same score, so ties are
+    broken on the frame's other columns (maps cannot be ordered): which
+    tied rows make K does not depend on partitioning.
     """
-    out = df.filter(F.col(score_col) <= threshold).orderBy(score_col)
+    ties = [f.name for f in df.schema.fields
+            if f.name != score_col and not isinstance(f.dataType, MapType)]
+    out = df.filter(F.col(score_col) <= threshold).orderBy(score_col, *ties)
     if top_k is not None and top_k >= 0:
         out = out.limit(top_k)
     return out

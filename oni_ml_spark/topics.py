@@ -159,6 +159,8 @@ def fit_lda(doc, word, cnt, n_docs, n_words, topic_count, alpha, seed, max_iter)
     rng = np.random.default_rng(seed)
     lam = rng.gamma(100.0, 1.0 / 100.0, (topic_count, n_words))
     gamma = rng.gamma(100.0, 1.0 / 100.0, (n_docs, topic_count))
+    if not len(cnt):  # an empty day: nothing to infer, and ψ(0) divides by zero
+        return gamma, lam
     for _ in range(max_iter):
         exp_elog_beta = _exp_elog(lam)
         sstats = e_step(doc, word, cnt, exp_elog_beta, gamma, alpha)

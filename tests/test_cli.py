@@ -8,7 +8,7 @@ import glob
 import pytest
 
 from oni_ml_spark.cli import build_parser, main
-from tests.test_pipelines import _flow_fixture
+from tests.test_pipelines import _dns_fixture, _flow_fixture
 
 
 def test_parser_defaults():
@@ -71,6 +71,20 @@ def test_cli_releases_what_the_analysis_cached(spark, tmp_path):
     )
     assert rc == 0
     assert jsc.getPersistentRDDs().size() == before
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+def test_cli_empty_dns_day(spark, tmp_path):
+    """A day with no records exits 0 with an empty TSV, without the
+    divide-by-zero ψ(0) of an E-step over nothing."""
+    inp = str(tmp_path / "dns.parquet")
+    out = tmp_path / "out"
+    _dns_fixture(spark, n_common=10, n_rare=1).limit(0).write.parquet(inp)
+    rc = main(["--analysis", "dns", "--input", inp, "--output", str(out),
+               "--ldatopiccount", "3", "--lda-maxiter", "3", "--maxresults", "5"])
+    assert rc == 0
+    assert (out / "_SUCCESS").exists()
+    assert all(p.read_text() == "" for p in out.glob("part-*"))
 
 
 @pytest.mark.slow  # r13 budget: feedback oversampling covered by test_pipelines TestFeedbackLoop; flow CLI e2e by test_flow_cli_end_to_end

@@ -262,3 +262,35 @@ class TestEventsPipeline:
         a = [(r["event_id"], round(r["score"], 9)) for r in r1.suspicious.collect()]
         b = [(r["event_id"], round(r["score"], 9)) for r in r2.suspicious.collect()]
         assert a == b
+
+
+def test_bottom_k_ties_do_not_depend_on_partitioning(spark):
+    """most_suspicious breaks score ties on the other columns: with 80 rows
+    tied at the lowest score and K=30, the same 30 come back however the
+    input is partitioned or shuffled."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from oni_ml_spark.scoring import most_suspicious
+
+    day = spark.range(400).select(
+        (F.col("id") % 5 / 10).alias("score"),
+        F.concat(F.lit("10.0.0."), (F.col("id") * 7919 % 97).cast("string")).alias("ip_dst"),
+        (F.col("id") * 31 % 400).alias("rec"),
+    )
+
+    def bottom(frame):
+        return [tuple(r) for r in most_suspicious(frame, threshold=1.0, top_k=30).collect()]
+
+    expected = bottom(day.repartition(1))
+    assert len(expected) == 30 and {r[0] for r in expected} == {0.0}
+    assert bottom(day.repartition(7, "ip_dst")) == expected
+
+    @settings(max_examples=4, deadline=None)
+    @given(seed=st.integers(0, 2**31 - 1), parts=st.integers(2, 9))
+    def shuffled(seed, parts):
+        assert bottom(day.orderBy(F.rand(seed)).repartition(parts)) == expected
+
+    shuffled()
+    # a score-only frame has nothing to break ties on, and still works
+    assert [r[0] for r in bottom(day.select("score"))] == [0.0] * 30
