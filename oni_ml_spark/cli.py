@@ -27,6 +27,13 @@ def _positive_int(s: str) -> int:
     return v
 
 
+def _top_k(s: str) -> int:
+    v = int(s)
+    if v < -1:
+        raise argparse.ArgumentTypeError(f"must be >= -1 (-1 = all), got {v}")
+    return v
+
+
 def _positive_float(s: str) -> float:
     v = float(s)
     if not (math.isfinite(v) and v > 0):
@@ -46,7 +53,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--output", required=True, help="output directory for the scored TSV")
     p.add_argument("--feedback", default=None,
                    help="analyst feedback TSV (severity-3 rows weighted ×dupfactor)")
-    p.add_argument("--dupfactor", type=int, default=1000,
+    p.add_argument("--dupfactor", type=_positive_int, default=1000,
                    help="weight of each severity-3 feedback row in training "
                         "(ml_ops.sh:49)")
     p.add_argument("--ldatopiccount", type=_positive_int, default=20,
@@ -58,7 +65,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--seed", type=int, default=0)
     p.add_argument("--threshold", type=float, default=1.0,
                    help="max score to report (P4 predicate)")
-    p.add_argument("--maxresults", type=int, default=-1,
+    p.add_argument("--maxresults", type=_top_k, default=-1,
                    help="bottom-K size; -1 = all below threshold")
     p.add_argument("--topdomains", default=None,
                    help="Alexa-style rank,domain CSV for the top-domain flag")
@@ -80,8 +87,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "during the run's own jobs, no extra scans")
     p.add_argument("--single-file", action="store_true",
                    help="coalesce the TSV to one part file")
-    p.add_argument("--approx-quantiles", action="store_true",
-                   help="use approxQuantile sketches instead of exact discrete cuts")
     return p
 
 
@@ -116,7 +121,6 @@ def main(argv: list[str] | None = None) -> int:
         top_k=args.maxresults,
         seed=args.seed,
         max_iter=args.lda_maxiter,
-        exact_quantiles=not args.approx_quantiles,
     )
 
     if args.analysis == "flow":

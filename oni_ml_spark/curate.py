@@ -27,10 +27,10 @@ Scale shape: every stage boundary is pinned with ``localCheckpoint`` —
 the near-dup and decontamination stages each scan their input several
 times internally (LSH bands + Jaccard verify + the connected-components
 loop; two shingle passes), so an unpinned chain would re-run the whole
-upstream pipeline per internal pass (the curation_pipeline entry measured
-51 s → 4 s from exactly this pin at sf0.1; on a real cluster use the same
-boundaries with ``persist(DISK_ONLY)``).  The per-stage counts ride those
-pinned frames at state-table cost.  The report lands under
+upstream pipeline per internal pass (a dedup → chunk → pack chain
+measured 51 s → 4 s from exactly this pin at sf0.1; on a real cluster use
+the same boundaries with ``persist(DISK_ONLY)``).  The per-stage counts
+ride those pinned frames at state-table cost.  The report lands under
 ``<output>/_curation_report`` (underscore-hidden from parquet discovery
 of the curated data) and is printed as one JSON line.
 
@@ -61,9 +61,31 @@ import sys
 
 from pyspark.sql import functions as F
 
+from oni_ml_spark.cli import _positive_int
+
+
+def _jaccard_threshold(s: str) -> float:
+    v = float(s)
+    if not 0 < v <= 1:
+        raise argparse.ArgumentTypeError(f"must be in (0, 1], got {s}")
+    return v
+
+
+class _Parser(argparse.ArgumentParser):
+    # the LSH band layout fails at parse time, not when stage 3 is built
+    # after the input scan and the quality gate
+    def parse_known_args(self, args=None, namespace=None):
+        ns, rest = super().parse_known_args(args, namespace)
+        if ns.dedup_hashes % ns.dedup_bands:
+            self.error(
+                f"--dedup-bands ({ns.dedup_bands}) must divide "
+                f"--dedup-hashes ({ns.dedup_hashes})"
+            )
+        return ns, rest
+
 
 def build_parser() -> argparse.ArgumentParser:
-    p = argparse.ArgumentParser(
+    p = _Parser(
         prog="oni_ml_spark.curate",
         description="End-to-end training-data curation (clean -> gate -> "
                     "dedup -> decontaminate -> model gate -> shuffle).",
@@ -99,24 +121,24 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--max-dup-para-char-frac", type=float, default=None)
     # stage 3: near-dup removal
     p.add_argument("--skip-dedup", action="store_true")
-    p.add_argument("--dedup-threshold", type=float, default=0.7,
+    p.add_argument("--dedup-threshold", type=_jaccard_threshold, default=0.7,
                    help="Jaccard threshold for near-duplicate pairs")
-    p.add_argument("--dedup-ngram", type=int, default=3)
-    p.add_argument("--dedup-hashes", type=int, default=16)
-    p.add_argument("--dedup-bands", type=int, default=4)
+    p.add_argument("--dedup-ngram", type=_positive_int, default=3)
+    p.add_argument("--dedup-hashes", type=_positive_int, default=16)
+    p.add_argument("--dedup-bands", type=_positive_int, default=4)
     # stage 4: decontamination
     p.add_argument("--eval", default=None,
                    help="parquet path of the evaluation corpus to "
                         "decontaminate against (omit to skip)")
     p.add_argument("--eval-text-col", default=None,
                    help="eval corpus text column (defaults to --text-col)")
-    p.add_argument("--decon-ngram", type=int, default=8)
+    p.add_argument("--decon-ngram", type=_positive_int, default=8)
     p.add_argument("--max-contamination", type=float, default=0.0)
     # stage 5: model gate
     p.add_argument("--model", default=None,
                    help="parquet path of frozen (bucket, w_micro) weights "
                         "(train_hashed_linear output; omit to skip)")
-    p.add_argument("--n-buckets", type=int, default=4096)
+    p.add_argument("--n-buckets", type=_positive_int, default=4096)
     p.add_argument("--model-threshold", type=float, default=0.0,
                    help="keep documents with model score >= this")
     p.add_argument("--model-bias-micro", type=int, default=0)

@@ -80,8 +80,9 @@ def demo_weights(spark, n_buckets: int = 4096, step: int = 2) -> DataFrame:
     bucket carries w_micro = md5_hash32('w:' || bucket) % 2001 − 1000, the
     others are ABSENT (exercising the missing-bucket → 0 contract).  The
     ONE Spark-side source of this expression — its DuckDB restatement
-    lives next to each oracle that checks it (entry_queries
-    `_lmq_oracle_block`, tests/test_classify.py)."""
+    lives next to each oracle that checks it
+    (tests/oracle_battery.py, tests/test_front_door_oracles.py,
+    tests/test_classify.py)."""
     return spark.range(0, n_buckets, step).select(
         F.col("id").alias("bucket"),
         (

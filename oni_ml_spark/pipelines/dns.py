@@ -36,22 +36,17 @@ def null_filter(df: DataFrame) -> DataFrame:
 def featurize(
     df: DataFrame,
     top_domains: list[str],
-    exact_quantiles: bool = True,
     cached: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Subdomain struct + entropy + five quantile-cut bins + word, one pass.
 
     The reference runs five separate full-scan quantile jobs
     (dns/DNSWordCreation.scala:78-122); filtering >0 values per-column is
-    preserved (P5). With exact_quantiles=False all five use the single-pass
-    approxQuantile sketch. Rows carrying ``WEIGHT_COL`` count that many
+    preserved (P5). Rows carrying ``WEIGHT_COL`` count that many
     times in the cuts. The frame this call caches is appended to
     ``cached`` when given, so the caller can release it.
     """
-    from oni_ml_spark.transforms.quantiles import (
-        approx_quantile_cuts_multi,
-        quantile_cuts_multi,
-    )
+    from oni_ml_spark.transforms.quantiles import quantile_cuts_multi
 
     df = df.withColumns(extract_subdomain_cols("dns_qry_name"))
     df = df.withColumn("subdomain_entropy", string_entropy("subdomain"))
@@ -59,40 +54,23 @@ def featurize(
     if cached is not None:
         cached.append(df)
 
-    if exact_quantiles:
-        # the reference's five full-scan quantile jobs in one plan (4 jobs
-        # in a warm analysis), >0 predicates (P5) applied per column
-        # inside the melt
-        cuts = quantile_cuts_multi(
-            df,
-            {
-                "unix_tstamp": DECILES,
-                "frame_len": DECILES,
-                "subdomain_length": QUINTILES,
-                "subdomain_entropy": QUINTILES,
-                "num_periods": QUINTILES,
-            },
-            positive_only={"subdomain_length", "subdomain_entropy", "num_periods"},
-            weight_col=weight_of(df),
-        )
-        time_cuts, frame_len_cuts = cuts["unix_tstamp"], cuts["frame_len"]
-        subdomain_len_cuts = cuts["subdomain_length"]
-        entropy_cuts, periods_cuts = cuts["subdomain_entropy"], cuts["num_periods"]
-    else:
-        # all five sketches in ONE action; quintile columns take every 2nd
-        # decile, and the >0 predicate (P5) is a null-mask inside the pass
-        cuts = approx_quantile_cuts_multi(
-            df,
-            ["unix_tstamp", "frame_len", "subdomain_length",
-             "subdomain_entropy", "num_periods"],
-            DECILES,
-            positive_only={"subdomain_length", "subdomain_entropy", "num_periods"},
-            weight_col=weight_of(df),
-        )
-        time_cuts, frame_len_cuts = cuts["unix_tstamp"], cuts["frame_len"]
-        subdomain_len_cuts = cuts["subdomain_length"][1::2]
-        entropy_cuts = cuts["subdomain_entropy"][1::2]
-        periods_cuts = cuts["num_periods"][1::2]
+    # the reference's five full-scan quantile jobs in one plan (4 jobs in a
+    # warm analysis), >0 predicates (P5) applied per column inside the melt
+    cuts = quantile_cuts_multi(
+        df,
+        {
+            "unix_tstamp": DECILES,
+            "frame_len": DECILES,
+            "subdomain_length": QUINTILES,
+            "subdomain_entropy": QUINTILES,
+            "num_periods": QUINTILES,
+        },
+        positive_only={"subdomain_length", "subdomain_entropy", "num_periods"},
+        weight_col=weight_of(df),
+    )
+    time_cuts, frame_len_cuts = cuts["unix_tstamp"], cuts["frame_len"]
+    subdomain_len_cuts = cuts["subdomain_length"]
+    entropy_cuts, periods_cuts = cuts["subdomain_entropy"], cuts["num_periods"]
 
     df = df.withColumns(
         {
@@ -125,14 +103,11 @@ def run(
     top_k: int = -1,
     seed: int = 0,
     max_iter: int = 10,
-    exact_quantiles: bool = True,
 ) -> SuspiciousConnectsResult:
     df = training_union(null_filter(df), feedback, "dns_sev", dup_factor)
 
     cached: list[DataFrame] = []
-    featurized = featurize(
-        df, top_domains or [], exact_quantiles=exact_quantiles, cached=cached
-    ).cache()
+    featurized = featurize(df, top_domains or [], cached=cached).cache()
     cached.append(featurized)
     return train_and_score(
         featurized,

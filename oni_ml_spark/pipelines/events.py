@@ -1,11 +1,11 @@
 """Flagship pipeline on the generic `events` table.
 
 The reference's flagship question — "what are today's K most suspicious
-connections?" (README.md:103-124) — applied to the driver's synthetic
-events stream: document = user_id, word = event_type × value-decile ×
+connections?" (README.md:103-124) — applied to the synthetic events
+table of the test data: document = user_id, word = event_type × value-decile ×
 hour-of-day-bin. Same dataflow as the flow/dns/proxy pipelines (featurize →
 corpus → batch LDA → broadcast scoring → bottom-K), demonstrating the
-engine end-to-end on a schema the oracle tables provide.
+engine end-to-end on a schema the test data provides.
 """
 
 from __future__ import annotations
@@ -19,26 +19,17 @@ from oni_ml_spark.transforms import DECILES, QUINTILES, bin_expr
 
 def featurize(
     df: DataFrame,
-    exact_quantiles: bool = True,
     cached: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Value deciles × hour quintiles × event type; the frame this call
     caches is appended to ``cached`` when given."""
-    from oni_ml_spark.transforms.quantiles import (
-        approx_quantile_cuts_multi,
-        quantile_cuts_multi,
-    )
+    from oni_ml_spark.transforms.quantiles import quantile_cuts_multi
 
     df = df.withColumn("hour", F.hour("ts").cast("double")).cache()
     if cached is not None:
         cached.append(df)
-    if exact_quantiles:
-        cuts = quantile_cuts_multi(df, {"value": DECILES, "hour": QUINTILES})
-        value_cuts, hour_cuts = cuts["value"], cuts["hour"]
-    else:
-        # both sketches in one action; hour quintiles = every 2nd decile
-        cuts = approx_quantile_cuts_multi(df, ["value", "hour"], DECILES)
-        value_cuts, hour_cuts = cuts["value"], cuts["hour"][1::2]
+    cuts = quantile_cuts_multi(df, {"value": DECILES, "hour": QUINTILES})
+    value_cuts, hour_cuts = cuts["value"], cuts["hour"]
     df = df.withColumns(
         {
             "value_bin": bin_expr("value", value_cuts),
@@ -64,10 +55,9 @@ def run(
     top_k: int = 100,
     seed: int = 0,
     max_iter: int = 10,
-    exact_quantiles: bool = True,
 ) -> SuspiciousConnectsResult:
     cached: list[DataFrame] = []
-    featurized = featurize(df, exact_quantiles=exact_quantiles, cached=cached).cache()
+    featurized = featurize(df, cached=cached).cache()
     cached.append(featurized)
     return train_and_score(
         featurized.withColumn("doc_id", F.col("user_id").cast("string")),

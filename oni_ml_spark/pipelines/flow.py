@@ -41,7 +41,6 @@ def valid_time_filter(df: DataFrame) -> DataFrame:
 
 def featurize(
     df: DataFrame,
-    exact_quantiles: bool = True,
     cached: list[DataFrame] | None = None,
 ) -> DataFrame:
     """num_time + three quantile-cut bins + flow words, single pass.
@@ -52,30 +51,19 @@ def featurize(
     Rows carrying ``WEIGHT_COL`` count that many times in the cuts; the
     frame this call caches is appended to ``cached`` when given.
     """
-    from oni_ml_spark.transforms.quantiles import (
-        approx_quantile_cuts_multi,
-        quantile_cuts_multi,
-    )
+    from oni_ml_spark.transforms.quantiles import quantile_cuts_multi
 
     df = df.withColumn("num_time", fractional_hour("trhour", "trminute", "trsec"))
     df = df.cache()
     if cached is not None:
         cached.append(df)
-    if exact_quantiles:
-        # all three cut sets from one plan (vs one pass per column)
-        cuts = quantile_cuts_multi(
-            df,
-            {"num_time": DECILES, "ibyt": DECILES, "ipkt": QUINTILES},
-            weight_col=weight_of(df),
-        )
-        time_cuts, ibyt_cuts, ipkt_cuts = cuts["num_time"], cuts["ibyt"], cuts["ipkt"]
-    else:
-        # one sketch pass for all three columns; quintiles = every 2nd decile
-        cuts = approx_quantile_cuts_multi(
-            df, ["num_time", "ibyt", "ipkt"], DECILES, weight_col=weight_of(df)
-        )
-        time_cuts, ibyt_cuts = cuts["num_time"], cuts["ibyt"]
-        ipkt_cuts = cuts["ipkt"][1::2]
+    # all three cut sets from one plan (vs one pass per column)
+    cuts = quantile_cuts_multi(
+        df,
+        {"num_time": DECILES, "ibyt": DECILES, "ipkt": QUINTILES},
+        weight_col=weight_of(df),
+    )
+    time_cuts, ibyt_cuts, ipkt_cuts = cuts["num_time"], cuts["ibyt"], cuts["ipkt"]
 
     df = df.withColumns(
         {
@@ -100,12 +88,11 @@ def run(
     top_k: int = -1,
     seed: int = 0,
     max_iter: int = 10,
-    exact_quantiles: bool = True,
 ) -> SuspiciousConnectsResult:
     df = training_union(valid_time_filter(df), feedback, "sev", dup_factor)
 
     cached: list[DataFrame] = []
-    featurized = featurize(df, exact_quantiles=exact_quantiles, cached=cached).cache()
+    featurized = featurize(df, cached=cached).cache()
     cached.append(featurized)
 
     # Corpus: each IP's document collects words from both endpoints

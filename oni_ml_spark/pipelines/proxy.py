@@ -42,7 +42,6 @@ def null_filter(df: DataFrame) -> DataFrame:
 def featurize(
     df: DataFrame,
     top_domains: list[str],
-    exact_quantiles: bool = True,
     cached: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Time/entropy/agent-count features + proxy word.
@@ -53,10 +52,7 @@ def featurize(
     and the cuts; the frame this call caches is appended to ``cached`` when
     given.
     """
-    from oni_ml_spark.transforms.quantiles import (
-        approx_quantile_cuts_multi,
-        quantile_cuts_multi,
-    )
+    from oni_ml_spark.transforms.quantiles import quantile_cuts_multi
 
     df = df.withColumn("num_time", seconds_of_day("p_time"))
     df = df.withColumn("uri_entropy", string_entropy("fulluri"))
@@ -68,22 +64,13 @@ def featurize(
     if cached is not None:
         cached.append(df)
 
-    if exact_quantiles:
-        cuts = quantile_cuts_multi(
-            df,
-            {"num_time": DECILES, "uri_entropy": QUINTILES, "agent_count": QUINTILES},
-            weight_col=weight_col,
-        )
-        time_cuts = cuts["num_time"]
-        entropy_cuts, agent_cuts = cuts["uri_entropy"], cuts["agent_count"]
-    else:
-        cuts = approx_quantile_cuts_multi(
-            df, ["num_time", "uri_entropy", "agent_count"], DECILES,
-            weight_col=weight_col,
-        )
-        time_cuts = cuts["num_time"]
-        entropy_cuts = cuts["uri_entropy"][1::2]
-        agent_cuts = cuts["agent_count"][1::2]
+    cuts = quantile_cuts_multi(
+        df,
+        {"num_time": DECILES, "uri_entropy": QUINTILES, "agent_count": QUINTILES},
+        weight_col=weight_col,
+    )
+    time_cuts = cuts["num_time"]
+    entropy_cuts, agent_cuts = cuts["uri_entropy"], cuts["agent_count"]
 
     df = df.withColumns(
         {
@@ -113,14 +100,11 @@ def run(
     top_k: int = -1,
     seed: int = 0,
     max_iter: int = 10,
-    exact_quantiles: bool = True,
 ) -> SuspiciousConnectsResult:
     df = training_union(null_filter(df), feedback, "uri_sev", dup_factor)
 
     cached: list[DataFrame] = []
-    featurized = featurize(
-        df, top_domains or [], exact_quantiles=exact_quantiles, cached=cached
-    ).cache()
+    featurized = featurize(df, top_domains or [], cached=cached).cache()
     cached.append(featurized)
     return train_and_score(
         featurized,

@@ -12,7 +12,6 @@ from oni_ml_spark.transforms.quantiles import (
     grouped_quantile_cuts,
     quantile_cuts,
     quantile_cuts_df,
-    approx_quantile_cuts,
     DECILES,
     QUINTILES,
 )
@@ -28,7 +27,7 @@ from oni_ml_spark.transforms.feedback import oversample, load_feedback_tsv
 
 __all__ = [
     "bin_expr", "ecdf", "grouped_quantile_cuts", "quantile_cuts",
-    "quantile_cuts_df", "approx_quantile_cuts", "DECILES", "QUINTILES",
+    "quantile_cuts_df", "DECILES", "QUINTILES",
     "string_entropy", "extract_subdomain_cols", "extract_domain",
     "top_domain_expr", "fractional_hour", "seconds_of_day",
     "flow_word_cols", "dns_word", "proxy_word",

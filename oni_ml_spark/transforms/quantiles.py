@@ -12,9 +12,7 @@ Semantics match the reference (utilities/Quantiles.scala:21-99):
 Scale notes: the ECDF aggregates to distinct values first (shuffle on value,
 map-side partial agg), so the window's input is |distinct values|, not |rows|.
 The cumulative-sum window is a single global sort — fine for the bounded
-cardinalities these cuts are computed over (feature columns); for raw
-high-cardinality columns at 100 TB use ``approx_quantile_cuts`` (Greenwald-
-Khanna sketch, one pass, no global sort).
+cardinalities these cuts are computed over (feature columns).
 """
 
 from __future__ import annotations
@@ -480,8 +478,7 @@ def quantile_cuts_multi(
     its own job, then the collect); 4 in a warm dns analysis, where this
     is the first action over featurize's freshly cached frame. Each
     window task sees one column's distinct values, which stays bounded for
-    featurization columns (times of day, packet sizes); raw
-    high-cardinality columns belong on ``approx_quantile_cuts_multi``.
+    featurization columns (times of day, packet sizes).
 
     ``positive_only`` columns replicate the reference's >0 predicate before
     the quantile (P5, dns/DNSWordCreation.scala:98-101). Semantics per
@@ -588,59 +585,6 @@ def grouped_quantile_cont_cuts(
         "value", ["key"],
     )
     return _interp_cont(parts, probs, key_cols=["key"])
-
-
-def approx_quantile_cuts(
-    df: DataFrame, value_col: str, probs: list[float], rel_err: float = 0.001
-) -> list[float]:
-    """Fast path: single-pass approximate quantiles (no global sort).
-
-    At 100 TB this is the right default for high-cardinality columns; the
-    exact path exists for oracle parity. Empty input → +inf like the exact
-    path.
-    """
-    got = df.select(F.col(value_col).cast("double").alias("v")).approxQuantile(
-        "v", [min(p, 1.0) for p in probs], rel_err
-    )
-    return got if got else [float("inf")] * len(probs)
-
-
-def approx_quantile_cuts_multi(
-    df: DataFrame,
-    cols: list[str],
-    probs: list[float],
-    rel_err: float = 0.001,
-    positive_only: set[str] | frozenset[str] = frozenset(),
-    weight_col: str | None = None,
-) -> dict[str, list[float]]:
-    """One-pass approximate quantiles for SEVERAL columns — one Spark action
-    total, vs one per column (the reference ran five separate full-scan
-    quantile jobs per featurization, dns/DNSWordCreation.scala:78-122).
-
-    ``positive_only`` columns apply the reference's >0 predicate (P5) by
-    masking non-positive values to null INSIDE the one pass — approxQuantile
-    ignores nulls, so a per-column pre-filter job is never needed.
-
-    ``weight_col`` names an integer row multiplicity. The Greenwald-Khanna
-    sketch takes no weights, so each row is repeated ``weight`` times
-    inside the same pass — after projecting to the numeric cut columns, so
-    the copies are a few doubles wide and never materialize as a frame."""
-
-    def _val(c: str):
-        v = F.col(c).cast("double")
-        return (F.when(v > 0, v) if c in positive_only else v).alias(c)
-
-    casted = df.select(*[_val(c) for c in cols], *([F.col(weight_col)] if weight_col else []))
-    if weight_col:
-        casted = casted.select(
-            *cols,
-            F.explode(F.array_repeat(F.lit(0), F.col(weight_col).cast("int"))).alias("__dup"),
-        )
-    got = casted.approxQuantile(cols, [min(p, 1.0) for p in probs], rel_err)
-    return {
-        c: (vals if vals else [float("inf")] * len(probs))
-        for c, vals in zip(cols, got)
-    }
 
 
 def bin_expr(value: Column | str, cuts: list[float]) -> Column:

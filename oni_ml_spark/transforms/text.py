@@ -79,33 +79,6 @@ def string_entropy(col: Column | str) -> Column:
     return F.when(s.isNull() | (n == 0), F.lit(0.0)).otherwise(ent)
 
 
-def entropy_table(df, id_col: str, text_col: str):
-    """Entropy per document for LONG texts: explode → (id, char) counts →
-    per-id Σ. Linear in total characters and fully parallel (the per-row HOF
-    in ``string_entropy`` is O(distinct·len) per row — right for short
-    subdomain strings, wrong for multi-KB documents).
-
-    H = log2(n) - (1/n)·Σ_c cnt_c·log2(cnt_c). Returns (id, entropy).
-    """
-    chars = df.select(
-        F.col(id_col).alias("id"), F.explode(F.split(F.col(text_col), "")).alias("ch")
-    )
-    per_char = chars.groupBy("id", "ch").agg(F.count(F.lit(1)).alias("c"))
-    return (
-        per_char.groupBy("id")
-        .agg(
-            F.sum("c").alias("n"),
-            F.sum(F.col("c") * F.log2("c")).alias("clog"),
-        )
-        .select(
-            "id",
-            F.when(F.col("n") > 0, F.log2("n") - F.col("clog") / F.col("n"))
-            .otherwise(F.lit(0.0))
-            .alias("entropy"),
-        )
-    )
-
-
 def _last(parts: Column) -> Column:
     return F.element_at(parts, -1)
 

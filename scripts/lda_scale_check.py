@@ -2,8 +2,8 @@
 LDA kernel's scale check (SCALE.md, LDA row).
 
 For each scale-factor directory given (each holding ``events.parquet``) the
-script featurizes the events as the events pipeline does (approximate
-quantile cuts), aggregates the (user, word) corpus, caches it, runs one
+script featurizes the events as the events pipeline does (exact quantile
+cuts), aggregates the (user, word) corpus, caches it, runs one
 warm-up fit and then times ``--repeats`` fits at k=10, 10 EM passes. With
 ``--synthetic-nnz N`` it also times the numpy kernel alone (``fit_lda``) on a
 random corpus of N nonzeros at k=20, where the kernel exists. It reads its
@@ -34,7 +34,7 @@ def time_events_fit(spark, sf_dir: str, repeats: int) -> dict:
     from oni_ml_spark.topics import corpus_counts, fit_topic_model
 
     featurized = events.featurize(
-        spark.read.parquet(f"{sf_dir}/events.parquet"), exact_quantiles=False
+        spark.read.parquet(f"{sf_dir}/events.parquet")
     ).withColumn("doc", F.col("user_id").cast("string"))
     counts = corpus_counts(featurized, "doc", "word").cache()
     nnz = counts.count()

@@ -1,9 +1,9 @@
-"""The driver-facing query battery: every operator from SURVEY.md §2 plus the
-beyond-reference data-pipeline operators, each as a (spark, sf_dir) →
-DataFrame callable with a DuckDB oracle SQL twin.
+"""The oracle battery behind ``tests/test_oracle_parity.py``: operators from
+SURVEY.md §2 and the data-pipeline operators that stay in the package, each
+as a (spark, sf_dir) → DataFrame callable with a DuckDB oracle SQL twin.
 
-Column names are aliased identically on both sides (the driver's compare
-sorts columns by name before value-hashing). Float-producing queries round
+Column names are aliased identically on both sides (the parity test sorts
+columns by name before comparing values). Float-producing queries round
 on both sides; sums go through DECIMAL(18,2) on both sides so the result is
 bit-identical regardless of aggregation order.
 """
@@ -20,16 +20,14 @@ from oni_ml_spark.transforms import (
     DECILES,
     QUINTILES,
     bin_expr,
-    extract_domain,
-    extract_subdomain_cols,
     flow_word_cols,
     fractional_hour,
     oversample,
     quantile_cuts,
     quantile_cuts_df,
-    string_entropy,
 )
 from oni_ml_spark.transforms.quantiles import ecdf
+from tests.media_fixtures import planted_av_containers, planted_image_headers
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -139,6 +137,12 @@ def _docs(spark, sf):
     return widen_if_narrow(load_table(spark, sf, "documents"))
 
 
+# the sf0.01 test-data tables the oracles read, as DuckDB views
+TABLES = [
+    "region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "events", "documents", "embeddings",
+]
+
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
@@ -151,58 +155,6 @@ def _q(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-# ---- scans / projections / filters (S1-S3, P1-P4) ------------------------
-
-@_q(
-    "scan_filter_project",
-    "SELECT event_id, event_type, value FROM events "
-    "WHERE extract('hour' FROM ts) BETWEEN 6 AND 17 AND value BETWEEN 10 AND 90",
-)
-def scan_filter_project(spark, sf):
-    """P1 + P2 + S1: projection and range predicates straight off the
-    parquet scan (reference: netflow/FlowPreLDA.scala:107-109) — column
-    pruning reaches ReadSchema, the value predicate reaches PushedFilters
-    (asserted in tests/test_plans.py); full-table scan value coverage comes
-    from bin_deciles / broadcast_lookup_fallback (60k-row outputs)."""
-    e = load_table(spark, sf, "events")
-    return e.filter(
-        F.hour("ts").between(6, 17) & F.col("value").between(10, 90)
-    ).select("event_id", "event_type", "value")
-
-
-@_q(
-    "threshold_topk",
-    "SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice <= 50000 "
-    "ORDER BY o_totalprice, o_orderkey LIMIT 100",
-)
-def threshold_topk(spark, sf):
-    """P4 + O1/O2: score-threshold filter then ascending top-K —
-    TakeOrderedAndProject (netflow/FlowPostLDA.scala:79-80)."""
-    o = load_table(spark, sf, "orders")
-    return (
-        o.filter(F.col("o_totalprice") <= 50000)
-        .orderBy("o_totalprice", "o_orderkey")
-        .limit(100)
-        .select("o_orderkey", "o_totalprice")
-    )
-
-
-# ---- aggregations (A1-A8) ------------------------------------------------
-
-@_q(
-    "groupby_count_docword",
-    "SELECT user_id, event_type, count(*) AS cnt FROM events GROUP BY 1, 2",
-)
-def groupby_count_docword(spark, sf):
-    """A1: the core (doc, word) → count corpus aggregation
-    (netflow/FlowPreLDA.scala:131-139)."""
-    return (
-        load_table(spark, sf, "events")
-        .groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 @_q(
@@ -222,7 +174,7 @@ def groupby_count_docword(spark, sf):
     "corrs AS (SELECT 'event_id|user_id' AS pair, round(corr(event_id, user_id), 6) AS c FROM events "
     "UNION ALL SELECT 'event_id|value', round(corr(event_id, value), 6) FROM events "
     "UNION ALL SELECT 'user_id|value', round(corr(user_id, value), 6) FROM events), "
-    # -- drift_compare (r8): PSI/KL per-bin drift between the even-user
+    # -- drift_compare: PSI/KL per-bin drift between the even-user
     # -- half and a scale-shifted (×1.35) odd-user half with injected nulls
     # -- (event_id % 97 → bin -1). Bin counts are exact longs from the same
     # -- literal when-chain on both engines (IEEE ×1.35 then <= edge is
@@ -250,7 +202,7 @@ def groupby_count_docword(spark, sf):
     "WHEN 4 THEN 70.0 WHEN 5 THEN 150.0 END)::DOUBLE AS lo, "
     "(CASE bin WHEN 0 THEN 5.0 WHEN 1 THEN 15.0 WHEN 2 THEN 35.0 WHEN 3 THEN 70.0 "
     "WHEN 4 THEN 150.0 END)::DOUBLE AS hi FROM dterm), "
-    # -- drift_compare_categorical (r8): same smoothed PSI/KL arithmetic
+    # -- drift_compare_categorical: same smoothed PSI/KL arithmetic
     # -- over per-category counts; cur side relabels every 13th event to
     # -- 'synthetic' and nulls every 89th ('__null' category live)
     "kr AS (SELECT coalesce(event_type, '__null') AS key, count(*)::BIGINT AS nr "
@@ -264,7 +216,7 @@ def groupby_count_docword(spark, sf):
     "count(*)::DOUBLE AS nb FROM kj), "
     "kterm AS (SELECT key, nr, nc, (nr::DOUBLE + 0.5) / (tr + 0.5 * nb) AS pr, "
     "(nc::DOUBLE + 0.5) / (tc + 0.5 * nb) AS pc FROM kj, kt), "
-    # -- drift_compare_grouped (r8): per-event_type PSI over the same
+    # -- drift_compare_grouped: per-event_type PSI over the same
     # -- frozen edges; each group's totals are its own (self-contained
     # -- per-segment PSI)
     # -- coalesce mirrors drift_compare_grouped's '__null' segment sentinel
@@ -289,7 +241,7 @@ def groupby_count_docword(spark, sf):
     "count(*)::DOUBLE AS nb FROM gj GROUP BY grp), "
     "gterm AS (SELECT gj.grp, bin, nr, nc, (nr::DOUBLE + 0.5) / (tr + 0.5 * nb) AS pr, "
     "(nc::DOUBLE + 0.5) / (tc + 0.5 * nb) AS pc FROM gj JOIN gt USING (grp)), "
-    # -- embedding drift (r8): norm-distribution PSI (per-row L2 norm is an
+    # -- embedding drift: norm-distribution PSI (per-row L2 norm is an
     # -- in-order fold — bit-identical across engines) between the even-id
     # -- half and the odd half synthetically scaled by 1+(vec_id%5)/10,
     # -- plus the centroid_shift cosine between the even half and the odd
@@ -325,9 +277,9 @@ def groupby_count_docword(spark, sf):
     "ccos AS (SELECT sum((cra.s / cra.n) * (cca.s / cca.n)) "
     "/ (sqrt(sum(pow(cra.s / cra.n, 2))) * sqrt(sum(pow(cca.s / cca.n, 2)))) AS cosv, "
     "count(*)::BIGINT AS dim FROM cra JOIN cca USING (pos)), "
-    # -- data-contract expectations (r9): all eight rules are ONE
+    # -- data-contract expectations: all eight rules are ONE
     # -- aggregate on both engines; counts are exact longs, rates are
-    # -- identical-arithmetic divisions (int sum / int count), round 6
+    # -- identical-arithmetic divisions (int sum / int count)
     "exq AS (SELECT count(*)::BIGINT AS n, "
     "sum((event_type IS NULL)::BIGINT) AS et_nulls, "
     "(count(event_id) - count(DISTINCT event_id))::BIGINT AS dupes, "
@@ -338,7 +290,7 @@ def groupby_count_docword(spark, sf):
     "avg(CASE WHEN event_type IS NOT NULL THEN "
     "regexp_matches(event_type, '^[a-z]+$')::INT::DOUBLE END) AS rrate, "
     "count(DISTINCT event_type)::BIGINT AS dcnt FROM events), "
-    # -- vector contracts (r10): replicate the Spark side's planted
+    # -- vector contracts: replicate the Spark side's planted
     # -- violations (NaN first element every 50th vector, NaN scalar every
     # -- 77th row, dim-63 rule over the untouched column) then count them
     "expe AS (SELECT vec_id, CASE WHEN vec_id % 50 = 0 THEN "
@@ -353,7 +305,7 @@ def groupby_count_docword(spark, sf):
     "AS nan_rows, "
     "sum((vscalar IS NOT NULL AND isnan(vscalar))::BIGINT) AS nan_scalar "
     "FROM expe), "
-    # -- grouped contracts (r9): the same rules PER SEGMENT in one
+    # -- grouped contracts: the same rules PER SEGMENT in one
     # -- grouped aggregate ('__null' sentinel group like the drift CTEs)
     "exg AS (SELECT coalesce(event_type, '__null') AS g, count(*)::BIGINT AS n, "
     "(count(event_id) - count(DISTINCT event_id))::BIGINT AS dupes, "
@@ -421,10 +373,9 @@ def groupby_count_docword(spark, sf):
     "round(nan_scalar::DOUBLE, 6), NULL, (nan_scalar = 0)::INT::DOUBLE FROM exe",
 )
 def dimension_profile(spark, sf):
-    """Three dimension-table aggregates over one key, r06 merge of
+    """Three dimension-table aggregates over one key,
     groupcount_minmax + distinct_dictionary plus the key_skew_profile
-    diagnostic (all 5-row event_type aggregates — see COVERAGE.md
-    round-6 renames):
+    diagnostic (all 5-row event_type aggregates):
 
     - part='stats' — P3 + A2 + A8: null-rejection (dns/DNSPreLDA.scala:92)
       then count-by-key with exact min/max in one grouped pass.
@@ -434,8 +385,8 @@ def dimension_profile(spark, sf):
       keys with their exact share of all rows (share = count / in-plan
       1-row total; the shuffle-straggler diagnostic).
 
-    r07 merges the two remaining post-freeze diagnostics (VERDICT r6 item
-    1) into the same one-table profile family:
+    It also merges two more diagnostics into the same one-table profile
+    family:
 
     - part='hist' — plans.diagnostics.column_histogram over `value`
       (8 equi-width bins; bounds from the histogram's documented 1-row
@@ -446,10 +397,10 @@ def dimension_profile(spark, sf):
     - part='corr' — plans.diagnostics.numeric_correlations over the three
       numeric columns in ONE aggregate/scan: key='col_a|col_b',
       share=round(pearson, 6) (engines agree to ~1e-9 on the co-moment
-      formula; all three gate-SF values sit >=1.6e-7 from the rounding
+      formula; all three sf0.01 values sit >=1.6e-7 from the rounding
       boundary — checked before freezing).
 
-    r08 merges the drift monitor (datapipe.drift.drift_compare) into the
+    It also merges the drift monitor (datapipe.drift.drift_compare) into the
     same profile family:
 
     - part='drift' / 'drift_cur' — PSI/KL per-bin drift between the
@@ -460,7 +411,7 @@ def dimension_profile(spark, sf):
       lo/hi=bin edges, share=round(psi_term/kl_term, 6). Bin counts are
       exact longs (IEEE ×1.35 then <=edge is engine-identical); the
       psi/kl doubles' distance to the 1e-6 rounding boundary was checked
-      at the gate SF before freezing.
+      at sf0.01 before freezing.
     - part='driftcat' / 'driftcat_cur' — drift_compare_categorical over
       event_type: cur side relabels every 13th event to 'synthetic' and
       nulls every 89th (the '__null' category live); same smoothed PSI/KL
@@ -477,7 +428,7 @@ def dimension_profile(spark, sf):
       floor(x·1e6) BIGINT sums — exact on any engine and partitioning;
       key='centroid', a=validated dim, share=round(cosine, 6)).
 
-    r09 merges the data-contract expectation suite (datapipe.contracts)
+    It also merges the data-contract expectation suite (datapipe.contracts)
     into the same profile family:
 
     - part='expect' — run_expectations over events, all eight rule kinds
@@ -485,22 +436,11 @@ def dimension_profile(spark, sf):
       null_rate, regex, distinct_count), two failures planted live
       (range|value: values > 100 exist; in_set|event_type: 'error' is
       outside the set). key=rule|column, lo=observed (exact counts /
-      identical-arithmetic rates, round 6), share=ok as 0/1, a/hi null.
+      identical-arithmetic rates), share=ok as 0/1, a/hi null.
     - part='expectg' — run_expectations_grouped per event_type (ONE
       grouped aggregate: row_count / unique|event_id / range|value per
       segment, range failing in every segment with values > 100);
       key=group|rule|column, same lo/share mapping."""
-    return _dimension_profile_impl(spark, sf)
-
-
-def _dimension_profile_impl(spark, sf, pin=None):
-    """dimension_profile body, factored so the A/B harness can compare
-    pin strategies for the four doubly-consumed drift frames (guide
-    §1.2): each of dr/dcat/dg/ed feeds TWO union branches (ref + cur
-    projections), so without pinning its whole computation is planned —
-    and executed — twice.  ``pin`` is applied to each; None keeps the
-    pre-r12 recompute-per-branch shape."""
-    _p = (lambda d: d) if pin is None else pin
     from oni_ml_spark.datapipe.drift import (
         centroid_shift,
         drift_compare,
@@ -577,9 +517,9 @@ def _dimension_profile_impl(spark, sf, pin=None):
         .otherwise(F.col("value") * 1.35)
         .alias("value")
     )
-    dr = _p(drift_compare(
+    dr = drift_compare(
         drift_ref, drift_cur, "value", edges=[5.0, 15.0, 35.0, 70.0, 150.0]
-    ))
+    )
     dref = dr.select(
         F.lit("drift").alias("part"),
         F.col("bin").cast("string").alias("key"),
@@ -603,7 +543,7 @@ def _dimension_profile_impl(spark, sf, pin=None):
         .otherwise(F.col("event_type"))
         .alias("event_type")
     )
-    dcat = _p(drift_compare_categorical(cat_ref, cat_cur, "event_type"))
+    dcat = drift_compare_categorical(cat_ref, cat_cur, "event_type")
     kref = dcat.select(
         F.lit("driftcat").alias("part"),
         "key",
@@ -627,9 +567,9 @@ def _dimension_profile_impl(spark, sf, pin=None):
         .otherwise(F.col("value") * 1.35)
         .alias("value"),
     )
-    dg = _p(drift_compare_grouped(
+    dg = drift_compare_grouped(
         g_ref, g_cur, "event_type", "value", edges=[5.0, 15.0, 35.0, 70.0, 150.0]
-    ))
+    )
     gkey = F.concat_ws("|", "group", F.col("bin").cast("string")).alias("key")
     gref = dg.select(
         F.lit("driftg").alias("part"),
@@ -653,9 +593,9 @@ def _dimension_profile_impl(spark, sf, pin=None):
     e_cur = emb.filter((F.col("vec_id") % 2) == 1).select(
         F.transform("embedding", lambda x: x.cast("double") * scale).alias("embedding")
     )
-    ed = _p(embedding_norm_drift(
+    ed = embedding_norm_drift(
         e_ref, e_cur, "embedding", edges=[1.05, 1.15, 1.25, 1.35]
-    ))
+    )
     eref = ed.select(
         F.lit("edrift").alias("part"),
         F.col("bin").cast("string").alias("key"),
@@ -700,11 +640,11 @@ def _dimension_profile_impl(spark, sf, pin=None):
         run_expectations_grouped,
     )
 
-    # r9: the data-contract expectation suite (datapipe.contracts) over
+    # the data-contract expectation suite (datapipe.contracts) over
     # the same table — ONE aggregate evaluating all eight rules; two
     # planted failures (value > 100 exists; 'error' is outside the set).
     # key=rule|column, lo=observed (exact counts / identical-arithmetic
-    # rates, round 6), share=ok as 0/1.
+    # rates), share=ok as 0/1.
     exp = run_expectations(e, [
         expect_row_count(min_rows=1),
         expect_not_null("event_type"),
@@ -734,7 +674,7 @@ def _dimension_profile_impl(spark, sf, pin=None):
         null_d.alias("hi"),
         F.col("ok").cast("double").alias("share"),
     )
-    # r10: the vector-column contracts (expect_array_dim / expect_no_nan)
+    # the vector-column contracts (expect_array_dim / expect_no_nan)
     # over embeddings with PLANTED violations — every 50th vector's first
     # element becomes NaN (dim preserved), a scalar column gets NaN every
     # 77th row, and the dim-63 rule (aliased column, distinct report key)
@@ -787,7 +727,7 @@ def ecdf_quantile_cuts(spark, sf):
     cutoffs it induces (Quantiles.scala:54-86) — (p, cutoff, cdf at the
     cutoff). The join checks the two operators agree on the same column.
 
-    r12 (guide §1.2): both operators read the SAME distinct-value CDF
+    Both operators read the SAME distinct-value CDF
     table — build ``_ecdf_parts`` once, pin it (bounded: |distinct
     values| narrow rows), and derive both sides from it instead of running
     the distinct-value shuffle + bucketed prefix-sum twice. Every parts
@@ -796,7 +736,7 @@ def ecdf_quantile_cuts(spark, sf):
     from oni_ml_spark.transforms.quantiles import _ecdf_parts
 
     li = load_table(spark, sf, "lineitem")
-    # r13 (VERDICT item 7's lesson applied here too): cache(), not an
+    # cache(), not an
     # eager localCheckpoint barrier — identical compute-once sharing of
     # the distinct-value CDF between both consumers, no separate pin job.
     parts = _ecdf_parts(li, "l_extendedprice").cache()
@@ -820,29 +760,6 @@ def bin_deciles(spark, sf):
     )
 
 
-# ---- joins / set ops (J1-J2, U1-U2) --------------------------------------
-# J1 (equi joins, broadcast dims, grouped agg) is exercised + hash-checked
-# by tpch_q1_q3 (Q3 side); J2 by broadcast_lookup_fallback below.
-
-@_q(
-    "broadcast_lookup_fallback",
-    "SELECT l_orderkey, l_linenumber, coalesce(p_retailprice, -1.0) AS price "
-    "FROM lineitem LEFT JOIN (SELECT p_partkey, p_retailprice FROM part WHERE p_size < 25) p "
-    "ON l_partkey = p_partkey",
-)
-def broadcast_lookup_fallback(spark, sf):
-    """J2: broadcast lookup join with miss-fallback — the uniform-probability
-    fallback pattern (SuspiciousConnectsScoreFunction.scala:17) as
-    left join + coalesce."""
-    li = load_table(spark, sf, "lineitem")
-    p = load_table(spark, sf, "part").filter(F.col("p_size") < 25).select(
-        "p_partkey", "p_retailprice"
-    )
-    return li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"], "left").select(
-        "l_orderkey", "l_linenumber", F.coalesce("p_retailprice", F.lit(-1.0)).alias("price")
-    )
-
-
 @_q(
     "set_ops",
     "SELECT 'union' AS side, key, count(*) AS cnt FROM ("
@@ -858,7 +775,7 @@ def broadcast_lookup_fallback(spark, sf):
     "SELECT 'only_orders', key, 1 FROM ("
     "  SELECT o_custkey AS key FROM orders WHERE o_totalprice > 150000 "
     "  EXCEPT SELECT c_custkey FROM customer WHERE c_acctbal > 0) "
-    # -- bloom semi/anti (r8): result-identity with the plain IN / NOT IN —
+    # -- bloom semi/anti: result-identity with the plain IN / NOT IN —
     # -- the Bloom layer is transparent (no false negatives; FPs settled by
     # -- the exact join); bag semantics, so counts per key
     "UNION ALL "
@@ -903,7 +820,7 @@ def set_ops(spark, sf):
     only_o = of.subtract(cf).select(
         F.lit("only_orders").alias("side"), "key", F.lit(1).cast("long").alias("cnt")
     )
-    # bloom semi/anti (r8 merge, r7 verdict item 1: plans/bloom.py): the
+    # bloom semi/anti: the
     # broadcast-bitmap pre-filter + exact settle must reproduce the plain
     # semi/anti joins bit-for-bit (bag semantics — counts per key). ONE
     # shared filter build — semi and anti probe the same bitmap (review
@@ -943,7 +860,7 @@ def set_ops(spark, sf):
     "mo AS (SELECT * FROM c WHERE c_custkey NOT IN (SELECT c_custkey FROM u) "
     "UNION ALL SELECT u.* FROM u JOIN (SELECT DISTINCT c_custkey FROM c) b "
     "USING (c_custkey)), "
-    # -- CDC ring (r8 merge): changelog with upserts + deletes + inserts at
+    # -- CDC ring: changelog with upserts + deletes + inserts at
     # -- seqs 1..3, applied via the row_number winner per key (the literal
     # -- MERGE-with-delete expansion apply_changelog implements)
     "ch AS ("
@@ -984,7 +901,7 @@ def set_ops(spark, sf):
     "UNION ALL SELECT 'cdc', k, nm, round(bal, 6) FROM cdc "
     "UNION ALL SELECT 'scd2', k, nm, round(bal, 6) FROM scd2 "
     "UNION ALL SELECT 'asof', k, nm, round(bal, 6) FROM aof "
-    # -- conform_schema (r8): a drifted producer frame (int key, reordered
+    # -- conform_schema: a drifted producer frame (int key, reordered
     # -- columns, missing balance) aligned to the target — int widens to
     # -- bigint, the missing nullable column fills with typed nulls
     "UNION ALL SELECT 'conform', c_custkey, c_name, CAST(NULL AS DOUBLE) "
@@ -994,13 +911,13 @@ def merge_upsert_q(spark, sf):
     """The keyed-mutation family in one entry (all beyond the reference —
     the incremental-refresh primitives of a table-format-less pipeline).
 
-    part='upsert'/'update_only' (r06): sampling.merge_upsert — updates
+    part='upsert'/'update_only': sampling.merge_upsert — updates
     REPLACE matched base rows (negated balance), unmatched updates insert
     (shifted key, '#new' suffix, +0.5 balance); update_only re-runs with
     allow_insert=False so inserts are dropped. Oracle: the literal SQL
     MERGE expansion (anti-semantics via NOT IN over non-null keys).
 
-    part='cdc' (r8 merge, r7 verdict item 1): snapshots.apply_changelog —
+    part='cdc': snapshots.apply_changelog —
     a 3-seq changelog (upserts at 1 and 3, deletes at 2, inserts at 2,
     keys overlapping so supersession is live) applied to the customer
     base; the max_by-over-seq winner + one left-anti join, vs the
@@ -1014,7 +931,7 @@ def merge_upsert_q(spark, sf):
     part='asof': as_of_snapshot(history, t=2) — the time-travel read,
     which the oracle restates as apply_changelog(base, changes with
     seq <= 2): the structural invariant the SCD2 tests assert, here
-    checked by the driver gate against an INDEPENDENT expansion.
+    checked against an INDEPENDENT expansion.
 
     All balance mutations are exact double ops (negation, +1.0, +0.25,
     +0.5), so the value hash is engine-portable under round(,6)."""
@@ -1123,8 +1040,7 @@ def time_features_q(spark, sf):
     midnight (utilities/TimeUtilities.scala:8-15; the string round-trips
     through date_format to exercise the split path), and least() of two
     scores (netflow/FlowPostLDA.scala:115-126 — the src/dst endpoint-score
-    min, here over the two per-event doubles; merged from r04's
-    least_endpoint entry)."""
+    min, here over the two per-event doubles)."""
     from oni_ml_spark.transforms.time import seconds_of_day
 
     e = load_table(spark, sf, "events")
@@ -1137,51 +1053,6 @@ def time_features_q(spark, sf):
         seconds_of_day(F.date_format("ts", "HH:mm:ss")).alias("sec_of_day"),
         F.least(num_time, F.col("value")).alias("min_score"),
     )
-
-
-@_q(
-    "dns_featurize",
-    "SELECT d.doc_id, "
-    "CASE d.doc_id % 4 WHEN 1 THEN 'amazon' WHEN 2 THEN 'forrealz' ELSE 'None' END AS domain, "
-    "CASE d.doc_id % 4 WHEN 1 THEN source WHEN 2 THEN source ELSE 'None' END AS subdomain, "
-    "CASE d.doc_id % 4 WHEN 1 THEN length(source) WHEN 2 THEN length(source) ELSE 0 END::DOUBLE AS subdomain_length, "
-    "CASE d.doc_id % 4 WHEN 0 THEN 6 WHEN 1 THEN 4 WHEN 2 THEN 3 ELSE 2 END::DOUBLE AS num_periods, "
-    "CASE d.doc_id % 4 WHEN 1 THEN 1 ELSE 0 END AS top_domain, "
-    "e.text_entropy "
-    "FROM documents d JOIN ("
-    "  SELECT doc_id, round(entropy(c), 5) AS text_entropy FROM ("
-    "    SELECT doc_id, unnest(string_split(text, '')) AS c FROM documents) "
-    "  GROUP BY doc_id) e ON d.doc_id = e.doc_id",
-)
-def dns_featurize_q(spark, sf):
-    """F5 + F6 + F7 in one pass over synthesized hosts covering the
-    arpa / ccTLD / gTLD / invalid branches: DNS domain/subdomain/length/parts
-    extraction (dns/DNSWordCreation.scala:157-196, which itself subsumes the
-    proxy registered-domain operator, utilities/DomainProcessor.scala:28-49)
-    plus the safelist top-domain flag (dns/DNSWordCreation.scala:147-155;
-    'amazon' is on the top list, arpa/invalid branches extract 'None'). The
-    oracle states each branch's expected value directly.
-
-    Also carries F4, Shannon character entropy of the document text
-    (utilities/Entropy.scala:16-23) in the explode/groupBy formulation
-    (linear in total chars; merged from r04's string_entropy entry — the
-    per-row HOF variant is exercised by the dns featurize tests)."""
-    from oni_ml_spark.transforms import top_domain_expr
-    from oni_ml_spark.transforms.text import entropy_table
-
-    base = _docs(spark, sf)
-    d = _with_host(base)
-    cols = extract_subdomain_cols("host")
-    ent = entropy_table(base, "doc_id", "text").select(
-        F.col("id").alias("doc_id"), F.round("entropy", 5).alias("text_entropy")
-    )
-    feats = d.select(
-        "doc_id", cols["domain"].alias("domain"), cols["subdomain"].alias("subdomain"),
-        cols["subdomain_length"].alias("subdomain_length"),
-        cols["num_periods"].alias("num_periods"),
-        top_domain_expr(extract_domain("host"), ["amazon"]).alias("top_domain"),
-    )
-    return feats.join(ent, "doc_id")
 
 
 _FLOW_WORD_ORACLE = f"""
@@ -1296,14 +1167,11 @@ def dns_word_assembly(spark, sf):
     "UNION ALL SELECT 'canonical', o_custkey, o_orderkey, 1::BIGINT FROM r WHERE rn = 1",
 )
 def window_rank_topn(spark, sf):
-    """Per-group ranking three ways, one oracle (r06 extends the original
-    window entry with the two ranking.py operators — same row_number
-    semantics, different physical plans, all hash-matched):
+    """Per-group ranking three ways, one oracle:
 
     - part='window': the plain rank window (absent in the reference,
       SURVEY.md §2.9 — free in Spark 3) — per-customer top-3 orders.
-      grouped_topk's default k>1 algorithm IS this plan (r07: the Arrow
-      prune was measured 4× slower and removed — SCALE.md §ranking).
+      grouped_topk's default k>1 algorithm IS this plan.
     - part='gtopk': ranking.grouped_topk(algorithm='salted') — identical
       rows through the hot-group-safe two-pass plan (rank within
       (group, partition salt), then rank the ≤k·salts survivors).
@@ -1370,7 +1238,7 @@ def dedup_exact(spark, sf):
       new iff its smallest id is a new doc whose fingerprint is absent
       from the base, which the oracle states as min(doc_id) >= 100 over
       the same digest groups.
-    - part='diff' (r06): snapshots.snapshot_diff + diff_summary of the
+    - part='diff': snapshots.snapshot_diff + diff_summary of the
       corpus against an in-plan derived next snapshot (ids %11 dropped,
       text of %7 edited) — the four status counts land in dup_count with
       the status name in text_key, structural zeros included."""
@@ -1619,25 +1487,25 @@ def text_profile(spark, sf):
     lang_id + quality_metrics + strip_html + mask_pii + fingerprint pass a
     curation pipeline actually runs (no self-join of separate passes).
 
-    r09 adds the C4 line-filtering recipe (textstats.line_filter, Raffel
+    It also adds the C4 line-filtering recipe (textstats.line_filter, Raffel
     et al. 2020 §2.2) over a deterministically planted multi-line version
     of each document (one boilerplate line, one too-short line, one keeper,
     one unterminated line appended): c4_clean is the reassembled cleaned
     text, c4_lines/c4_kept the per-doc line accounting — all codegen HOF
     expressions, value-hashed against DuckDB's list_filter restatement.
 
-    r10 adds unicode normalization (textstats.unicode_normalize_col — the
+    It also adds unicode normalization (textstats.unicode_normalize_col — the
     pass before exact dedup; the text stack's Arrow-path pandas_udf operator): nfc_md5
     / nfc_changed over a planted decomposed suffix, checked
     cross-IMPLEMENTATION (CPython unicodedata vs DuckDB utf8proc).
 
-    r11 adds NFKC (nfkc_md5 / nfkc_folded): the compatibility fold that
+    It also adds NFKC (nfkc_md5 / nfkc_folded): the compatibility fold that
     collapses fullwidth/ligature variants before dedup.  DuckDB lacks
     nfkc_normalize, so the oracle golden-constructs the folded string
     (chr-built, byte-exact) — sound on this ASCII corpus, which the NFC
     hash-match independently verifies.
 
-    r11 also adds the line/paragraph half of Gopher's repetition suite
+    It also adds the line/paragraph half of Gopher's repetition suite
     (textstats.repetition_unit_cols — dup_line_frac / dup_line_char_frac /
     dup_para_frac / dup_para_char_frac, pure zero-shuffle HOF columns)
     over planted within-document repetition; the n-gram half lives in
@@ -1660,7 +1528,7 @@ def text_profile(spark, sf):
         F.lit("@example.com from 10.1.2.3"),
     )
     fp = fingerprint_cols("text")
-    # r10: unicode normalization (the pass before exact dedup) over a
+    # unicode normalization (the pass before exact dedup) over a
     # planted decomposed suffix — 'Cafe' + combining acute + fullwidth
     # ABC; NFC composes the acute (nfc_changed = 1 for every row, the
     # plant is non-vacuous) while keeping the fullwidth letters.  The
@@ -1669,7 +1537,7 @@ def text_profile(spark, sf):
     # of the text stack's designated Arrow-path (pandas_udf) operator.
     utext = F.concat(F.col("text"), F.lit(" Café ＡＢＣ"))
     nfc = unicode_normalize_col(utext, "NFC")
-    # r11: NFKC — the fullwidth/compatibility fold most dedup pipelines
+    # NFKC — the fullwidth/compatibility fold most dedup pipelines
     # actually run.  DuckDB has no nfkc_normalize, so the oracle is the
     # golden construction text || ' Caf\u00e9 ABC' (precomposed acute via
     # chr(233), fullwidth folded to ASCII) — sound because the corpus text
@@ -1691,7 +1559,7 @@ def text_profile(spark, sf):
             "nfc_changed": (nfc != utext).cast("long"),
             "nfkc_md5": F.md5(nfkc),
             "nfkc_folded": (nfkc != nfc).cast("long"),
-            # r11: Gopher's within-doc duplicate line/paragraph rules over
+            # Gopher's within-doc duplicate line/paragraph rules over
             # planted repetition (text twice + a repeated line; a repeated
             # paragraph) — dup fractions constant by construction, char
             # fractions vary with each doc's length, both hash-checked
@@ -1731,80 +1599,6 @@ def text_profile(spark, sf):
     )
 
 
-def _planted_image_headers() -> list[tuple[int, bytes]]:
-    """Five byte-exact REAL image headers (struct-built, no codec lib):
-    PNG 640x360, GIF 320x200, JPEG 1024x768 (SOF0 behind an APP0 segment),
-    BMP 64x48, WebP 480x320 (RIFF/VP8 lossy with the mandatory 9D 01 2A
-    start code).  Negative media_ids keep them disjoint from doc_ids."""
-    png = (
-        b"\x89PNG\r\n\x1a\n" + (13).to_bytes(4, "big") + b"IHDR"
-        + (640).to_bytes(4, "big") + (360).to_bytes(4, "big")
-        + b"\x08\x06\x00\x00\x00"
-    )  # 29 bytes
-    gif = (
-        b"GIF89a" + (320).to_bytes(2, "little") + (200).to_bytes(2, "little")
-        + b"\xf7\x00\x00"
-    )  # 13 bytes
-    jpeg = (
-        b"\xff\xd8"
-        + b"\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00"
-        + b"\x01\x01\x00" + b"\x00\x01\x00\x01" + b"\x00\x00"
-        + b"\xff\xc0" + (17).to_bytes(2, "big") + b"\x08"
-        + (768).to_bytes(2, "big") + (1024).to_bytes(2, "big")
-        + b"\x03\x01\x22\x00\x02\x11\x01\x03\x11\x01"
-        + b"\xff\xd9"
-    )  # 41 bytes
-    bmp = (
-        b"BM" + (26).to_bytes(4, "little") + b"\x00\x00\x00\x00"
-        + (26).to_bytes(4, "little") + (40).to_bytes(4, "little")
-        + (64).to_bytes(4, "little", signed=True)
-        + (48).to_bytes(4, "little", signed=True)
-    )  # 26 bytes
-    vp8_frame = (
-        b"\x30\x01\x00" + b"\x9d\x01\x2a"
-        + (480).to_bytes(2, "little") + (320).to_bytes(2, "little")
-    )
-    webp = (
-        b"RIFF" + (12 + len(vp8_frame)).to_bytes(4, "little") + b"WEBP"
-        + b"VP8 " + len(vp8_frame).to_bytes(4, "little") + vp8_frame
-    )  # 30 bytes
-    return [(-1, png), (-2, gif), (-3, jpeg), (-4, bmp), (-5, webp)]
-
-
-def _planted_av_containers() -> list[tuple[int, bytes]]:
-    """Two byte-exact REAL audio/video container headers (struct-built,
-    no codec lib): a WAV (PCM mono 8 kHz, 32-byte data chunk -> 2 ms) and
-    an MP4 (isom ftyp + moov with mvhd timescale=1000/duration=5000 and a
-    640x360 v0 tkhd video track)."""
-    wav = (
-        b"RIFF" + (68).to_bytes(4, "little") + b"WAVE"
-        + b"fmt " + (16).to_bytes(4, "little")
-        + (1).to_bytes(2, "little") + (1).to_bytes(2, "little")      # PCM, mono
-        + (8000).to_bytes(4, "little") + (16000).to_bytes(4, "little")
-        + (2).to_bytes(2, "little") + (16).to_bytes(2, "little")
-        + b"data" + (32).to_bytes(4, "little") + b"\x00" * 32
-    )  # 76 bytes
-    ftyp = (16).to_bytes(4, "big") + b"ftyp" + b"isom" + (0).to_bytes(4, "big")
-    mvhd_body = (
-        bytes([0, 0, 0, 0]) + (0).to_bytes(8, "big")
-        + (1000).to_bytes(4, "big") + (5000).to_bytes(4, "big")
-        + (0x00010000).to_bytes(4, "big") + (0x0100).to_bytes(2, "big")
-        + b"\x00" * 10 + b"\x00" * 36 + b"\x00" * 24 + (2).to_bytes(4, "big")
-    )
-    mvhd = (8 + len(mvhd_body)).to_bytes(4, "big") + b"mvhd" + mvhd_body
-    tkhd_body = (
-        bytes([0, 0, 0, 7]) + (0).to_bytes(8, "big") + (1).to_bytes(4, "big")
-        + (0).to_bytes(4, "big") + (5000).to_bytes(4, "big")
-        + b"\x00" * 8 + b"\x00" * 8 + b"\x00" * 36
-        + (640 << 16).to_bytes(4, "big") + (360 << 16).to_bytes(4, "big")
-    )
-    tkhd = (8 + len(tkhd_body)).to_bytes(4, "big") + b"tkhd" + tkhd_body
-    trak = (8 + len(tkhd)).to_bytes(4, "big") + b"trak" + tkhd
-    moov = (8 + len(mvhd) + len(trak)).to_bytes(4, "big") + b"moov" + mvhd + trak
-    mp4 = ftyp + moov  # 232 bytes
-    return [(-6, wav), (-7, mp4)]
-
-
 @_q(
     "multimodal_frames",
     "WITH meta AS (SELECT doc_id AS media_id, octet_length(encode(text)) AS n_bytes, "
@@ -1839,14 +1633,14 @@ def multimodal_frames(spark, sf):
     explosion — one row per sampled frame carrying its media's metadata,
     the shape a video/image feature extractor consumes.
 
-    r11: the default decoder is a REAL header parse (pure struct
+    The default decoder is a REAL header parse (pure struct
     arithmetic) with the deterministic stub only as the
-    unrecognized-payload fallback.  r12 extends the real pass across all
+    unrecognized-payload fallback.  It also extends the real pass across all
     three media classes (multimodal.parse_media_container): five planted
     byte-exact image headers (PNG/GIF/JPEG/BMP/WebP) plus a WAV and an
     MP4 container flow through the same Arrow batches as the text
     payloads; the oracle states their true dimensions / sample rate /
-    channels / durations literally, so the gate hash-checks real
+    channels / durations literally, so the compare checks real
     decoding, not just plumbing."""
     from oni_ml_spark.datapipe.multimodal import (
         attach_payload,
@@ -1858,7 +1652,7 @@ def multimodal_frames(spark, sf):
         spark.createDataFrame(
             [
                 (i, bytearray(b))
-                for i, b in _planted_image_headers() + _planted_av_containers()
+                for i, b in planted_image_headers() + planted_av_containers()
             ],
             "media_id long, payload binary",
         )
@@ -1869,241 +1663,6 @@ def multimodal_frames(spark, sf):
         "media_id", "frame_no", "offset", "n_bytes", "format", "width", "height",
         "sample_rate", "channels", "duration_ms",
     )
-
-
-# ---- LDA pipelines: invariant tables (SURVEY.md §7.4.1)
-#
-# Seeded-random LDA can't value-match a SQL oracle, but the pipelines'
-# DETERMINISTIC properties can: the bottom-K size is least(top_k, input rows
-# surviving the pipeline's filters), every score is a probability in [0, 1],
-# every doc-topic mix sums to 1, and the bottom-K really holds the K smallest
-# scores. Each pipeline query emits that one-row invariant table; the oracle
-# states the expected values from the raw input tables — turning the four
-# formerly rows-only entries into hash-checked ones.
-
-
-def _pipeline_invariants(res, threshold: float = 1.0, top_k: int = 100) -> DataFrame:
-    """One-row invariant table for a SuspiciousConnectsResult.
-
-    bottomk_ok: every scored row with score strictly below the bottom-K's
-    max must itself be in the bottom-K, so their count can't exceed n_rows.
-
-    r13 (guide §1.2 step 1): ONE cached score column feeds every leg.
-    Previously ``res.suspicious.select("score")`` and
-    ``res.scored.select("score")`` were cached separately, so the scoring
-    join chain (two broadcast joins + the k-unrolled dot product over the
-    full corpus — twice that for flow's two-endpoint scoring) evaluated
-    TWICE, once to fill each cache. Now the bottom-K score column is
-    re-derived from the cached scored scores: projection to `score`
-    commutes with most_suspicious's filter/sort, and limit-under-ties
-    returns the identical score-value MULTISET (the K smallest values)
-    even when the tied ROWS differ — every aggregate below (count, range
-    check, max) is multiset-invariant, so the invariant row is unchanged.
-    ``threshold``/``top_k`` must match what the pipeline's own
-    most_suspicious call used (all four entries: 1.0 / 100).
-    """
-    from oni_ml_spark.scoring import most_suspicious
-
-    scored = res.scored.select("score").cache()
-    susp = most_suspicious(scored, threshold=threshold, top_k=top_k)
-    s = susp.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(
-            F.when(
-                (F.col("score") < 0) | (F.col("score") > 1) | F.col("score").isNull(), 1
-            ).otherwise(0)
-        ).cast("long").alias("n_bad_score"),
-        F.max("score").alias("__mx"),
-    )
-    mix_sum = F.aggregate(F.col("topic_mix"), F.lit(0.0), lambda a, x: a + x)
-    m = res.model.doc_topic_mix.agg(
-        F.sum(F.when(F.abs(mix_sum - 1.0) > 1e-6, 1).otherwise(0))
-        .cast("long").alias("n_bad_mix")
-    )
-    below = scored.crossJoin(F.broadcast(s.select("__mx"))).agg(
-        F.sum(F.when(F.col("score") < F.col("__mx"), 1).otherwise(0))
-        .cast("long").alias("__n_below")
-    )
-    return (
-        s.crossJoin(m).crossJoin(below).select(
-            "n_rows", "n_bad_score", "n_bad_mix",
-            F.when(F.col("__n_below") <= F.col("n_rows"), F.lit(1))
-            .otherwise(F.lit(0)).cast("long").alias("bottomk_ok"),
-        )
-    )
-
-
-def _invariant_oracle(count_from: str, top_k: int = 100) -> str:
-    return (
-        f"SELECT CAST(least({top_k}, (SELECT count(*) FROM {count_from})) AS BIGINT) AS n_rows, "
-        "CAST(0 AS BIGINT) AS n_bad_score, CAST(0 AS BIGINT) AS n_bad_mix, "
-        "CAST(1 AS BIGINT) AS bottomk_ok"
-    )
-
-
-def flagship(spark, sf):
-    """End-to-end suspicious-connects on the events table (featurize → LDA →
-    score → bottom-K) — the __spark_entry__.entry() smoke query."""
-    from oni_ml_spark.io import widen_if_narrow
-    from oni_ml_spark.pipelines import events as ev
-
-    df = widen_if_narrow(load_table(spark, sf, "events"))
-    res = ev.run(df, topic_count=10, top_k=100, max_iter=5, exact_quantiles=False)
-    return res.suspicious.select(
-        "event_id", "user_id", "word", F.round("score", 6).alias("score")
-    )
-
-
-@_q("flagship_invariants", _invariant_oracle("events"))
-def flagship_invariants(spark, sf):
-    """Flagship events pipeline, checked through its invariant table: the
-    events table has no nulls, so the bottom-K size is least(100, |events|);
-    scores are probabilities; topic mixes are simplexes; bottom-K holds the
-    K smallest scores."""
-    from oni_ml_spark.io import widen_if_narrow
-    from oni_ml_spark.pipelines import events as ev
-
-    df = widen_if_narrow(load_table(spark, sf, "events"))
-    res = ev.run(df, topic_count=10, top_k=100, max_iter=5, exact_quantiles=False)
-    return _pipeline_invariants(res)
-
-
-@_q("flow_pipeline_invariants", _invariant_oracle("lineitem"))
-def flow_pipeline_invariants(spark, sf):
-    """Full flow pipeline over netflow synthesized from lineitem, checked via
-    invariants (synthesized times always satisfy valid_time_filter and every
-    endpoint appears in training, so the inner-join quirk drops nothing —
-    n_rows = least(100, |lineitem|)). Exercises featurize → both-endpoint
-    corpus → LDA → inner-join scoring → least() → bottom-K."""
-    from oni_ml_spark.io import widen_if_narrow
-    from oni_ml_spark.pipelines import flow as flow_pipe
-
-    li = widen_if_narrow(load_table(spark, sf, "lineitem"))
-    df = li.select(
-        F.lit("2016-05-05 12:00:00").alias("treceived"),
-        F.lit(2016).alias("tryear"), F.lit(5).alias("trmonth"), F.lit(5).alias("trday"),
-        (F.col("l_orderkey") % 24).cast("int").alias("trhour"),
-        (F.col("l_partkey") % 60).cast("int").alias("trminute"),
-        (F.col("l_suppkey") % 60).cast("int").alias("trsec"),
-        F.lit(0.0).alias("tdur"),
-        F.concat_ws(".", F.lit("10"), F.lit("0"), (F.col("l_partkey") % 16).cast("string"),
-                    (F.col("l_suppkey") % 16).cast("string")).alias("sip"),
-        F.concat_ws(".", F.lit("10"), F.lit("1"), (F.col("l_suppkey") % 16).cast("string"),
-                    (F.col("l_orderkey") % 16).cast("string")).alias("dip"),
-        # realistic port mix: mostly ephemeral client → small server-port set;
-        # rare privileged/zero source ports keep every adjustPort branch live
-        # without exploding the word vocabulary (word_port is a word component)
-        F.when(F.col("l_partkey") % 211 == 0, F.lit(0))
-        .when(F.col("l_partkey") % 101 == 0, (F.col("l_partkey") % 1024).cast("int"))
-        .otherwise(F.lit(1025) + (F.col("l_partkey") % 60000).cast("int"))
-        .cast("int").alias("sport"),
-        # no 0 here: dport=0 makes word_port = the (ephemeral, near-unique)
-        # sport and explodes the vocabulary; zero-port coverage comes from
-        # the rare sport branch above
-        F.element_at(
-            F.array(*[F.lit(p) for p in (80, 443, 22, 53, 25, 110, 8080, 8443)]),
-            (F.col("l_orderkey") % 8).cast("int") + 1,
-        ).cast("int").alias("dport"),
-        F.lit("TCP").alias("proto"), F.lit(".AP...").alias("flag"),
-        (F.col("l_quantity") * 100).cast("long").alias("ipkt"),
-        (F.col("l_extendedprice")).cast("long").alias("ibyt"),
-    )
-    res = flow_pipe.run(df, topic_count=5, top_k=100, max_iter=3, exact_quantiles=False)
-    return _pipeline_invariants(res)
-
-
-# --------------------------------------------------------------------------
-# round-1 widening: remaining §2 operators + composite analytics
-# --------------------------------------------------------------------------
-
-@_q(
-    "doc_word_profile",
-    "SELECT user_id, string_agg(DISTINCT event_type, ' ' ORDER BY event_type) AS words, "
-    "count(*) AS total_words, count(DISTINCT event_type) AS distinct_words "
-    "FROM events GROUP BY user_id",
-)
-def doc_word_profile(spark, sf):
-    """A3 + A4 in one grouped pass: per-doc word-list concatenation (the
-    LDA-C line builder, OniLDACWrapper.scala:156-161 — collect_set +
-    array_join, in-cluster) and words-per-document totals
-    (OniLDACWrapper.scala:149-154)."""
-    return (
-        load_table(spark, sf, "events")
-        .groupBy("user_id")
-        .agg(
-            F.array_join(F.array_sort(F.collect_set("event_type")), " ").alias("words"),
-            F.count(F.lit(1)).alias("total_words"),
-            F.countDistinct("event_type").alias("distinct_words"),
-        )
-    )
-
-
-# Q1 and Q3, normalized to one (q, k1, k2, v1, v2, cnt) schema so both live
-# in a single battery entry (r05 merge of tpch_q1_like + tpch_q3_like).
-_TPCH_Q1_SQL = (
-    "SELECT 'q1' AS q, l_returnflag AS k1, l_linestatus AS k2, "
-    "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS v1, "
-    "CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS v2, "
-    "count(*) AS cnt "
-    "FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02' "
-    "GROUP BY l_returnflag, l_linestatus"
-)
-
-_TPCH_Q3_SQL = (
-    "SELECT 'q3' AS q, CAST(o.o_orderkey AS STRING) AS k1, "
-    "CAST(o.o_orderdate AS STRING) AS k2, "
-    "CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS v1, "
-    "CAST(NULL AS DOUBLE) AS v2, CAST(NULL AS BIGINT) AS cnt "
-    "FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey "
-    "JOIN lineitem l ON l.l_orderkey = o.o_orderkey "
-    "WHERE c.c_mktsegment = 'BUILDING' "
-    "GROUP BY o.o_orderkey, o.o_orderdate "
-    "ORDER BY v1 DESC, o.o_orderkey LIMIT 10"
-)
-
-
-# the Q3 side is a subquery so its ORDER BY/LIMIT binds to Q3, not the union
-@_q("tpch_q1_q3", f"{_TPCH_Q1_SQL} UNION ALL SELECT * FROM ({_TPCH_Q3_SQL})")
-def tpch_q1_q3(spark, sf):
-    """Composite (r05 merge of tpch_q1_like + tpch_q3_like): the Q1-shaped
-    pricing summary (filter + wide decimal-exact aggregate) runs through the
-    SQL surface — the IDENTICAL ANSI text executes on spark.sql over
-    registered temp views and on the DuckDB oracle, dialect-portable by
-    construction — while the Q3-shaped shipping-priority query (selective
-    dim filter → broadcast join → equi join to fact → grouped decimal-exact
-    agg → top-K; J1, the battery's equi-join evidence) stays DataFrame-API
-    with an explicit broadcast() on the filtered dim. Both normalize to one
-    (q, k1, k2, v1, v2, cnt) schema; NULL slots are typed casts so the union
-    schema is stable."""
-    from oni_ml_spark.sql import register_testdata, sql
-
-    register_testdata(spark, sf, ["lineitem"])
-    q1 = sql(spark, _TPCH_Q1_SQL)
-
-    c = load_table(spark, sf, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = load_table(spark, sf, "orders")
-    li = load_table(spark, sf, "lineitem")
-    q3 = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-            ).cast("double").alias("v1")
-        )
-        .orderBy(F.desc("v1"), F.col("o_orderkey"))
-        .limit(10)
-        .select(
-            F.lit("q3").alias("q"),
-            F.col("o_orderkey").cast("string").alias("k1"),
-            F.col("o_orderdate").cast("string").alias("k2"),
-            "v1",
-            F.lit(None).cast("double").alias("v2"),
-            F.lit(None).cast("long").alias("cnt"),
-        )
-    )
-    return q1.unionByName(q3)
 
 
 _PROXY_WORD_ORACLE = (
@@ -2159,87 +1718,8 @@ def proxy_word_assembly(spark, sf):
     )
 
 
-@_q("dns_pipeline_invariants", _invariant_oracle("events"))
-def dns_pipeline_invariants(spark, sf):
-    """Full DNS pipeline over records synthesized from events, checked via
-    invariants (frame_time/unix_tstamp synthesized non-null, so null_filter
-    drops nothing — n_rows = least(100, |events|)). Query names mix
-    benign/ccTLD/arpa/high-entropy shapes so every featurization branch
-    runs."""
-    from oni_ml_spark.io import widen_if_narrow
-    from oni_ml_spark.pipelines import dns as dns_pipe
-
-    e = widen_if_narrow(load_table(spark, sf, "events"))
-    df = e.select(
-        F.date_format("ts", "MMM d yyyy HH:mm:ss").alias("frame_time"),
-        F.unix_timestamp("ts").alias("unix_tstamp"),
-        (F.lit(40) + (F.col("value") * 10).cast("int") % 1400).alias("frame_len"),
-        F.concat(F.lit("10.0.0."), (F.col("user_id") % 32).cast("string")).alias("ip_dst"),
-        F.lit("8.8.8.8").alias("ip_src"),
-        F.when(F.col("event_id") % 17 == 0, F.lit("123.103.104.10.in-addr.arpa"))
-        .when(F.col("event_id") % 13 == 0,
-              F.concat(F.md5(F.col("event_id").cast("string")), F.lit(".evil.net")))
-        .when(F.col("event_id") % 3 == 0,
-              F.concat(F.col("event_type"), F.lit(".amazon.com.mx")))
-        .otherwise(F.concat(F.col("event_type"), F.lit(".example.com"))).alias("dns_qry_name"),
-        F.lit("0x00000001").alias("dns_qry_class"),
-        F.when(F.col("event_id") % 5 == 0, F.lit(28)).otherwise(F.lit(1)).cast("int").alias("dns_qry_type"),
-        F.when(F.col("event_id") % 11 == 0, F.lit(3)).otherwise(F.lit(0)).cast("int").alias("dns_qry_rcode"),
-        F.lit("1.2.3.4").alias("dns_a"),
-    )
-    res = dns_pipe.run(
-        df, top_domains=["amazon", "example"], topic_count=5, top_k=100,
-        max_iter=3, exact_quantiles=False,
-    )
-    return _pipeline_invariants(res)
-
-
-@_q("proxy_pipeline_invariants", _invariant_oracle("events"))
-def proxy_pipeline_invariants(spark, sf):
-    """Full proxy pipeline over records synthesized from events, checked via
-    invariants (p_date/p_time/clientip synthesized non-null, so null_filter
-    drops nothing — n_rows = least(100, |events|)). Skewed useragent
-    distribution exercises the agent-count feature."""
-    from oni_ml_spark.io import widen_if_narrow
-    from oni_ml_spark.pipelines import proxy as proxy_pipe
-
-    e = widen_if_narrow(load_table(spark, sf, "events"))
-    df = e.select(
-        F.lit("2016-05-05").alias("p_date"),
-        F.date_format("ts", "HH:mm:ss").alias("p_time"),
-        F.concat(F.lit("10.0.0."), (F.col("user_id") % 32).cast("string")).alias("clientip"),
-        F.when(F.col("event_id") % 13 == 0,
-               F.concat(F.md5(F.col("event_id").cast("string")), F.lit(".evil.net")))
-        .otherwise(F.concat(F.col("event_type"), F.lit(".amazon.com"))).alias("host"),
-        F.when(F.col("event_id") % 7 == 0, F.lit("POST")).otherwise(F.lit("GET")).alias("reqmethod"),
-        F.when(F.col("event_id") % 29 == 0,
-               F.concat(F.lit("rare-agent/"), (F.col("event_id") % 97).cast("string")))
-        .otherwise(F.lit("Mozilla/5.0")).alias("useragent"),
-        F.when(F.col("event_id") % 2 == 0, F.lit("text/html"))
-        .otherwise(F.lit("image/png")).alias("resconttype"),
-        F.lit(100).cast("int").alias("duration"),
-        F.lit("-").alias("username"), F.lit("-").alias("authgroup"),
-        F.lit("-").alias("exceptionid"), F.lit("OBSERVED").alias("filterresult"),
-        F.lit("Shopping").alias("webcat"), F.lit("-").alias("referer"),
-        F.when(F.col("event_id") % 19 == 0, F.lit("503")).otherwise(F.lit("200")).alias("respcode"),
-        F.lit("TCP_HIT").alias("action"), F.lit("http").alias("urischeme"),
-        F.lit("80").alias("uriport"), F.lit("/").alias("uripath"),
-        F.lit("-").alias("uriquery"), F.lit("html").alias("uriextension"),
-        F.lit("1.1.1.1").alias("serverip"),
-        F.lit(1000).cast("int").alias("scbytes"), F.lit(300).cast("int").alias("csbytes"),
-        F.lit("-").alias("virusid"), F.lit("-").alias("bcappname"), F.lit("-").alias("bcappoper"),
-        F.concat(F.lit("http://"), F.col("event_type"), F.lit(".amazon.com/"),
-                 F.col("props")).alias("fulluri"),
-    )
-    res = proxy_pipe.run(
-        df, top_domains=["amazon"], topic_count=5, top_k=100,
-        max_iter=3, exact_quantiles=False,
-    )
-    return _pipeline_invariants(res)
-
-
 # --------------------------------------------------------------------------
-# round-1 widening #2: sampling / splits / sessionization / text cleaning
+# sampling / splits / sessionization / text cleaning
 # --------------------------------------------------------------------------
 
 @_q(
@@ -2283,7 +1763,7 @@ def proxy_pipeline_invariants(spark, sf):
     "      % 4611686018427387904, doc_id) AS rn FROM documents) "
     "WHERE rn <= 25 "
     "UNION ALL "
-    # wsample (r8): Efraimidis-Spirakis without replacement — the k earliest
+    # wsample: Efraimidis-Spirakis without replacement — the k earliest
     # exponential clocks -ln(u)/w with the portable md5-derived uniform;
     # identical single ops on both engines, ordering decided far from ulps
     "SELECT 'wsample', doc_id::VARCHAR, 1, doc_id FROM ("
@@ -2292,7 +1772,7 @@ def proxy_pipeline_invariants(spark, sf):
     "        + 1.0) / 4294967298.0) / (doc_id % 7 + 1), doc_id) AS rn "
     "  FROM documents) WHERE rn <= 25 "
     "UNION ALL "
-    # budget (r8): greedy prefix selection to a 60k-token budget in
+    # budget: greedy prefix selection to a 60k-token budget in
     # descending quality order (distinct synthetic quality, so the hash
     # tie-break never engages and the prefix is fully determined)
     "SELECT 'budget', doc_id::VARCHAR, 1, doc_id FROM ("
@@ -2301,7 +1781,7 @@ def proxy_pipeline_invariants(spark, sf):
     "    ROWS UNBOUNDED PRECEDING) AS run FROM documents) "
     "WHERE run <= 60000 "
     "UNION ALL "
-    # lsplit (r8): leakage-safe split — hash_split keyed on the near-dup
+    # lsplit: leakage-safe split — hash_split keyed on the near-dup
     # cluster id with self-cluster fallback for uncovered rows
     "SELECT 'lsplit', split, count(*), sum(doc_id)::BIGINT FROM ("
     "  SELECT doc_id, CASE "
@@ -2313,7 +1793,7 @@ def proxy_pipeline_invariants(spark, sf):
     "    SELECT doc_id, CASE WHEN doc_id % 5 < 2 THEN doc_id - doc_id % 5 "
     "      ELSE doc_id END AS cl FROM documents))) "
     "GROUP BY split "
-    # -- dmatch (r9): sampling.match_distribution — resample the doc_id%3!=0
+    # -- dmatch: sampling.match_distribution — resample the doc_id%3!=0
     # -- corpus to the %3==0 reference's n_chars shape; per-bin acceptance
     # -- rate = ratio/max(ratio) from the two bounded histograms (identical
     # -- double arithmetic both engines), deterministic md5 draw
@@ -2353,25 +1833,25 @@ def deterministic_sampling(spark, sf):
       other languages dropped) with the salted key hash;
     - deterministic_k_sample: exactly min(k, |group|) rows per source by
       salted md5 rank;
-    - deterministic_shuffle (r05): the global md5-keyed pseudo-random
+    - deterministic_shuffle: the global md5-keyed pseudo-random
       ordering — verified by the (key, rank) pairs of its first 20 rows
       (the prefix is rank-computed AFTER limit(20), so the verification
       window is k-bounded, never a global single-partition window);
-    - deterministic_global_sample (r05): exactly 25 rows by salted md5
+    - deterministic_global_sample: exactly 25 rows by salted md5
       rank, planned as TakeOrderedAndProject;
-    - weighted_sample_k (r8 merge, r7 verdict item 1): Efraimidis-Spirakis
+    - weighted_sample_k: Efraimidis-Spirakis
       A-ES weighted sampling without replacement over hash-derived
       exponential clocks (hash_fn='md5', the engine-portable draw) —
       TakeOrderedAndProject again, never a global sort;
-    - select_to_token_budget (r8): greedy selection to a 60k-token budget
+    - select_to_token_budget: greedy selection to a 60k-token budget
       by descending synthetic quality — bucketed aggregate + driver
       cumsum, the exact window only over the boundary bucket; quality is
       DISTINCT per doc so the oracle is a pure prefix-cumsum;
-    - leakage_safe_split (r8): hash_split keyed on a (partly synthetic)
+    - leakage_safe_split: hash_split keyed on a (partly synthetic)
       near-dup cluster table with the coalesce(cluster, id) fallback —
       docs with doc_id%5<2 share planted clusters, the rest exercise the
       self-cluster fallback path;
-    - match_distribution (r9): the %3!=0 corpus resampled to the %3==0
+    - match_distribution: the %3!=0 corpus resampled to the %3==0
       reference's n_chars shape — per-bin acceptance rate ratio/max(ratio)
       from two bounded histograms, deterministic md5 draw; the per-bin
       (cnt, id_sum) rows pin the exact kept set."""
@@ -2462,7 +1942,7 @@ def deterministic_sampling(spark, sf):
         .agg(F.count(F.lit(1)).alias("cnt"), F.sum("doc_id").alias("id_sum"))
         .select(F.lit("lsplit").alias("part"), F.col("split").alias("key"), "cnt", "id_sum")
     )
-    # dmatch (r9): distribution-matching resampler — reshape the
+    # dmatch: distribution-matching resampler — reshape the
     # doc_id%3!=0 corpus to the %3==0 reference's n_chars histogram;
     # per-bin (cnt, id_sum) pins the exact kept SET
     from oni_ml_spark.datapipe.drift import _bin_expr
@@ -2501,7 +1981,7 @@ def deterministic_sampling(spark, sf):
     "        lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM events)) "
     # session_no::BIGINT: DuckDB's windowed sum(CASE...) yields HUGEINT, which
     # hash-mismatches Spark's BIGINT even when values are identical (same trap
-    # as pivot_counts in r2 — see BASELINE.md oracle-authoring notes).
+    # as any windowed sum).
     "SELECT user_id, session_no::BIGINT AS session_no, count(*) AS n_events "
     "FROM s GROUP BY user_id, session_no",
 )
@@ -2533,7 +2013,7 @@ def sessionize_q(spark, sf):
     "  coalesce(l_linestatus, 'ALL') AS ls, count(*) AS cnt, "
     "  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty "
     "  FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)), "
-    # -- incremental aggregates (r8): the 3-batch merged state must finalize
+    # -- incremental aggregates: the 3-batch merged state must finalize
     # -- to the one-shot statistics; l_quantity is integral so sum/sumsq are
     # -- exact doubles and the stddev formula below is the literal finalize
     # -- arithmetic, identical on both engines
@@ -2553,14 +2033,14 @@ def sessionize_q(spark, sf):
 def rollup_agg(spark, sf):
     """Hierarchical + incremental aggregation in one entry.
 
-    part='rollup' (the r03 entry): ROLLUP grouping sets — absent in the
+    part='rollup': ROLLUP grouping sets — absent in the
     reference (SURVEY.md §2.4 'no grouping sets/cube/rollup'), native in
     Spark SQL.
 
-    part='incr' (r8 merge, r7 verdict item 1: datapipe.incremental): the
+    part='incr': the
     lineitem corpus split into 3 batches (l_linenumber mod 3), each
     partial-aggregated, states merged pairwise, then finalized — the
-    daily-refresh-without-rescanning-history primitive. The driver row
+    daily-refresh-without-rescanning-history primitive. The row
     checks merge(partials) == one-shot statistics per l_returnflag
     (count/avg/stddev/min/max; sums are exact because l_quantity is
     integral, so the oracle can restate finalize's literal arithmetic)."""
@@ -2612,31 +2092,6 @@ def rollup_agg(spark, sf):
         .unionByName(stat_rows("max", "l_quantity_max", False))
     )
     return roll.unionByName(incr)
-
-
-@_q(
-    "pivot_counts",
-    "SELECT user_id, "
-    "sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)::BIGINT AS click, "
-    "sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)::BIGINT AS error, "
-    "sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS purchase, "
-    "sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)::BIGINT AS signup, "
-    "sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)::BIGINT AS view "
-    "FROM events GROUP BY user_id",
-)
-def pivot_counts(spark, sf):
-    """Pivoted per-user event-type counts (groupBy().pivot() — wide feature
-    table construction). Pivot values pinned for a deterministic schema."""
-    e = load_table(spark, sf, "events")
-    kinds = ["click", "error", "purchase", "signup", "view"]
-    out = (
-        e.groupBy("user_id")
-        .pivot("event_type", kinds)
-        .agg(F.count(F.lit(1)))
-    )
-    return out.select(
-        "user_id", *[F.coalesce(F.col(k), F.lit(0)).cast("long").alias(k) for k in kinds]
-    )
 
 
 # Shared CTE chain: banded-LSH candidates → exact-Jaccard verified pairs at
@@ -2696,11 +2151,11 @@ _FUZZY_CTES = (
 def near_dup_verified(spark, sf):
     """The pairwise near-duplicate family, one granularity per part.
 
-    part='jaccard' (the r02 entry): banded-LSH candidates → exact
+    part='jaccard': banded-LSH candidates → exact
     token-Jaccard verification of candidates only (dedup.near_dup_pairs,
     the SCALE.md flow).
 
-    part='edit' (r8 merge, r7 verdict item 1): datapipe.fuzzy.fuzzy_join —
+    part='edit': datapipe.fuzzy.fuzzy_join —
     the Gravano positional q-gram filter + exact levenshtein verify, as a
     self-join over the distinct part-name corpus with planted first-char
     typos. The oracle is the all-pairs cross-join predicate the filter
@@ -2714,14 +2169,13 @@ def near_dup_verified(spark, sf):
     from oni_ml_spark.datapipe.dedup import near_dup_pairs
     from oni_ml_spark.datapipe.fuzzy import fuzzy_dedup_groups, fuzzy_join
 
-    # r13 (guide §2.6, VERDICT r12 item 6): the entry is two INDEPENDENT
+    # the entry is two INDEPENDENT
     # eager chains — the jaccard leg over `documents` (LSH + verify) and
     # the fuzzy/CC chain over `part` (corpus pin → gram-guard collect →
     # epairs pin → per-round CC checkpoints — ~6 serial driver-blocking
-    # jobs on a ~770-row fixture). They used to run back to back: the CC
-    # chain's eager jobs all completed before the final union write even
-    # started the jaccard machinery. Submitting both legs from a 2-thread
-    # pool lets the scheduling-bound CC tail backfill the jaccard leg's
+    # jobs on a ~770-row fixture). Run back to back, the CC chain's eager
+    # jobs all complete before the final union write even starts the
+    # jaccard machinery; submitting both legs from a 2-thread pool lets the scheduling-bound CC tail backfill the jaccard leg's
     # stages. The jaccard leg is pinned (localCheckpoint preserves rows;
     # the oracle is order-insensitive) so its heavy subtree executes
     # inside the overlapped region, not serially in the final write.
@@ -2803,9 +2257,8 @@ def robust_stats_q(spark, sf):
 
 
 # --------------------------------------------------------------------------
-# round-4 widening: driver rows for the round-3 operators (tf-idf/bm25,
-# unigram LM, grouped quantiles, simhash pairs, near-dup clustering, as-of
-# join) + the end-to-end curation pipeline
+# retrieval and dedup operators (tf-idf/bm25, unigram LM, simhash pairs,
+# near-dup clustering, as-of join)
 # --------------------------------------------------------------------------
 
 _QUERY_TERMS = ["scan", "column", "order", "scan"]  # 'scan' ×2 → qtf weighting live
@@ -2847,7 +2300,7 @@ _TFC_CTES = (
     "fused AS (SELECT id, sum(t) AS s, count(*)::BIGINT AS nl FROM rterms GROUP BY id), "
     "rrfr AS (SELECT id, round(s, 9) AS v1, nl, "
     "  row_number() OVER (ORDER BY s DESC, id)::BIGINT AS r FROM fused), "
-    # -- top_terms_per_group (r8): per-source top-5 characteristic terms by
+    # -- top_terms_per_group: per-source top-5 characteristic terms by
     # -- summed tf-idf, per-row contributions quantized to 1e-6 BEFORE the
     # -- sum so ranking and value are order- and engine-deterministic
     "lab AS (SELECT doc_id AS id, source FROM documents), "
@@ -2866,16 +2319,15 @@ _TFC_CTES = (
     "CAST(NULL AS DOUBLE), ndoc, rnk FROM tt WHERE rnk <= 5",
 )
 def tf_idf_bm25(spark, sf):
-    """TF-IDF + BM25 + RRF hybrid fusion in one driver entry.
+    """TF-IDF + BM25 + RRF hybrid fusion in one entry.
 
-    part='scores' (the r04 entry, columns renamed v1/v2/n — see COVERAGE
-    round-7 renames): per-document Okapi BM25 for a literal query (with a
+    part='scores': per-document Okapi BM25 for a literal query (with a
     REPEATED term, so query-term-frequency weighting is exercised) joined
     with the summed sklearn-convention tf-idf weight of the matched terms.
     Both operators' full plans execute — two hash aggregates each,
     IDF/stat tables broadcast, no UDFs.
 
-    part='rrf' (r07, VERDICT r6 item 1: datapipe.retrieval.rrf_fuse): the
+    part='rrf': the
     production hybrid-retrieval composition — the BM25 lexical top-10
     (TakeOrderedAndProject, then a rank window over ten rows) fused with
     the exact cosine vector top-10 for embeddings query vec_id=0
@@ -2883,10 +2335,9 @@ def tf_idf_bm25(spark, sf):
     oracle restates the fusion as pure rank arithmetic: 1/(60+rank) terms
     are identical single divisions on both engines, and the <=2-term sum
     is commutative-exact; every candidate value sits >=3.7e-3 (in 1e-9
-    units) from the round-9 boundary.
+    units) from the 9th-decimal rounding boundary.
 
-    part='topterms' (r8 merge, r7 verdict item 1:
-    datapipe.retrieval.top_terms_per_group): the per-source top-5
+    part='topterms': the per-source top-5
     characteristic terms by summed tf-idf (min_df=2), contributions
     quantized to 1e-6 BEFORE summing so both the ranking and the value
     are engine- and order-deterministic; id becomes 'source/term' and the
@@ -2902,7 +2353,7 @@ def tf_idf_bm25(spark, sf):
 
     d = _docs(spark, sf)
     qset = list(dict.fromkeys(_QUERY_TERMS))
-    # ONE corpus pass for all three lexical operators (r12, guide §1.2):
+    # ONE corpus pass for all three lexical operators:
     # tf-idf, BM25, and top-terms each start from the same (id, term, tf)
     # postings — share a cached copy instead of re-running the tokenize →
     # explode → shuffle chain once per operator. Bounded: one row per
@@ -2923,9 +2374,9 @@ def tf_idf_bm25(spark, sf):
     # tokenize+tf+idf subtree evaluates once per consumer (plan_report
     # showed 55 exchanges before the pin). Bounded: one row per doc
     # matching a query term.
-    # r13: cache(), not an eager localCheckpoint — same compute-once
-    # sharing between the two consumers, without a driver-blocking pin job
-    # at construction (A/B'd in OPTIMIZATION_r13.md).
+    # cache(), not an eager localCheckpoint — same compute-once
+    # sharing between the two consumers, without a blocking pin job
+    # at construction.
     bm = bm25_scores(d, "doc_id", "text", _QUERY_TERMS, tf=tfc).cache()
     null_l = F.lit(None).cast("long")
     scores = bm.join(qa, "id").select(
@@ -2998,7 +2449,7 @@ def unigram_logprob_q(spark, sf):
     "  FROM lineitem GROUP BY l_returnflag), "
     "cuts AS (SELECT key, ([0.25, 0.5, 0.75, 1.0]::DOUBLE[])[i] AS p, "
     "  cs[i]::DOUBLE AS v FROM g, (SELECT unnest([1, 2, 3, 4]) AS i) idx), "
-    # -- winsorize (r8): clamp to the per-group exact [0.05, 0.95] discrete
+    # -- winsorize: clamp to the per-group exact [0.05, 0.95] discrete
     # -- cutoffs; l_quantity is integral so the clipped sum is exact
     "wb AS (SELECT l_returnflag AS key, quantile_disc(l_quantity, 0.05) AS lo, "
     "  quantile_disc(l_quantity, 0.95) AS hi FROM lineitem GROUP BY l_returnflag), "
@@ -3010,7 +2461,7 @@ def unigram_logprob_q(spark, sf):
     "winsorf AS (SELECT wz.key, count(*)::DOUBLE AS p, sum(l_quantity)::DOUBLE AS v "
     "  FROM wz JOIN wb ON wz.key = wb.key "
     "  WHERE l_quantity >= wb.lo AND l_quantity <= wb.hi GROUP BY wz.key), "
-    # -- percentile_rank (r8): exact cume_dist without a global sort; the
+    # -- percentile_rank: exact cume_dist without a global sort; the
     # -- quantized per-row ranks (cum/tot is the identical int division on
     # -- both engines) sum exactly as integer-valued doubles
     "pr AS (SELECT l_returnflag AS key, "
@@ -3030,12 +2481,12 @@ def unigram_logprob_q(spark, sf):
 def grouped_quantile_cuts_q(spark, sf):
     """The exact-quantile transform family over (l_returnflag, l_quantity).
 
-    part='cuts' (the r04 entry, cutoff column renamed v): per-group EXACT
+    part='cuts': per-group EXACT
     discrete quantile cutoffs, fully distributed (window partitioned by
     group — no per-group loop, no single-partition exchange; plan asserted
     in tests/test_quantiles_property.py). DuckDB twin: quantile_disc.
 
-    part='winsor'/'winsorf' (r8 merge, r7 verdict item 1):
+    part='winsor'/'winsorf':
     transforms.quantiles.winsorize in clip and filter modes against the
     per-group [0.05, 0.95] cutoffs — the cutoff table is 2 rows per group
     joined back, the corpus never re-shuffles. l_quantity is integral, so
@@ -3054,18 +2505,16 @@ def grouped_quantile_cuts_q(spark, sf):
     )
 
     li = load_table(spark, sf, "lineitem")
-    # r12 (guide §1.2): the cuts part and BOTH winsorize calls read the
+    # the cuts part and BOTH winsorize calls read the
     # SAME per-group distinct-value CDF table — build it once, pin it
     # (bounded: |distinct (flag, quantity)| rows), and share it so the
     # full-data (key, value) shuffle runs once, not three times. Every
     # parts column is an exact count/prefix-sum; the default (parts=None)
     # paths recompute the identical table.
-    # r13 (VERDICT item 7): cache() instead of localCheckpoint() — the
-    # eager pin was a driver-blocking barrier job that cost more than the
-    # saved shuffle at sf0.1 (the entry was slower on BOTH core counts in
-    # r12). A lazy cache keeps the compute-once sharing with no barrier:
-    # the first consumer inside the single final job fills it. A/B'd in
-    # OPTIMIZATION_r13.md.
+    # cache(), not localCheckpoint(): an eager pin is a blocking barrier
+    # job that cost more than the saved shuffle at sf0.1. A lazy cache keeps
+    # the compute-once sharing with no barrier: the first consumer inside
+    # the single final job fills it.
     ct = _cdf_table(
         li.select(
             F.col("l_returnflag").alias("key"), F.col("l_quantity").alias("value")
@@ -3137,9 +2586,9 @@ def simhash_near_dups_q(spark, sf):
     from oni_ml_spark.datapipe.dedup import simhash64, simhash_near_dups
 
     d = _docs(spark, sf)
-    # r12 (guide §1.2): the band self-join consumes the fingerprint
+    # the band self-join consumes the fingerprint
     # subtree twice (stream + broadcast build) — share the (id, simhash)
-    # table so the tokenize + 64-bitplane aggregation runs once. r13:
+    # table so the tokenize + 64-bitplane aggregation runs once.
     # cache() instead of an eager localCheckpoint pin (no barrier job;
     # the self-join's first side fills it, the second side reads it).
     fp = simhash64(d, "doc_id", "text").cache()
@@ -3185,13 +2634,13 @@ def near_dup_clusters_q(spark, sf):
     "  WHERE event_id % 10 = 0 GROUP BY user_id, ts), "
     "a1 AS (SELECT l.event_id, epoch(r.rt) AS mt, r.rv "
     "  FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND r.rt <= l.ts), "
-    # -- composite-key as-of (r8): same shape keyed on (user_id, event_type)
+    # -- composite-key as-of: same shape keyed on (user_id, event_type)
     "r2 AS (SELECT user_id, event_type, ts AS rt, max(value) AS rv FROM events "
     "  WHERE event_id % 7 = 0 GROUP BY user_id, event_type, ts), "
     "a2 AS (SELECT l.event_id, epoch(r2.rt) AS mt, r2.rv FROM l "
     "  ASOF LEFT JOIN r2 ON l.user_id = r2.user_id "
     "  AND l.event_type = r2.event_type AND r2.rt <= l.ts), "
-    # -- resample (r8): per-user daily grid inside the user's own span,
+    # -- resample: per-user daily grid inside the user's own span,
     # -- forward-filled with a 2-day staleness cutoff
     "ded AS (SELECT user_id, epoch(ts) AS rt, max(value) AS v FROM events "
     "  WHERE user_id IS NOT NULL AND ts IS NOT NULL GROUP BY user_id, epoch(ts)), "
@@ -3214,17 +2663,17 @@ def near_dup_clusters_q(spark, sf):
 def as_of_join_q(spark, sf):
     """The temporal-alignment family, one composition depth per part.
 
-    part='asof' (the r04 entry): backward as-of join (every event gets the
+    part='asof': backward as-of join (every event gets the
     latest at-or-before checkpoint value per user), implemented as union +
     window carry-forward — one shuffle on the key, NO join node, vs
     DuckDB's native ASOF LEFT JOIN. Right side deduped to one row per
     (key, time) so both engines are deterministic.
 
-    part='asof2' (r8 merge, r7 verdict item 1): the COMPOSITE-key path —
-    keyed on (user_id, event_type), the list-key plumbing that r7 fixed
-    null-key partitionBy grouping for, vs DuckDB ASOF with two equalities.
+    part='asof2': the COMPOSITE-key path —
+    keyed on (user_id, event_type), the list-key plumbing with
+    null-key partitionBy grouping, vs DuckDB ASOF with two equalities.
 
-    part='resample' (r8): temporal.resample_forward_fill — per-user daily
+    part='resample': temporal.resample_forward_fill — per-user daily
     grid inside each user's own [min, max] span (in-plan sequence explode
     off the bounds aggregate, never a cross join), forward-filled via the
     same as-of machinery with a 2-day staleness cutoff (ticks drifting
@@ -3282,6 +2731,9 @@ def as_of_join_q(spark, sf):
     return a1.unionByName(a2).unionByName(rs)
 
 
+# ---- invariant-oracle-checked entries: JVM-internal hashes / seeded k-means still can't
+# value-match a SQL oracle, but their deterministic PROPERTIES can.
+
 @_q(
     "curation_pipeline",
     "WITH RECURSIVE " + _NEAR_DUP_CTES + ", " + _CLUSTER_CTES + ", "
@@ -3299,7 +2751,7 @@ def as_of_join_q(spark, sf):
     "0::BIGINT AS overfull_multibins, 1::BIGINT AS bins_lower_ok FROM cstats",
 )
 def curation_pipeline(spark, sf):
-    """The end-to-end training-data curation flow as ONE driver-checked
+    """The end-to-end training-data curation flow as ONE oracle-checked
     entry: near-dup clustering → survivor filter → 64-token chunking
     (overlap 8) → 256-token sequence packing. The invariant row states
     exactly-SQL-computable facts (doc/survivor/chunk counts, total chunk
@@ -3355,16 +2807,12 @@ def curation_pipeline(spark, sf):
     )
     # materialize the 1-row invariant table eagerly so the corpus-sized
     # chunk cache can be released NOW instead of pinning the storage pool
-    # for the rest of the battery session (the driver runs 50 entries in
+    # for the rest of the test session (the battery runs every entry in
     # one session); the returned frame is a local 1-row DataFrame.
     rows = result.collect()
     chunks.unpersist()
     return spark.createDataFrame(rows, schema=result.schema)
 
-
-# ---- formerly rows-only entries, now invariant-oracle-checked (the LDA
-# pattern from entry r3): JVM-internal hashes / seeded k-means still can't
-# value-match a SQL oracle, but their deterministic PROPERTIES can.
 
 @_q(
     "minhash_ml_builtin",
@@ -3382,13 +2830,13 @@ def minhash_ml_builtin(spark, sf):
     8-table OR-amplified recall is ~1-1e-8), and (c) every reported
     jaccard must lie in [0.2, 1] (distance threshold 0.8).
 
-    Corpus capped at doc_id < 2000 — a measured-cost decision documented in
-    r3: the MLlib explode-join costs 3x the banded path at sf0.1; this
+    Corpus capped at doc_id < 2000 — a measured-cost decision:
+    the MLlib explode-join costs 3x the banded path at sf0.1; this
     entry demonstrates the estimator surface, the banded path is
-    production. At sf0.01 (the gate) the cap is not binding.
+    production. At sf0.01 the cap is not binding.
 
-    r07 adds (d) refresh_ok — the update_lsh_index equals-full-rebuild
-    invariant (VERDICT r6 item 4): an index built over the ORIGINAL corpus,
+    It also adds (d) refresh_ok — the update_lsh_index equals-full-rebuild
+    invariant: an index built over the ORIGINAL corpus,
     refreshed with an ingest batch (every 5th doc) that carries edited
     texts (every 10th) and one too-short-to-shingle text (every 25th),
     must equal signature-for-signature an index rebuilt from scratch over
@@ -3403,17 +2851,16 @@ def minhash_ml_builtin(spark, sf):
 
     d = _docs(spark, sf).filter(F.col("doc_id") < 2000)
 
-    # ONE signature pass (r12, guide §1.2): the banded candidate path and
+    # ONE signature pass: the banded candidate path and
     # the refresh check both need the corpus's minhash index at the same
     # (n=3, num_hashes=8) — build index0 once, cache it, and feed it to
     # near_dup_pairs via the sig= fast path instead of re-shingling and
     # re-hashing the corpus a second time. Signatures are exact min-of-md5
     # integers, so sharing cannot move any value.
     #
-    # r13 (guide §2.6): the index0 localCheckpoint and the MLlib estimator
+    # the index0 localCheckpoint and the MLlib estimator
     # construction (CountVectorizer.fit + MinHashLSH.fit, both eager
-    # seeded fits) are independent DAGs that used to run serially on the
-    # driver; a 2-thread pool overlaps them. Seeds are fixed (MinHashLSH
+    # seeded fits) are independent DAGs; a 2-thread pool overlaps them. Seeds are fixed (MinHashLSH
     # seed=7; CountVectorizer vocab order is data-deterministic), so every
     # result tensor is identical to the sequential order.
     from concurrent.futures import ThreadPoolExecutor
@@ -3497,10 +2944,10 @@ def minhash_ml_builtin(spark, sf):
     "UNION ALL SELECT 'ivfpq_check', "
     "CAST(5 * least(5, (SELECT count(*) FROM embeddings) - 1) AS BIGINT), "
     "CAST(1 AS BIGINT), CAST(NULL AS DOUBLE), CAST(1 AS BIGINT) "
-    # -- assign (r9): the incremental-IVF delta assignment against LITERAL
+    # -- assign: the incremental-IVF delta assignment against LITERAL
     # -- frozen centroids — pure SQL argmin, restating assign_cells' exact
     # -- norms-trick formula (in-order sums both engines; worst best-vs-2nd
-    # -- relative margin 1.8e-3 at the gate SF, ~13 orders above ulp noise)
+    # -- relative margin 1.8e-3 at sf0.01, ~13 orders above ulp noise)
     "UNION ALL SELECT 'assign', vec_id, cell::BIGINT, "
     "CAST(NULL AS DOUBLE), CAST(NULL AS BIGINT) FROM ("
     "  SELECT d.vec_id, a.cell, row_number() OVER (PARTITION BY d.vec_id ORDER BY"
@@ -3515,7 +2962,7 @@ def minhash_ml_builtin(spark, sf):
     "          i -> CAST(((c * 7 + i * 3) % 11) - 5 AS DOUBLE)) AS centv"
     "        FROM (SELECT unnest(range(0, 4)) AS c)) a"
     ") WHERE rnk = 1 "
-    # -- jl (r9): Johnson-Lindenstrauss sign projection — the oracle
+    # -- jl: Johnson-Lindenstrauss sign projection — the oracle
     # -- DERIVES the ±1 matrix from md5 parity in SQL while Spark builds
     # -- the same rows driver-side with hashlib; the hash-match proves the
     # -- two constructions and both engines' in-order dot folds agree
@@ -3529,8 +2976,7 @@ def minhash_ml_builtin(spark, sf):
     " FROM (SELECT unnest(range(0, 4)) AS j)) s",
 )
 def ann_ivf_kmeans(spark, sf):
-    """Exact + approximate ANN in one entry (r05 merge of ann_cosine_topk
-    into this entry — the exact baseline was already computed in-plan).
+    """Exact + approximate ANN in one entry.
 
     part='exact_topk' rows are the brute-force cosine top-5 for 5 query
     vectors, fully value-hashed against DuckDB's list_cosine_similarity
@@ -3539,14 +2985,14 @@ def ann_ivf_kmeans(spark, sf):
     but not engine-portable, so the oracle states the properties —
     (a) result count equals the exact baseline's (every query finds a full
     top-5 through its probed cells), (b) recall@5 vs the in-plan exact
-    top-5 above a corpus-size-dependent bound: 0.75 at gate scale
+    top-5 above a corpus-size-dependent bound: 0.75 at sf0.01 scale
     (corpus <= 600; measured 0.80 at sf0.01 — the strong bound is KEPT
     where its headroom exists) and 0.55 beyond (measured 0.64 at sf0.1;
     still above the 0.5 a random 4-of-8-cell probe would average — fixed
     probes cover a shrinking candidate share as cells fill),
     (r) every reported cosine lies in [-1, 1].
 
-    r06 adds the product-quantization stack (same invariant-row shape):
+    It also adds the product-quantization stack (same invariant-row shape):
 
     - part='pq_check' — flat ADC `pq_search` over `pq_encode`d codes
       (m=8, K=16): (a) full result count, (b) recall@5 vs an in-plan EXACT
@@ -3561,11 +3007,11 @@ def ann_ivf_kmeans(spark, sf):
       promises), (r) pruned recall vs flat >= 0.32 (measured 0.52 at
       sf0.01).
 
-    r09 adds part='assign' — the incremental-IVF maintenance half
+    It also adds part='assign' — the incremental-IVF maintenance half
     (similarity.assign_cells, the engine of ivf_append) run against
     LITERAL frozen centroids so the delta assignment is hash-matched
     row-for-row against the oracle's SQL argmin (worst best-vs-2nd
-    relative distance margin 1.8e-3 at the gate SF — 13 orders above
+    relative distance margin 1.8e-3 at sf0.01 — 13 orders above
     cross-engine float noise; the KMeans-fitted paths above remain
     invariant-checked because seeded fits aren't engine-portable)."""
     from oni_ml_spark.datapipe.similarity import (
@@ -3586,12 +3032,10 @@ def ann_ivf_kmeans(spark, sf):
     # so the expensive subtree (crossJoin top-k, mapInPandas ADC scoring)
     # evaluates once, not once per consumer.
     #
-    # r12 optimization (guide §1.2 step 1 + §2.6): the entry used to fit the
-    # n_cells=8/seed=7 IVF KMeans index TWICE — once inside ivf_kmeans_topk
-    # and once via the direct build_ivf_index call for the IVF-PQ
-    # composition. The fit is seeded and deterministic, so both produced the
-    # identical index; now it is built ONCE and shared. The four remaining
-    # independent eager sub-DAGs (IVF build+search, exact-cosine baseline,
+    # The n_cells=8/seed=7 IVF KMeans index is built ONCE and shared by
+    # ivf_kmeans_topk and the IVF-PQ composition (the fit is seeded and
+    # deterministic, so a second fit would give the identical index). The
+    # four remaining independent eager sub-DAGs (IVF build+search, exact-cosine baseline,
     # PQ codebooks→encode→flat-ADC, exact-L2 baseline) are submitted from a
     # small driver thread pool so their KMeans iteration jobs / checkpoint
     # jobs backfill each other's stragglers instead of running serially —
@@ -3758,7 +3202,7 @@ def ann_ivf_kmeans(spark, sf):
         )
     )
 
-    # r9: part='assign' — the incremental-IVF maintenance half
+    # part='assign' — the incremental-IVF maintenance half
     # (similarity.assign_cells) against LITERAL frozen centroids, so the
     # delta assignment is a pure SQL argmin the oracle restates and
     # hash-matches row-for-row (the KMeans-fitted paths above stay
@@ -3784,7 +3228,7 @@ def ann_ivf_kmeans(spark, sf):
         F.lit(None).cast("long").alias("r"),
     )
 
-    # r9: part='jl' — random_projection with the md5-parity sign matrix;
+    # part='jl' — random_projection with the md5-parity sign matrix;
     # one row per (vector, component), v = the UNSCALED in-order dot (the
     # oracle recomputes the signs from md5 in SQL — hashlib and SQL md5
     # must derive the same matrix, and both engines' folds are in-order,
@@ -3810,7 +3254,7 @@ def ann_ivf_kmeans(spark, sf):
     )
 
 
-# ---- round-4 additions: span dedup, dataset mixing, range join ------------
+# ---- span dedup, dataset mixing, range join --------------------------------
 
 @_q(
     "ngram_diagnostics",
@@ -3884,21 +3328,21 @@ def ann_ivf_kmeans(spark, sf):
            LEFT JOIN prebuilt ON prebuilt.id = t.id""",
 )
 def ngram_diagnostics_q(spark, sf):
-    """The per-document n-gram diagnostic battery in one driver entry:
+    """The per-document n-gram diagnostic battery in one entry:
 
     - duplicate_span_metrics (Lee et al. exact-substring dedup coverage):
       8-token windows occurring >= 2 times corpus-wide; covered_tokens is
       the EXACT interval-union size (per-doc lead() window over duplicate
       starts); corpus counting groups on md5 digests, never window text.
     - repetition_metrics: 3-gram top-gram / duplicate-gram fractions (the
-      degenerate-repetition gate); r11 adds Gopher's CHARACTER fractions —
+      degenerate-repetition gate) and Gopher's CHARACTER fractions —
       top_gram_char_frac (deterministic count-then-length tie-break) and
       the overlap-naive dup_gram_char_frac, both over doc chars.
     - ngram_contamination: fraction of each training doc's distinct
       8-gram shingles that appear anywhere in the eval split (docs with
       id % 10 == 0 stand in as the eval set; its members carry NULL
       contamination columns — no evidence either way).
-    - remove_contaminated (r06): decon_kept flags which training docs the
+    - remove_contaminated: decon_kept flags which training docs the
       strict max_contamination=0.0 removal keeps (1), drops (0), or never
       saw (NULL — eval docs); verifies the removal's left-join + raw-count
       threshold including the shingle-less-docs-are-kept rule.
@@ -3919,7 +3363,7 @@ def ngram_diagnostics_q(spark, sf):
     d = _docs(spark, sf)
     train = d.filter(F.col("doc_id") % 10 != 0)
     evald = d.filter(F.col("doc_id") % 10 == 0)
-    # ONE 8-token gram pass (r12, guide §1.2): the span diagnostic and the
+    # ONE 8-token gram pass: the span diagnostic and the
     # contamination probe both consume the corpus's 8-gram table — build it
     # once, cache it, and derive both operators' inputs (the contamination
     # sides key on the md5 digest, which the oracle's shd CTE already
@@ -3932,7 +3376,7 @@ def ngram_diagnostics_q(spark, sf):
     shd = grams8.select("id", F.col("gkey").alias("shingle")).distinct()
     rep = repetition_metrics(d, "doc_id", "text", n=3)
     # the contamination fractions feed BOTH the reported columns and the
-    # removal below; r13: cache() (lazy, filled by the first consumer in
+    # removal below; cache() (lazy, filled by the first consumer in
     # the final job) replaces the eager localCheckpoint pin so the two
     # consumers still share one shingle pass without a barrier job
     cont = ngram_contamination(
@@ -4011,7 +3455,7 @@ _MIX_CASE = " ".join(
              OR (epoch = ceil(rate)
                  AND ('0x' || substr(md5(doc_id::VARCHAR || '#mix' || epoch::VARCHAR),
                       1, 8))::BIGINT % 4294967296 < (rate - floor(rate)) * 4294967296)),
-    -- temperature weights (r8): n_s^0.5 smoothing, normalized in-plan
+    -- temperature weights: n_s^0.5 smoothing, normalized in-plan
     tw AS (SELECT source, count(*)::BIGINT AS n_s, pow(count(*), 0.5) AS w
            FROM documents GROUP BY source),
     tws AS (SELECT sum(w) AS tot FROM tw)
@@ -4042,7 +3486,7 @@ def weighted_mix_q(spark, sf):
         F.col("epoch").cast("long").alias("epoch"), "cnt", "id_sum",
         F.lit(None).cast("double").alias("v"),
     )
-    # temperature_weights (r8 merge, r7 verdict item 1): n_s^0.5 smoothing
+    # temperature_weights: n_s^0.5 smoothing
     # (Lample & Conneau), plus the target_rows budget path at 1000 rows —
     # the id_sum column carries the per-source budget, v the raw weight
     tw = temperature_weights(d, "source", alpha=0.5, total_rows=1000)
@@ -4084,7 +3528,7 @@ def range_join_bucketed_q(spark, sf):
     return out.select("event_id", "iv_id")
 
 
-# ---- round-5 additions: quality gate, temporal reshape, JSON props --------
+# ---- quality gate, temporal reshape, JSON props ----------------------------
 
 _QG_RULES = [
     "too_few_tokens", "too_many_tokens", "mean_token_len_low",
@@ -4140,7 +3584,7 @@ UNION ALL SELECT '__passed',
 
 
 def _pii_oracle_block() -> tuple[str, str]:
-    """r8 PII-audit rows appended to the quality_gate report: per-kind
+    """PII-audit rows appended to the quality_gate report: per-kind
     doc counts + id_sums over a deterministically PII-planted corpus
     (every doc gets an email; every 3rd an SSN, 5th a card, 7th a phone,
     11th an IPv4), total span count, and the scrub→re-audit residual
@@ -4194,7 +3638,7 @@ def _pii_oracle_block() -> tuple[str, str]:
 
 
 def _lmq_oracle_block() -> tuple[str, str]:
-    """r9 model-quality rows appended to the quality_gate report: the
+    """Model-quality rows appended to the quality_gate report: the
     hashing-trick linear scorer (datapipe.classify.hashed_linear_score)
     restated in SQL.  The model table is generated in-plan on the Spark
     side (even buckets of [0, 4096) carry an md5-derived micro-weight; odd
@@ -4202,7 +3646,7 @@ def _lmq_oracle_block() -> tuple[str, str]:
     the oracle can compute each bucket's weight inline — while the Spark
     path still runs the operator's real broadcast join against a weights
     DataFrame.  score_micro is an exact BIGINT sum → hash-matchable.
-    r10 adds the routing and operating-point rows: 'lmq_route|<cls>' /
+    It also adds the routing and operating-point rows: 'lmq_route|<cls>' /
     'lmq_route_mass' (hashed_linear_argmax under the derived 3-class
     model) and 'lmq_thr|<t>|pos/neg' (threshold_report confusion counts
     vs doc_id parity)."""
@@ -4238,7 +3682,7 @@ def _lmq_oracle_block() -> tuple[str, str]:
         "CASE WHEN sum(np) > 0 AND sum(nn) > 0 THEN "
         "sum(np * (below + nn / 2.0)) / (sum(np) * sum(nn)) END AS auc "
         "FROM lmgr GROUP BY g), "
-        # -- r10 lmq_route: the multiclass router (hashed_linear_argmax)
+        # -- lmq_route: the multiclass router (hashed_linear_argmax)
         # -- under the derived 3-class model: even buckets carry the
         # -- demo weight under class c(bucket % 3), odd pairs ABSENT;
         # -- every class competes on every doc (coalesce 0), ties break
@@ -4253,7 +3697,7 @@ def _lmq_oracle_block() -> tuple[str, str]:
         "lmroute AS (SELECT id, k, s FROM (SELECT id, k, s, row_number() "
         "OVER (PARTITION BY id ORDER BY s DESC, k ASC) AS rn FROM lmsc) "
         "WHERE rn = 1), "
-        # -- r10 lmq_thr: threshold_report restated — per threshold the
+        # -- lmq_thr: threshold_report restated — per threshold the
         # -- exact confusion counts of (score >= t) vs doc_id parity
         "lmthr AS (SELECT unnest([-2000, 0, 2000]) AS v)"
     )
@@ -4311,7 +3755,7 @@ def quality_gate_q(spark, sf):
     rule membership is array_contains over the gate's failed_rules column,
     summed map-side — no per-rule rescan.
 
-    r08 merges the PII audit/scrub pair (datapipe.textstats.pii_counts +
+    It also merges the PII audit/scrub pair (datapipe.textstats.pii_counts +
     scrub_pii — the compliance gate next to the quality gate) into the
     same rejection-report shape: per-kind 'pii_<kind>' rows (docs carrying
     that kind + their id_sum) over a deterministically planted corpus,
@@ -4322,7 +3766,7 @@ def quality_gate_q(spark, sf):
     aggregates; no UDF, no extra shuffle beyond the map-side-combined
     aggs.
 
-    r09 merges the hashing-trick linear quality scorer
+    It also merges the hashing-trick linear quality scorer
     (datapipe.classify.hashed_linear_score — fastText-style model-based
     filtering, md5-portable feature buckets, micro-quantized broadcast
     model table): 'lmq_flagged' (count + id_sum of the exact
@@ -4421,7 +3865,7 @@ def quality_gate_q(spark, sf):
         f"stack({len(PII_PATTERNS) + 2}, {pii_stack}) AS (rule, n_docs, id_sum)"
     )
 
-    # r9: model-quality rows — the hashing-trick linear scorer
+    # model-quality rows — the hashing-trick linear scorer
     # (datapipe.classify) under an in-plan-generated even-bucket model;
     # 'lmq_flagged' pins the exact rejection set (count + id_sum of docs
     # with negative score), 'lmq_mass' the corpus size + exact BIGINT
@@ -4475,7 +3919,7 @@ def quality_gate_q(spark, sf):
         F.col("n_scores").cast("long").alias("n_docs"),
         F.floor(F.col("auc") * 1_000_000).cast("long").alias("id_sum"),
     )
-    # r10: 'lmq_route|<cls>' — the multiclass router
+    # 'lmq_route|<cls>' — the multiclass router
     # (classify.hashed_linear_argmax) under a derived in-plan 3-class
     # model (each even demo bucket's weight belongs to class
     # c(bucket % 3); odd (bucket, cls) pairs ABSENT — the missing-pair →
@@ -4508,7 +3952,7 @@ def quality_gate_q(spark, sf):
         F.sum("score_micro").cast("long").alias("id_sum"),
     ).select(F.lit("lmq_route_mass").alias("rule"), "n_docs", "id_sum")
 
-    # r10: 'lmq_thr|<t>|pos/neg' — threshold_report (the operating-point
+    # 'lmq_thr|<t>|pos/neg' — threshold_report (the operating-point
     # picker): per threshold the exact confusion counts of
     # (score_micro >= t) vs doc_id parity, packed as pos=(tp, fp) and
     # neg=(fn, tn) rows.  One scan of the checkpointed per-doc scores.
@@ -4664,11 +4108,8 @@ def contiguous_ids_q(spark, sf):
     rank wherever the range partitioner places its boundaries, which is
     exactly what the row_number() oracle states.
 
-    r07 folds in the training-shard layout (VERDICT r6 item 1:
-    datapipe.sampling.shard_positions — the arithmetic
-    write_training_shards splits its `shard=K` directories by, minus the
-    file write): shard = id div 16, shard_pos = id mod 16, both in integer
-    arithmetic end to end."""
+    It also folds in the training-shard layout: shard = id div 16,
+    shard_pos = id mod 16, both in integer arithmetic end to end."""
     from oni_ml_spark.datapipe.sampling import (
         assign_contiguous_ids,
         shard_positions,

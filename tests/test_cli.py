@@ -34,6 +34,47 @@ def test_parser_rejects_bad_lda_arguments(bad):
         )
 
 
+@pytest.mark.parametrize("bad", [
+    # the reference's List.fill(0) drops the feedback; weight 1 is not that
+    ["--dupfactor", "0"], ["--dupfactor", "-1"],
+    ["--maxresults", "-2"],
+])
+def test_parser_rejects_bad_analysis_arguments(bad):
+    with pytest.raises(SystemExit):
+        build_parser().parse_args(
+            ["--analysis", "flow", "--input", "/x", "--output", "/y", *bad]
+        )
+
+
+@pytest.mark.parametrize("bad", [
+    ["--dedup-hashes", "16", "--dedup-bands", "5"],
+    ["--dedup-hashes", "0"], ["--dedup-bands", "0"], ["--dedup-ngram", "0"],
+    ["--decon-ngram", "-1"], ["--n-buckets", "0"],
+    ["--dedup-threshold", "0"], ["--dedup-threshold", "1.5"],
+    ["--dedup-threshold", "nan"],
+])
+def test_curate_parser_rejects_bad_arguments(bad):
+    # rejected before the input scan and the quality gate run
+    from oni_ml_spark.curate import build_parser as curate_parser
+
+    with pytest.raises(SystemExit):
+        curate_parser().parse_args(["--input", "/x", "--output", "/y", *bad])
+
+
+def test_curate_parser_accepts_the_edges():
+    from oni_ml_spark.curate import build_parser as curate_parser
+
+    args = curate_parser().parse_args(
+        ["--input", "/x", "--output", "/y", "--dedup-hashes", "15",
+         "--dedup-bands", "5", "--dedup-threshold", "1"]
+    )
+    assert (args.dedup_hashes, args.dedup_bands, args.dedup_threshold) == (15, 5, 1.0)
+    assert build_parser().parse_args(
+        ["--analysis", "dns", "--input", "/x", "--output", "/y",
+         "--dupfactor", "1", "--maxresults", "-1"]
+    ).dupfactor == 1
+
+
 def test_flow_cli_end_to_end(spark, tmp_path):
     inp = str(tmp_path / "flow.parquet")
     out = str(tmp_path / "out")
@@ -43,7 +84,7 @@ def test_flow_cli_end_to_end(spark, tmp_path):
         [
             "--analysis", "flow", "--input", inp, "--output", out,
             "--ldatopiccount", "3", "--lda-maxiter", "3",
-            "--maxresults", "20", "--single-file", "--approx-quantiles",
+            "--maxresults", "20", "--single-file",
             "--delimiter", ",",
         ]
     )
@@ -114,7 +155,7 @@ def test_flow_cli_with_feedback(spark, tmp_path):
         ["--analysis", "flow", "--input", inp, "--output", out,
          "--feedback", str(fb), "--dupfactor", "50",
          "--ldatopiccount", "3", "--lda-maxiter", "3", "--lda-alpha", "1.5",
-         "--maxresults", "10", "--single-file", "--approx-quantiles"]
+         "--maxresults", "10", "--single-file"]
     )
     assert rc == 0
     parts = glob.glob(f"{out}/part-*.csv")
@@ -136,7 +177,7 @@ def test_flow_cli_audit_flag(spark, tmp_path, capsys):
         [
             "--analysis", "flow", "--input", inp, "--output", out,
             "--ldatopiccount", "3", "--lda-maxiter", "3",
-            "--maxresults", "10", "--single-file", "--approx-quantiles",
+            "--maxresults", "10", "--single-file",
             "--audit",
         ]
     )

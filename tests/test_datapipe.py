@@ -192,9 +192,9 @@ class TestMultimodal:
             decode_image_stub,
             parse_image_header,
         )
-        from oni_ml_spark.entry_queries import _planted_image_headers
+        from tests.media_fixtures import planted_image_headers
 
-        planted = dict(_planted_image_headers())
+        planted = dict(planted_image_headers())
         want = {
             -1: ("png", 640, 360, 29),
             -2: ("gif", 320, 200, 13),
@@ -289,7 +289,7 @@ class TestMultimodal:
             assert decode_image_header(bad) == decode_image_stub(bad)
 
     def test_parse_av_containers_goldens(self):
-        """(r12) WAV and MP4 header sniffing: the planted battery payloads
+        """(r12) WAV and MP4 header sniffing: the planted payloads
         parse to their true sample rate / channels / duration / track
         dims; header-only MP4s (moov at file end) still classify; prose
         and corrupt RIFFs refuse."""
@@ -298,12 +298,12 @@ class TestMultimodal:
             decode_media_header,
             parse_media_container,
         )
-        from oni_ml_spark.entry_queries import (
-            _planted_av_containers,
-            _planted_image_headers,
+        from tests.media_fixtures import (
+            planted_av_containers,
+            planted_image_headers,
         )
 
-        planted = dict(_planted_av_containers())
+        planted = dict(planted_av_containers())
         assert parse_media_container(planted[-6]) == {
             "n_bytes": 76, "format": "wav", "width": None, "height": None,
             "sample_rate": 8000, "channels": 1, "duration_ms": 2,
@@ -319,7 +319,7 @@ class TestMultimodal:
         assert got["format"] == "mp4"
         assert got["width"] is None and got["duration_ms"] is None
         # images flow through the container parser with null AV fields
-        got = parse_media_container(dict(_planted_image_headers())[-1])
+        got = parse_media_container(dict(planted_image_headers())[-1])
         assert got["format"] == "png" and got["sample_rate"] is None
         # refusals: prose RIFF, WAV with no fmt chunk, implausible fmt
         no_fmt = b"RIFF" + (36).to_bytes(4, "little") + b"WAVE" \
@@ -345,16 +345,16 @@ class TestMultimodal:
             media_triage,
             sample_frames_by_duration,
         )
-        from oni_ml_spark.entry_queries import (
-            _planted_av_containers,
-            _planted_image_headers,
+        from tests.media_fixtures import (
+            planted_av_containers,
+            planted_image_headers,
         )
 
         media = attach_payload(docs, "doc_id", "text").unionByName(
             spark.createDataFrame(
                 [
                     (i, bytearray(b))
-                    for i, b in _planted_image_headers() + _planted_av_containers()
+                    for i, b in planted_image_headers() + planted_av_containers()
                 ],
                 "media_id long, payload binary",
             )

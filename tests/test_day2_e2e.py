@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 pytestmark = pytest.mark.usefixtures("spark")
 
 
-@pytest.mark.slow  # r13 budget: day-2 composition of operators each unit-tested; the battery + oracle gate cover the composed paths
+@pytest.mark.slow  # r13 budget: day-2 composition of operators each unit-tested; runs in the full profile (-m "")
 def test_day_in_production(spark, tmp_path, capsys):
     from oni_ml_spark.datapipe.contracts import (
         expect_not_null,

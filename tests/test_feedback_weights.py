@@ -19,7 +19,6 @@ from oni_ml_spark.topics import corpus_counts
 from oni_ml_spark.transforms import DECILES, QUINTILES, oversample
 from oni_ml_spark.transforms.quantiles import (
     _cdf_table,
-    approx_quantile_cuts_multi,
     quantile_cuts_multi,
 )
 from tests.test_pipelines import _dns_fixture, _flow_fixture, _proxy_fixture
@@ -95,30 +94,6 @@ def test_weight_one_is_the_unweighted_call(spark):
     assert _sorted_rows(_cdf_table(df, "a", ["k"], weight_col=WEIGHT_COL)) == _sorted_rows(
         _cdf_table(df, "a", ["k"])
     )
-
-
-def test_approx_weighted_cuts_within_rank_error(spark):
-    """The GK sketch sees each row ``weight`` times, so every approximate
-    cut lies within rel_err·N weighted ranks of the exact weighted cut."""
-    rows = [("x", float(v % 97), float(v % 11), 1 + (v % 9) * 40) for v in range(600)]
-    df = _frame(spark, rows)
-    rel_err = 0.01
-    approx = approx_quantile_cuts_multi(
-        df, ["a", "b"], DECILES, rel_err=rel_err, weight_col=WEIGHT_COL
-    )
-    exact = quantile_cuts_multi(df, {"a": DECILES, "b": DECILES}, weight_col=WEIGHT_COL)
-    total = sum(r[3] for r in rows)
-    for c, idx in (("a", 1), ("b", 2)):
-        for p, x, ex in zip(DECILES, approx[c], exact[c]):
-            below = sum(r[3] for r in rows if r[idx] < x)
-            upto = sum(r[3] for r in rows if r[idx] <= x)
-            # some rank in [below, upto) is within rel_err·N of p·N
-            slack = rel_err * total + 1
-            assert below - slack <= p * total <= upto + slack, (c, p, x, ex)
-    empty = approx_quantile_cuts_multi(
-        df.limit(0), ["a"], QUINTILES, weight_col=WEIGHT_COL
-    )
-    assert all(math.isinf(x) for x in empty["a"])
 
 
 def test_quantile_cuts_multi_job_count(spark):

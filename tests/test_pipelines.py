@@ -13,10 +13,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from oni_ml_spark.io import load_table
 from oni_ml_spark.pipelines import dns as dns_pipe
 from oni_ml_spark.pipelines import events as events_pipe
 from oni_ml_spark.pipelines import flow as flow_pipe
 from oni_ml_spark.pipelines import proxy as proxy_pipe
+from tests.conftest import SF_DIR_ORACLE
 
 
 def _flow_fixture(spark, n_common=2000, n_rare=5):
@@ -254,8 +256,6 @@ class TestFeedbackLoop:
 
 class TestEventsPipeline:
     def test_deterministic_across_runs(self, spark):
-        from oni_ml_spark.io import load_table
-
         df = load_table(spark, "/root/testdata/sf0.001", "events")
         r1 = events_pipe.run(df, topic_count=5, top_k=10, max_iter=3, seed=7)
         r2 = events_pipe.run(df, topic_count=5, top_k=10, max_iter=3, seed=7)
@@ -294,3 +294,135 @@ def test_bottom_k_ties_do_not_depend_on_partitioning(spark):
     shuffled()
     # a score-only frame has nothing to break ties on, and still works
     assert [r[0] for r in bottom(day.select("score"))] == [0.0] * 30
+
+
+# ------------------------------------------------- pipelines on the test data
+# Each builder synthesizes one analysis' raw schema from an sf0.01 table so
+# that no row is filtered (non-null times, every endpoint in training) and
+# every featurization branch runs; the bottom-K size is therefore
+# least(100, |table|).
+
+TESTDATA = SF_DIR_ORACLE
+
+
+def _events_day(spark):
+    df = load_table(spark, TESTDATA, "events")
+    return events_pipe.run(df, topic_count=10, top_k=100, max_iter=5), "events"
+
+
+def _flow_day(spark):
+    li = load_table(spark, TESTDATA, "lineitem")
+    df = li.select(
+        F.lit("2016-05-05 12:00:00").alias("treceived"),
+        F.lit(2016).alias("tryear"), F.lit(5).alias("trmonth"), F.lit(5).alias("trday"),
+        (F.col("l_orderkey") % 24).cast("int").alias("trhour"),
+        (F.col("l_partkey") % 60).cast("int").alias("trminute"),
+        (F.col("l_suppkey") % 60).cast("int").alias("trsec"),
+        F.lit(0.0).alias("tdur"),
+        F.concat_ws(".", F.lit("10"), F.lit("0"), (F.col("l_partkey") % 16).cast("string"),
+                    (F.col("l_suppkey") % 16).cast("string")).alias("sip"),
+        F.concat_ws(".", F.lit("10"), F.lit("1"), (F.col("l_suppkey") % 16).cast("string"),
+                    (F.col("l_orderkey") % 16).cast("string")).alias("dip"),
+        # mostly ephemeral client ports to a small server-port set; rare
+        # privileged and zero source ports keep every adjustPort branch live
+        F.when(F.col("l_partkey") % 211 == 0, F.lit(0))
+        .when(F.col("l_partkey") % 101 == 0, (F.col("l_partkey") % 1024).cast("int"))
+        .otherwise(F.lit(1025) + (F.col("l_partkey") % 60000).cast("int"))
+        .cast("int").alias("sport"),
+        F.element_at(
+            F.array(*[F.lit(p) for p in (80, 443, 22, 53, 25, 110, 8080, 8443)]),
+            (F.col("l_orderkey") % 8).cast("int") + 1,
+        ).cast("int").alias("dport"),
+        F.lit("TCP").alias("proto"), F.lit(".AP...").alias("flag"),
+        (F.col("l_quantity") * 100).cast("long").alias("ipkt"),
+        F.col("l_extendedprice").cast("long").alias("ibyt"),
+    )
+    return flow_pipe.run(df, topic_count=5, top_k=100, max_iter=3), "lineitem"
+
+
+def _dns_day(spark):
+    e = load_table(spark, TESTDATA, "events")
+    # query names mix benign, ccTLD, arpa and high-entropy shapes
+    df = e.select(
+        F.date_format("ts", "MMM d yyyy HH:mm:ss").alias("frame_time"),
+        F.unix_timestamp("ts").alias("unix_tstamp"),
+        (F.lit(40) + (F.col("value") * 10).cast("int") % 1400).alias("frame_len"),
+        F.concat(F.lit("10.0.0."), (F.col("user_id") % 32).cast("string")).alias("ip_dst"),
+        F.lit("8.8.8.8").alias("ip_src"),
+        F.when(F.col("event_id") % 17 == 0, F.lit("123.103.104.10.in-addr.arpa"))
+        .when(F.col("event_id") % 13 == 0,
+              F.concat(F.md5(F.col("event_id").cast("string")), F.lit(".evil.net")))
+        .when(F.col("event_id") % 3 == 0, F.concat("event_type", F.lit(".amazon.com.mx")))
+        .otherwise(F.concat("event_type", F.lit(".example.com"))).alias("dns_qry_name"),
+        F.lit("0x00000001").alias("dns_qry_class"),
+        F.when(F.col("event_id") % 5 == 0, 28).otherwise(1).cast("int").alias("dns_qry_type"),
+        F.when(F.col("event_id") % 11 == 0, 3).otherwise(0).cast("int").alias("dns_qry_rcode"),
+        F.lit("1.2.3.4").alias("dns_a"),
+    )
+    res = dns_pipe.run(
+        df, top_domains=["amazon", "example"], topic_count=5, top_k=100, max_iter=3
+    )
+    return res, "events"
+
+
+def _proxy_day(spark):
+    e = load_table(spark, TESTDATA, "events")
+    # a skewed user-agent distribution exercises the agent-count feature
+    df = e.select(
+        F.lit("2016-05-05").alias("p_date"),
+        F.date_format("ts", "HH:mm:ss").alias("p_time"),
+        F.concat(F.lit("10.0.0."), (F.col("user_id") % 32).cast("string")).alias("clientip"),
+        F.when(F.col("event_id") % 13 == 0,
+               F.concat(F.md5(F.col("event_id").cast("string")), F.lit(".evil.net")))
+        .otherwise(F.concat("event_type", F.lit(".amazon.com"))).alias("host"),
+        F.when(F.col("event_id") % 7 == 0, "POST").otherwise("GET").alias("reqmethod"),
+        F.when(F.col("event_id") % 29 == 0,
+               F.concat(F.lit("rare-agent/"), (F.col("event_id") % 97).cast("string")))
+        .otherwise(F.lit("Mozilla/5.0")).alias("useragent"),
+        F.when(F.col("event_id") % 2 == 0, "text/html").otherwise("image/png")
+        .alias("resconttype"),
+        F.lit(100).cast("int").alias("duration"),
+        F.lit("-").alias("username"), F.lit("-").alias("authgroup"),
+        F.lit("-").alias("exceptionid"), F.lit("OBSERVED").alias("filterresult"),
+        F.lit("Shopping").alias("webcat"), F.lit("-").alias("referer"),
+        F.when(F.col("event_id") % 19 == 0, "503").otherwise("200").alias("respcode"),
+        F.lit("TCP_HIT").alias("action"), F.lit("http").alias("urischeme"),
+        F.lit("80").alias("uriport"), F.lit("/").alias("uripath"),
+        F.lit("-").alias("uriquery"), F.lit("html").alias("uriextension"),
+        F.lit("1.1.1.1").alias("serverip"),
+        F.lit(1000).cast("int").alias("scbytes"), F.lit(300).cast("int").alias("csbytes"),
+        F.lit("-").alias("virusid"), F.lit("-").alias("bcappname"), F.lit("-").alias("bcappoper"),
+        F.concat(F.lit("http://"), "event_type", F.lit(".amazon.com/"), "props").alias("fulluri"),
+    )
+    res = proxy_pipe.run(df, top_domains=["amazon"], topic_count=5, top_k=100, max_iter=3)
+    return res, "events"
+
+
+@pytest.mark.parametrize(
+    "build", [_events_day, _flow_day, _dns_day, _proxy_day],
+    ids=["events", "flow", "dns", "proxy"],
+)
+def test_pipeline_invariants_on_testdata(spark, build):
+    """The bottom-K holds least(100, |input|) rows, every score is a
+    probability, every topic mix is a simplex, and no scored row below the
+    bottom-K's largest score was left out of it."""
+    import duckdb
+
+    res, table = build(spark)
+    try:
+        n_input = duckdb.sql(
+            f"SELECT count(*) FROM '{TESTDATA}/{table}.parquet'"
+        ).fetchone()[0]
+        s = res.suspicious.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.col("score").isNull() | (F.col("score") < 0)
+                   | (F.col("score") > 1)).cast("long")).alias("bad"),
+            F.max("score").alias("mx"),
+        ).first()
+        assert s["n"] == min(100, n_input)
+        assert s["bad"] == 0
+        mix_sum = F.aggregate("topic_mix", F.lit(0.0), lambda a, x: a + x)
+        assert res.model.doc_topic_mix.filter(F.abs(mix_sum - 1.0) > 1e-6).count() == 0
+        assert res.scored.filter(F.col("score") < s["mx"]).count() <= s["n"]
+    finally:
+        res.release()

@@ -1,14 +1,18 @@
-"""Physical-plan regression tests: the optimizations we rely on at scale must
-stay visible in the plan (SURVEY.md §4) — column pruning to the parquet scan,
-predicate pushdown, broadcast joins for dims, TakeOrderedAndProject for
-top-K, and whole-stage codegen over the word-assembly expressions.
+"""Physical-plan regression tests: the optimizations the front doors rely
+on at scale must stay visible in the plan (SURVEY.md §4) — TakeOrderedAndProject
+for the bottom-K, whole-stage codegen over the word assembly, no all-pairs
+join and no data-sized global window in the frames ``oni_ml_spark.cli`` and
+``oni_ml_spark.curate`` build — and the same guards over the entries of
+``tests.oracle_battery``, which exercise the package code outside the front
+doors.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from oni_ml_spark.entry_queries import QUERIES
+from tests.oracle_battery import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -18,48 +22,55 @@ def _plan_of(spark, df, mode: str = "simple") -> str:
     return df._jdf.queryExecution().explainString(jmode)
 
 
-# r13 (verify budget): plan text per (entry, mode), built once per module
-# run — entries with eager construction (fits, localCheckpoint pins) pay
-# that work at construction time, and the battery-wide whitelist walk plus
-# the per-entry tests used to reconstruct the same frames repeatedly.
-# Plans are deterministic per session config, so the cache cannot mask a
-# plan change within one run.
-_PLAN_CACHE: dict[tuple[str, str], str] = {}
+# Plan text per battery entry, built once per module run: entries with eager
+# construction (fits, cached pins) pay that work when built, and the
+# battery-wide window walk below reads every entry again. Plans are
+# deterministic per session config, so the cache cannot mask a plan change
+# within one run.
+_PLAN_CACHE: dict[str, str] = {}
 
 
-def _plan(spark, name: str, mode: str = "simple") -> str:
-    key = (name, mode)
-    if key not in _PLAN_CACHE:
-        _PLAN_CACHE[key] = _plan_of(spark, QUERIES[name](spark, SF_DIR), mode)
-    return _PLAN_CACHE[key]
-
-
-def test_scan_projection_prunes_columns_and_pushes_filters(spark):
-    p = _plan(spark, "scan_filter_project")
-    read = [l for l in p.splitlines() if "ReadSchema" in l][0]
-    # only the projected + predicate columns reach the scan
-    for col in ("event_id", "event_type", "value", "ts"):
-        assert col in read
-    assert "props" not in read and "user_id" not in read
-    pushed = [l for l in p.splitlines() if "PushedFilters" in l][0]
-    assert "GreaterThanOrEqual(value,10.0)" in pushed
-    assert "LessThanOrEqual(value,90.0)" in pushed
-
-
-def test_dim_joins_broadcast(spark):
-    p = _plan(spark, "tpch_q1_q3")
-    assert "BroadcastHashJoin" in p
+def _plan(spark, name: str) -> str:
+    if name not in _PLAN_CACHE:
+        _PLAN_CACHE[name] = _plan_of(spark, QUERIES[name](spark, SF_DIR))
+    return _PLAN_CACHE[name]
 
 
 def test_topk_is_take_ordered(spark):
-    p = _plan(spark, "threshold_topk")
+    """scoring.most_suspicious: threshold filter then bottom-K as one
+    TakeOrderedAndProject, never a full global sort."""
+    from oni_ml_spark.scoring import most_suspicious
+
+    e = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    scored = e.select("event_id", "user_id", (F.col("value") / 100).alias("score"))
+    p = _plan_of(spark, most_suspicious(scored, threshold=0.5, top_k=100))
     assert "TakeOrderedAndProject" in p
-    # no full global sort node
-    assert "+- Sort" not in p
+    assert "Sort [" not in p  # no Sort node anywhere, the root included
 
 
 def test_word_assembly_single_codegen_no_shuffle(spark):
-    p = _plan(spark, "flow_words")
+    """The flow word columns (flow_word_cols) are pure map-side expression
+    work: one whole-stage codegen span, no exchange, and only the columns
+    they read reach the scan."""
+    from oni_ml_spark.transforms import flow_word_cols
+
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").withColumns({
+        "sip": F.concat_ws(".", F.lit("10"), F.lit("0"),
+                           (F.col("l_partkey") % 64).cast("string"),
+                           (F.col("l_suppkey") % 64).cast("string")),
+        "dip": F.concat_ws(".", F.lit("10"), F.lit("1"),
+                           (F.col("l_suppkey") % 64).cast("string"),
+                           (F.col("l_orderkey") % 64).cast("string")),
+        "sport": (F.col("l_partkey") % 2000).cast("int"),
+        "dport": (F.col("l_orderkey") % 2000).cast("int"),
+        "time_bin": (F.col("l_linenumber") % 10).cast("int"),
+        "ibyt_bin": (F.col("l_partkey") % 10).cast("int"),
+        "ipkt_bin": (F.col("l_suppkey") % 5).cast("int"),
+    })
+    cols = flow_word_cols("sip", "dip", "sport", "dport", "time_bin", "ibyt_bin", "ipkt_bin")
+    p = _plan_of(spark, li.select("l_orderkey", "l_linenumber", *[
+        cols[c].alias(c) for c in ("word_port", "ip_pair", "source_word", "destination_word")
+    ]))
     assert "*(1)" in p and "*(2)" not in p  # one whole-stage codegen span
     assert "Exchange" not in p              # pure map-side expression work
     read = [l for l in p.splitlines() if "ReadSchema" in l][0]
@@ -68,63 +79,10 @@ def test_word_assembly_single_codegen_no_shuffle(spark):
     assert "l_extendedprice" not in read
 
 
-def test_groupby_does_partial_aggregation(spark):
-    p = _plan(spark, "groupby_count_docword")
-    # partial + final HashAggregate around the exchange (map-side combine)
-    assert p.count("HashAggregate") >= 2
-    assert "Exchange hashpartitioning" in p
-
-
-def test_lookup_join_broadcasts_filtered_dim(spark):
-    p = _plan(spark, "broadcast_lookup_fallback")
-    assert "BroadcastHashJoin" in p
-    pushed = " ".join(l for l in p.splitlines() if "PushedFilters" in l)
-    assert "LessThan(p_size,25)" in pushed
-
-
-def test_bucketed_near_dup_has_no_cartesian(spark):
-    """The embedding near-dup battery entry must candidate-generate through
-    the banded-SRP bucket self-join — never a cross join (VERDICT r01)."""
-    p = _plan(spark, "embedding_near_dup_bucketed")
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-
-
-def test_no_single_partition_exchange_in_similarity_battery(spark):
-    """No battery similarity query may funnel the corpus through a
-    single-partition exchange feeding a Window (the r01 ivf_topk
-    global-window scale-killer). The merged ann_ivf_kmeans entry (r05)
-    legitimately contains SinglePartition exchanges for its 1-row invariant
-    aggregates (partial agg upstream, 1 row moved), so the assertion targets
-    the precise pattern: SinglePartition directly below a Window node."""
-    for name in ("embedding_near_dup_bucketed", "ann_ivf_kmeans"):
-        p = _plan(spark, name)
-        lines = p.splitlines()
-        # a global window plans as Window <- Sort <- Exchange SinglePartition
-        # (the Sort is mandatory), so the guard must look a few lines PAST
-        # the Window node, not only at its immediate successor
-        fed_window = any(
-            "Window" in line
-            and any(
-                "Exchange SinglePartition" in nxt
-                for nxt in lines[i + 1 : i + 4]
-            )
-            for i, line in enumerate(lines)
-        )
-        assert not fed_window, name
-    # the bucketed near-dup path additionally allows NO single-partition
-    # exchange at all (pure bucket-join composition)
-    assert "Exchange SinglePartition" not in _plan(spark, "embedding_near_dup_bucketed")
-
-
 def test_as_of_join_plans_as_window_not_join(spark):
-    """The as-of CORE must plan as union → one hash exchange on the key →
+    """The as-of core must plan as union → one hash exchange on the key →
     window carry-forward, with NO join node (a naive non-equi formulation
-    plans a per-key nested loop that is quadratic per key). Asserted on
-    the operator itself — the battery entry now unions three parts (r8:
-    composite-key as-of + resample), whose resample half legitimately
-    joins the grid back; the full entry keeps the no-cartesian guarantee
-    (checked in test_new_dedup_entries_have_no_cartesian style below)."""
+    plans a per-key nested loop that is quadratic per key)."""
     from oni_ml_spark.datapipe.temporal import as_of_join
     from oni_ml_spark.io import load_table
 
@@ -142,28 +100,16 @@ def test_as_of_join_plans_as_window_not_join(spark):
     assert "Join" not in p
     assert p.count("Window") == 1
     assert "Exchange hashpartitioning" in p
-    # the full three-part entry must never degrade to an all-pairs plan
-    # (one _plan call — entry construction runs eager bounds work)
+    # the battery entry adds a composite-key as-of and a resample, whose
+    # grid legitimately joins back; it must still never plan all-pairs
     p_entry = _plan(spark, "as_of_join")
     assert "CartesianProduct" not in p_entry
     assert "BroadcastNestedLoopJoin" not in p_entry
 
 
-def test_new_dedup_entries_have_no_cartesian(spark):
-    """Candidate generation in every round-4 dedup/retrieval entry must be a
-    bucket/equi join — never an all-pairs plan."""
-    for name in ("simhash_near_dups", "near_dup_clusters", "tf_idf_bm25",
-                 "unigram_logprob", "grouped_quantile_cuts"):
-        p = _plan(spark, name)
-        assert "CartesianProduct" not in p, name
-
-
 def test_grouped_quantiles_no_single_partition(spark):
-    """The grouped-cuts CORE never single-partitions (window partitioned by
-    group). Asserted on the operator — the battery entry now also unions
-    the GLOBAL percentile_rank part (r8), whose bucketed ecdf legitimately
-    runs its ≤b-row bucket-subtotal window in one partition (k-bounded by
-    construction; see _cdf_table)."""
+    """The grouped-cuts core never single-partitions (window partitioned by
+    group)."""
     from oni_ml_spark.transforms.quantiles import grouped_quantile_cuts
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -187,10 +133,6 @@ def test_quantile_cuts_plan_is_lazy_and_join_free(spark):
     cuts = quantile_cuts_df(li, "l_extendedprice", DECILES)
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert after == before, "building the quantile plans ran Spark jobs"
-    # r12: the battery entry pins the shared CDF table (localCheckpoint),
-    # so ITS declared plan reads the pinned RDD — the sketch/explode
-    # shape must be asserted on the OPERATOR plans (the parts=None
-    # default path, which is what a fresh caller gets).
     p = _plan_of(spark, cuts)
     e = _plan_of(spark, ec)
     # the only nested-loop join allowed is the 1-row boundary-array attach
@@ -206,47 +148,57 @@ def test_quantile_cuts_plan_is_lazy_and_join_free(spark):
     # the boundary sketch must be in-plan (percentile_approx), not collected
     assert "percentile_approx" in p.lower() or "approximatepercentile" in p.lower()
     assert "percentile_approx" in e.lower() or "approximatepercentile" in e.lower()
-    # the entry's declared plan: cuts×ecdf join over the pinned parts,
+    # the battery entry joins cuts and ecdf over one shared parts table:
     # interval-cover explode retained, still no cartesian anywhere
     ent = _plan(spark, "ecdf_quantile_cuts")
     assert "CartesianProduct" not in ent
     assert "Generate explode" in ent
 
 
-def test_span_mix_rangejoin_entries_plan_clean(spark):
-    """The second round-4 battery additions: no all-pairs plan anywhere,
-    and the range join must be the bucket EQUI join (no BroadcastNestedLoop
-    from a raw BETWEEN theta join)."""
-    for name in ("ngram_diagnostics", "weighted_mix", "range_join_bucketed"):
-        p = _plan(spark, name)
-        assert "CartesianProduct" not in p, name
-    p = _plan(spark, "range_join_bucketed")
+def test_bucketed_near_dup_has_no_cartesian(spark):
+    """The embedding near-dup entry must candidate-generate through the
+    banded-SRP bucket self-join — never a cross join."""
+    p = _plan(spark, "embedding_near_dup_bucketed")
+    assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
+
+
+def test_no_single_partition_exchange_in_similarity_battery(spark):
+    """No similarity entry may funnel the corpus through a single-partition
+    exchange feeding a Window (the global-window scale-killer). The
+    ann_ivf_kmeans entry legitimately contains SinglePartition exchanges for
+    its 1-row invariant aggregates (partial agg upstream, 1 row moved), so
+    the assertion targets the precise pattern: SinglePartition below a
+    Window node."""
+    for name in ("embedding_near_dup_bucketed", "ann_ivf_kmeans"):
+        assert not _fed_window_count(_plan(spark, name)), name
+    # the bucketed near-dup path additionally allows NO single-partition
+    # exchange at all (pure bucket-join composition)
+    assert "Exchange SinglePartition" not in _plan(spark, "embedding_near_dup_bucketed")
+
+
+def test_new_dedup_entries_have_no_cartesian(spark):
+    """Candidate generation in the dedup and retrieval entries must be a
+    bucket/equi join — never an all-pairs plan."""
+    for name in ("simhash_near_dups", "near_dup_clusters", "tf_idf_bm25",
+                 "unigram_logprob", "grouped_quantile_cuts"):
+        assert "CartesianProduct" not in _plan(spark, name), name
+
+
+def test_span_mix_rangejoin_entries_plan_clean(spark):
+    """No all-pairs plan in the span, mixing and range-join entries, and the
+    range join must be the bucket EQUI join (no BroadcastNestedLoop from a
+    raw BETWEEN theta join)."""
+    for name in ("ngram_diagnostics", "weighted_mix", "range_join_bucketed"):
+        assert "CartesianProduct" not in _plan(spark, name), name
+    assert "BroadcastNestedLoopJoin" not in _plan(spark, "range_join_bucketed")
 
 
 def test_weighted_mix_reads_only_needed_columns(spark):
     """The mixture resampler must not drag full document bodies through the
     shuffle: the per-source count aggregate prunes to the source column."""
-    p = _plan(spark, "weighted_mix")
-    reads = [l for l in p.splitlines() if "ReadSchema" in l]
+    reads = [l for l in _plan(spark, "weighted_mix").splitlines() if "ReadSchema" in l]
     assert any("source" in l and "text" not in l for l in reads)
-
-
-# (r12, VERDICT r11 #3) entries adjudicated to contain ONLY k-bounded
-# single-partition windows: bucket-subtotal ecdf windows over <= b rows
-# (transforms/quantiles.py:150, classify.py:326), drift-bin sums and
-# distinct-dimension ranks (drift.py:93), the reservoir/top-k rank in
-# deterministic_sampling (sampling.py:755), and tf_idf_bm25's RRF
-# row_number over fused top-k lists. Frames here hold O(k) rows by
-# construction, never the corpus.
-_KBOUNDED_WINDOW_ENTRIES = frozenset({
-    "dimension_profile",
-    "ecdf_quantile_cuts",
-    "deterministic_sampling",
-    "tf_idf_bm25",
-    "grouped_quantile_cuts",
-    "quality_gate",
-})
 
 
 def _fed_window_count(plan: str) -> int:
@@ -262,12 +214,96 @@ def _fed_window_count(plan: str) -> int:
     )
 
 
+@pytest.fixture(scope="module")
+def front_door_plans(spark) -> dict[str, str]:
+    """Plans of the frames the two front doors build, at their default
+    settings: each analysis' scored rows and bottom-K (small synthetic
+    days), and each curation stage over the documents table."""
+    from oni_ml_spark.datapipe.classify import (
+        demo_weights,
+        hashed_linear_score,
+        quality_flags,
+    )
+    from oni_ml_spark.datapipe.dedup import near_dup_clusters
+    from oni_ml_spark.datapipe.sampling import deterministic_shuffle
+    from oni_ml_spark.datapipe.textstats import (
+        line_filter,
+        quality_filter,
+        remove_contaminated,
+    )
+    from oni_ml_spark.pipelines import dns, flow, proxy
+    from tests.test_pipelines import _dns_fixture, _flow_fixture, _proxy_fixture
+
+    small = dict(topic_count=3, max_iter=2, top_k=20)
+    results = {
+        "dns": dns.run(_dns_fixture(spark, 200, 3), top_domains=["amazon"], **small),
+        "flow": flow.run(_flow_fixture(spark, 200, 3), **small),
+        "proxy": proxy.run(_proxy_fixture(spark, 200, 3), top_domains=["amazon"], **small),
+    }
+    plans = {}
+    for name, res in results.items():
+        plans[f"{name}.scored"] = _plan_of(spark, res.scored)
+        plans[f"{name}.suspicious"] = _plan_of(spark, res.suspicious)
+        res.release()
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    train, evald = docs.filter("doc_id % 10 != 0"), docs.filter("doc_id % 10 = 0")
+    stages = {
+        "curate.line_filter": line_filter(docs, "doc_id", "text"),
+        "curate.quality_filter": quality_filter(docs, "doc_id", "text"),
+        "curate.near_dup_clusters": near_dup_clusters(
+            docs, "doc_id", "text", n=3, num_hashes=16, bands=4, threshold=0.7
+        ),
+        "curate.remove_contaminated": remove_contaminated(train, evald, "doc_id", "text"),
+        "curate.model_gate": quality_flags(
+            hashed_linear_score(docs, "doc_id", "text", demo_weights(spark), 4096), 0.0
+        ),
+        "curate.deterministic_shuffle": deterministic_shuffle(docs, "doc_id", seed=0),
+    }
+    plans.update({name: _plan_of(spark, df) for name, df in stages.items()})
+    return plans
+
+
+def test_front_door_frames_have_no_cartesian(front_door_plans):
+    """Candidate generation (near-dup bands, decontamination shingles) and
+    scoring are equi or broadcast hash joins — never an all-pairs plan,
+    shuffled (CartesianProduct) or broadcast (BroadcastNestedLoopJoin)."""
+    bad = [
+        n for n, p in front_door_plans.items()
+        if "CartesianProduct" in p or "BroadcastNestedLoopJoin" in p
+    ]
+    assert not bad
+
+
+def test_front_door_frames_have_no_global_window(front_door_plans):
+    """A Window fed by an Exchange SinglePartition funnels its whole input
+    through one task: the data-sized global window that does not scale.
+    No front-door frame has one."""
+    offenders = {
+        name: n for name, p in front_door_plans.items() if (n := _fed_window_count(p))
+    }
+    assert not offenders, f"single-partition-fed Window nodes in {offenders}"
+
+
+# Battery entries whose single-partition windows are k-bounded: bucket-subtotal
+# ecdf windows over <= b rows (transforms/quantiles.py, classify.py),
+# drift-bin sums and distinct-dimension ranks (drift.py), the reservoir/top-k
+# rank in deterministic_sampling (sampling.py), and tf_idf_bm25's RRF
+# row_number over fused top-k lists. Frames there hold O(k) rows by
+# construction, never the corpus.
+_KBOUNDED_WINDOW_ENTRIES = frozenset({
+    "dimension_profile",
+    "ecdf_quantile_cuts",
+    "deterministic_sampling",
+    "tf_idf_bm25",
+    "grouped_quantile_cuts",
+    "quality_gate",
+})
+
+
 def test_battery_global_windows_are_whitelisted(spark):
     """Walk EVERY battery entry's physical plan: any Window fed by an
-    Exchange SinglePartition outside the adjudicated k-bounded whitelist
-    is the classic data-sized global-window scale-killer and must fail
-    here, at test time, instead of surfacing as a WindowExec warning to
-    adjudicate at judging time (VERDICT r11, What's wrong #3)."""
+    Exchange SinglePartition outside the k-bounded whitelist is the
+    data-sized global window that does not scale, and fails here."""
     offenders = {}
     for name in sorted(QUERIES):
         n = _fed_window_count(_plan(spark, name))
@@ -281,9 +317,9 @@ def test_battery_global_windows_are_whitelisted(spark):
 
 
 def test_global_window_detector_fires_on_injected_offender(spark):
-    """Self-check for the whitelist guard: a deliberately unpartitioned
+    """Self-check for the global-window guard: a deliberately unpartitioned
     window over the documents corpus MUST trip the detector (otherwise a
-    green whitelist test proves nothing)."""
+    green guard proves nothing)."""
     from pyspark.sql import Window
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")

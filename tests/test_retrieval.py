@@ -1,10 +1,7 @@
 """TF-IDF / BM25 against a DuckDB oracle on the documents table (sf0.001).
 
-The retrieval operators are outside the driver's 50-entry correctness
-battery (the gate records exactly 50 queries), so this module carries
-their oracle verification locally with the same compare discipline as
-tests/test_oracle_parity.py: identical tokenization on both sides, sorted
-rows, exact-or-rounded value equality.
+Identical tokenization on both sides, sorted rows, exact-or-rounded value
+equality.
 """
 
 from __future__ import annotations

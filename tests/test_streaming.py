@@ -1774,14 +1774,14 @@ def test_streaming_media_decode_matches_batch(spark, tmp_path):
     the source's job), and a planted real-header corpus decodes to the
     same metadata the batch path produces."""
     from oni_ml_spark.datapipe.multimodal import extract_media_metadata
-    from oni_ml_spark.entry_queries import (
-        _planted_av_containers,
-        _planted_image_headers,
+    from tests.media_fixtures import (
+        planted_av_containers,
+        planted_image_headers,
     )
 
     rows = [
         (i, bytearray(b))
-        for i, b in _planted_image_headers() + _planted_av_containers()
+        for i, b in planted_image_headers() + planted_av_containers()
     ] + [(100, bytearray(b"just some text payload"))]
     batch = spark.createDataFrame(rows, "media_id long, payload binary")
     batch.write.mode("overwrite").parquet(str(tmp_path / "media_in"))

@@ -1,6 +1,5 @@
 """Temporal joins vs DuckDB oracles: as_of_join against native ASOF JOIN,
-range_join_bucketed against a plain BETWEEN join — same local-oracle rigor
-as the driver gate, run here because the 50-slot battery is full.
+range_join_bucketed against a plain BETWEEN join.
 """
 
 from __future__ import annotations
