@@ -14,8 +14,8 @@ Stage order (the production curation order; every stage optional by flag):
    dropped;
 2. Gopher rule gate (``textstats.quality_filter``);
 3. near-duplicate removal (``dedup.near_dup_clusters`` — MinHash bands →
-   exact-Jaccard verify → connected components; cluster-smallest id
-   survives);
+   exact-Jaccard verify → connected components of the verified pairs,
+   collected and labelled on the driver; cluster-smallest id survives);
 4. benchmark decontamination (``textstats.remove_contaminated`` — strict
    raw-count policy against the eval corpus's distinct shingle set);
 5. model-based quality gate (``classify.hashed_linear_score`` under a
@@ -25,14 +25,16 @@ Stage order (the production curation order; every stage optional by flag):
 
 Scale shape: every stage boundary is pinned with ``localCheckpoint`` —
 the near-dup and decontamination stages each scan their input several
-times internally (LSH bands + Jaccard verify + the connected-components
-loop; two shingle passes), so an unpinned chain would re-run the whole
-upstream pipeline per internal pass (a dedup → chunk → pack chain
-measured 51 s → 4 s from exactly this pin at sf0.1; on a real cluster use
-the same boundaries with ``persist(DISK_ONLY)``).  The per-stage counts
-ride those pinned frames at state-table cost.  The report lands under
+times internally (MinHash signatures, LSH bands and Jaccard verify over
+one cached shingle table; two shingle passes), so an unpinned chain
+would re-run the whole upstream pipeline per internal pass (a dedup →
+chunk → pack chain measured 51 s → 4 s from exactly this pin at sf0.1;
+on a real cluster use the same boundaries with ``persist(DISK_ONLY)``).
+Each stage's count is an ``Observation`` on the frame being pinned, so
+it costs no job of its own.  The report lands under
 ``<output>/_curation_report`` (underscore-hidden from parquet discovery
-of the curated data) and is printed as one JSON line.
+of the curated data), built from an Arrow table so that no Python worker
+starts, and is printed as one JSON line.
 
 Crash-resume (r12): with ``--resume-dir`` each stage's survivor frame is
 persisted as parquet under the resume dir and sealed with a marker file
@@ -269,6 +271,9 @@ class _StageLedger:
 def run(spark, args) -> dict:
     """The curation flow on an existing session; returns the stage report
     (also written under <output>/_curation_report)."""
+    import pyarrow as pa
+    from pyspark.sql import Observation
+
     from oni_ml_spark.datapipe.classify import hashed_linear_score, quality_flags
     from oni_ml_spark.datapipe.dedup import near_dup_clusters
     from oni_ml_spark.datapipe.sampling import deterministic_shuffle
@@ -296,7 +301,8 @@ def run(spark, args) -> dict:
         chained fingerprint matches, else compute, count, and seal.  The
         stage boundary is pinned either way — by the survivor parquet on
         the resume path, by localCheckpoint otherwise (downstream stages
-        scan their input several times internally)."""
+        scan their input several times internally) — and the count is
+        observed by the job that pins it."""
         nonlocal fp
         ledger.ordinal += 1
         fp = _stage_fingerprint(fp, cfg)
@@ -304,13 +310,14 @@ def run(spark, args) -> dict:
         if skip:
             report[stage] = n
             return frame
-        frame = builder()
+        obs = Observation()
+        frame = builder().observe(obs, F.count(F.lit(1)).alias("n"))
         if ledger.root is None:
             frame = frame.localCheckpoint()
-            report[stage] = frame.count()
+            report[stage] = obs.get["n"]
             return frame
         frame = ledger.persist(stage, frame)   # data lands first
-        report[stage] = n = frame.count()
+        report[stage] = n = obs.get["n"]
         ledger.seal(stage, fp, n)              # marker is the commit point
         return frame
 
@@ -470,13 +477,15 @@ def run(spark, args) -> dict:
         df = df.coalesce(1)
     df.write.mode("overwrite").parquet(args.output)
 
-    report["output"] = args.output
-    spark.createDataFrame(
-        [(k, int(v)) for k, v in report.items() if k != "output"],
-        "stage string, n_docs bigint",
-    ).coalesce(1).write.mode("overwrite").parquet(
+    # built from Arrow, the report plans as a local relation; from a list
+    # of tuples it would go through a Python RDD and fork Python workers
+    spark.createDataFrame(pa.table({
+        "stage": pa.array(list(report), pa.string()),
+        "n_docs": pa.array(list(report.values()), pa.int64()),
+    })).coalesce(1).write.mode("overwrite").parquet(
         f"{args.output}/_curation_report"
     )
+    report["output"] = args.output
     return report
 
 

@@ -369,6 +369,24 @@ def near_dup_pairs(
     runs only over candidate pairs (broadcast-joined against the shingle
     table), never all pairs. Returns (id_a, id_b, jaccard >= threshold).
     """
+    return _near_dup_pairs(
+        df, id_col, text_col, n, num_hashes, bands, threshold, max_df_fraction, sig
+    )[0]
+
+
+def _near_dup_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    max_df_fraction: float | None = None,
+    sig: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """``near_dup_pairs`` plus the cached shingle table it reads, for a
+    caller that consumes the pairs eagerly and can then unpersist it."""
     # ONE shingle pass (r12, guide §1.2): the signature side and the
     # verification side previously each ran the tokenize → n-gram →
     # explode chain over the corpus. Build the unfiltered shingle table
@@ -377,7 +395,7 @@ def near_dup_pairs(
     # Signatures are exact mins over md5 longs, so sharing cannot move
     # any value; the max_df_fraction stop-shingle filter applies (as
     # before) only to the verification side.
-    sh = shingle_table(df, id_col, text_col, n).cache()
+    cached = sh = shingle_table(df, id_col, text_col, n).cache()
     if sig is None:
         sig = _signatures_from_shingles(sh, num_hashes)
     cand = minhash_lsh_candidates(df, id_col, text_col, n, num_hashes, bands, sig=sig)
@@ -402,7 +420,7 @@ def near_dup_pairs(
     )
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
+    pairs = (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn(
@@ -412,259 +430,68 @@ def near_dup_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
-
-
-def _cc_star(
-    edges: DataFrame,
-    nodes: DataFrame | None,
-    max_iter: int,
-    reliable: bool,
-) -> tuple[DataFrame, bool]:
-    """Large-star/small-star connected components (Kiveris et al. 2014,
-    'Connected Components in MapReduce and Beyond', alternating algorithm):
-    each round rewrites the EDGE SET toward a star forest rooted at each
-    component's minimum id — O(log² n) rounds on ANY graph shape, vs
-    diameter rounds for label propagation. The per-round dataflow is the
-    same join + min-aggregate as propagation; only the edge rewriting
-    differs:
-
-    - large-star(u): every strictly larger neighbor v > u re-attaches to
-      m(u) = min(Γ(u) ∪ {u});
-    - small-star(u): every neighbor v <= u, and u itself, re-attaches to
-      m(u).
-
-    State is the canonical (hi, lo) pair set (hi > lo always: every
-    emission (v, m) has m <= v by construction), checkpointed per round so
-    lineage stays flat. Convergence = the pair set's (count,
-    order-insensitive hash-sum) fingerprint is unchanged by a full round —
-    one 1-row aggregate per round, no edge-set diff join. Returns (labels,
-    converged)."""
-    pairs = (
-        edges.select(
-            F.greatest("id_a", "id_b").alias("hi"),
-            F.least("id_a", "id_b").alias("lo"),
-        )
-        .filter(F.col("hi") != F.col("lo"))
-        .distinct()
-    )
-    pairs = pairs.checkpoint() if reliable else pairs.localCheckpoint()
-    verts = (
-        pairs.select(F.col("hi").alias("id"))
-        .unionByName(pairs.select(F.col("lo").alias("id")))
-        .distinct()
-    )
-    if nodes is not None:
-        verts = verts.unionByName(nodes.select(F.col("id"))).distinct()
-    # NOT cached: verts has exactly one consumer (the roots anti-join at the
-    # end) and derives from the initial pairs checkpoint — a cache here would
-    # pin the full vertex set per call for the session (review finding r05)
-
-    def _sym(p: DataFrame) -> DataFrame:
-        return p.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
-            p.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-        )
-
-    def _mins(sym: DataFrame) -> DataFrame:
-        return sym.groupBy("u").agg(F.min("v").alias("__mv")).select(
-            "u", F.least("__mv", F.col("u")).alias("m")
-        )
-
-    prev_pinned = pairs
-    prev_fp = None
-    converged = False
-    for it in range(1, max_iter + 1):
-        sym = _sym(prev_pinned)
-        # large-star: each undirected edge {a < b} is seen once from u=a
-        # (v=b > u) and re-attaches b to m(a)
-        large = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(_mins(sym), "u")
-            .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct()
-        )
-        # small-star over large's output: each edge is seen from its larger
-        # endpoint (v <= u), plus every node attaches itself to its min
-        sym2 = _sym(large)
-        mins2 = _mins(sym2)
-        small = (
-            sym2.filter(F.col("v") <= F.col("u"))
-            .join(mins2, "u")
-            .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-            .unionByName(mins2.select(F.col("u").alias("hi"), F.col("m").alias("lo")))
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct()
-        )
-        # TRUNCATE lineage EVERY round (checkpoint_interval does not apply
-        # here, unlike propagation): the round's plan references the prior
-        # pair set ~16x (each symmetrization reads it twice, and each star
-        # has two consumers of the symmetrized view), so uncheckpointed
-        # rounds grow the logical plan ~16x PER ROUND — Catalyst analysis
-        # goes exponential after a handful. A cache() alone keeps the full
-        # lineage for planning; only checkpoint cuts it.
-        new_pairs = small.checkpoint() if reliable else small.localCheckpoint()
-        # hash-sum in decimal(38,0): full-range xxhash64 longs overflow a
-        # BIGINT sum under ANSI mode
-        fp_row = new_pairs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        fp = (fp_row["n"], fp_row["h"])
-        prev_pinned.unpersist()
-        prev_pinned = new_pairs
-        if fp == prev_fp:
-            converged = True
-            break
-        prev_fp = fp
-    labels = prev_pinned.select(F.col("hi").alias("id"), F.col("lo").alias("cluster"))
-    roots = verts.join(
-        prev_pinned.select(F.col("hi").alias("id")), "id", "left_anti"
-    ).select("id", F.col("id").alias("cluster"))
-    return labels.unionByName(roots), converged
+    return pairs, cached
 
 
 def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    max_iter: int = 20,
-    checkpoint_interval: int = 5,
-    algorithm: str = "propagation",
+    edges: DataFrame, nodes: DataFrame | None = None
 ) -> DataFrame:
-    """(id, cluster) — undirected connected components by iterative
-    min-label propagation; cluster = smallest node id in the component.
+    """(id, cluster) — undirected connected components; cluster = the
+    smallest node id in the component, in Spark's ordering of the id type
+    (numeric for numbers, UTF-8 byte order for strings).
 
     ``edges`` is DataFrame[id_a, id_b]; ``nodes`` optionally supplies the
-    full vertex set (DataFrame[id]) so isolated documents appear as
-    singleton clusters. Each round joins labels across edges and keeps the
-    per-node minimum; rounds needed = graph diameter (near-dup graphs are
-    shallow — duplicates of one source form near-cliques). Each iteration
-    materializes its label table (bounded: one row per node), and every
-    ``checkpoint_interval`` iterations the labels are checkpointed so the
-    lineage chain is TRUNCATED, not just materialized — without this, an
-    executor loss at iteration 15 on a real cluster recomputes the whole
-    chain from iteration 0, and the plan string grows linearly with the
-    iteration count. A reliable ``checkpoint()`` is used when the session
-    has a checkpoint dir configured (``sc.setCheckpointDir`` — what you'd do
-    on a 1000-executor cluster); otherwise ``localCheckpoint()`` (blocks on
-    executors; fine for local mode, not fault-tolerant).
+    vertex set (DataFrame[id], one row per vertex, every edge endpoint
+    among them) so isolated vertices come back as singleton clusters.
+    Without it the result covers the edge endpoints only.
 
-    The returned DataFrame is backed by cached/checkpointed blocks. CACHED
-    blocks are released when the frame is garbage-collected on the driver
-    (Spark's ContextCleaner), or immediately if the caller unpersists it
-    after materializing downstream results. RELIABLE checkpoint FILES are
-    NOT cleaned by default: set
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (done by this
-    repo's session factory) so GC'd checkpoints are deleted too —
-    otherwise a long-lived session calling this repeatedly accumulates
-    checkpoint data in the checkpoint dir until application stop.
-    Non-convergence within ``max_iter``
-    (possible only on graphs whose diameter exceeds it, e.g. adversarial
-    long chains) emits a ``RuntimeWarning`` — labels are then a valid
-    over-segmentation: every reported cluster is a subset of a true
-    component, but one component may appear as several clusters.
+    The edge set is collected to the driver in one ``toArrow()`` job and
+    labelled there: the ids are dictionary-encoded in sorted order, then
+    min-label hooking (``np.minimum.at``) alternates with pointer jumping
+    until every edge has both ends under one root. Each round strictly
+    reduces the number of roots, so the loop always converges, whatever
+    the graph's diameter. The labels return as a small Arrow-built frame,
+    broadcast-joined onto ``nodes``.
 
-    ``algorithm`` selects the iteration scheme:
-
-    - ``"propagation"`` (default): min-label propagation — rounds = graph
-      DIAMETER. Right for near-dup graphs (duplicates of one source form
-      near-cliques, diameter ~2-3).
-    - ``"star"``: alternating large-star/small-star edge contraction
-      (Kiveris et al. 2014) — rounds = O(log² n) on ANY graph shape,
-      the escape hatch for adversarial long-chain/high-diameter graphs
-      where propagation would need diameter rounds. Same join +
-      min-aggregate dataflow per round; only the edge rewriting differs.
-
-    Both return the identical (id, cluster) labeling on any input.
+    Near-dup graphs are small: one edge per verified pair (37 pairs for
+    400 documents on the curation benchmark). The collect holds ~16 bytes
+    per pair for long ids, and labelling a few int64 arrays of the same
+    length; ``spark.driver.maxResultSize`` (1 GiB default) is the limit,
+    and a larger edge set fails the job with an error that names that
+    setting rather than exhausting the driver.
     """
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval}"
-        )
-    if algorithm not in ("propagation", "star"):
-        raise ValueError(
-            f"algorithm must be 'propagation' or 'star', got {algorithm!r}"
-        )
-    sc = edges.sparkSession.sparkContext
-    reliable = sc.getCheckpointDir() is not None
-    if algorithm == "star":
-        labels, converged = _cc_star(edges, nodes, max_iter, reliable)
-        if not converged:
-            import warnings
+    import numpy as np
+    import pyarrow as pa
 
-            warnings.warn(
-                f"connected_components(star): not converged after {max_iter} "
-                "rounds (needs O(log^2 n)); labels may contain unresolved "
-                "parent chains — raise max_iter.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return labels
-
-    # materialize the symmetric edge list ONCE: every iteration (and its
-    # convergence count) joins against it, and `edges` is typically the tail
-    # of an expensive chain (shingle → minhash → LSH → verify) that must not
-    # re-execute per round. Bounded: 2 rows per input edge.
-    both = edges.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionByName(
-        edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
-    both = both.checkpoint() if reliable else both.localCheckpoint()
-    verts = both.select(F.col("src").alias("id")).distinct()
-    if nodes is not None:
-        verts = verts.unionByName(nodes.select(F.col("id"))).distinct()
-    # `prev_pinned` tracks the actual cached/checkpointed frame backing the
-    # current labels: unpersist must target IT, not the `select` projection
-    # derived from it (CacheManager matches the registered plan exactly, so
-    # unpersisting the projection is a silent no-op and every iteration's
-    # label table would stay pinned for the session).
-    prev_pinned = verts.select("id", F.col("id").alias("cluster")).cache()
-    prev_pinned.count()
-    labels = prev_pinned
-
-    converged = False
-    for it in range(1, max_iter + 1):
-        neighbor_min = (
-            both.join(labels, both["src"] == labels["id"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("cluster").alias("__nmin"))
-        )
-        updated = (
-            labels.join(neighbor_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("cluster"), F.coalesce("__nmin", F.col("cluster"))
-                ).alias("cluster"),
-                (F.coalesce("__nmin", F.col("cluster")) < F.col("cluster")).alias("__chg"),
-            )
-        )
-        if it % checkpoint_interval == 0:
-            # eager: materializes AND truncates lineage at this iteration
-            updated = updated.checkpoint() if reliable else updated.localCheckpoint()
-        else:
-            updated = updated.cache()
-        changed = updated.filter(F.col("__chg")).count()
-        # the new iteration is materialized — release the previous one
-        # (recompute after an eviction flows through lineage to the edge
-        # checkpoint, so this is a perf-only trade, never a correctness one)
-        prev_pinned.unpersist()
-        prev_pinned = updated
-        labels = updated.select("id", "cluster")
-        if changed == 0:
-            converged = True
+    pairs = edges.select("id_a", "id_b").toArrow()
+    id_type = pairs.schema.field("id_a").type
+    ends = np.concatenate([
+        pairs.column("id_a").to_numpy(), pairs.column("id_b").to_numpy()
+    ])
+    # sorted dictionary: code order == id order, so the smallest code in a
+    # component is its smallest id
+    ids, codes = np.unique(ends, return_inverse=True)
+    u, v = codes[: pairs.num_rows], codes[pairs.num_rows :]
+    root = np.arange(len(ids))
+    while True:
+        # hook every root to the smallest root across its edges, then jump
+        # pointers until each code points at a root (root[c] <= c always)
+        ru, rv = root[u], root[v]
+        low = np.minimum(ru, rv)
+        np.minimum.at(root, ru, low)
+        np.minimum.at(root, rv, low)
+        while not np.array_equal(nxt := root[root], root):
+            root = nxt
+        if np.array_equal(root[u], root[v]):
             break
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"connected_components: not converged after {max_iter} iterations "
-            "(graph diameter exceeds max_iter); labels are an over-segmentation "
-            "— components may be split. Raise max_iter or use star contraction.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels
+    labels = edges.sparkSession.createDataFrame(pa.table({
+        "id": pa.array(ids, id_type), "cluster": pa.array(ids[root], id_type),
+    }))
+    if nodes is None:
+        return labels
+    return nodes.select("id").join(F.broadcast(labels), "id", "left").select(
+        "id", F.coalesce("cluster", "id").alias("cluster")
+    )
 
 
 def near_dup_clusters(
@@ -675,7 +502,6 @@ def near_dup_clusters(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.7,
-    max_iter: int = 20,
 ) -> DataFrame:
     """(id, cluster, keep) — full near-duplicate grouping: banded-LSH
     candidates → exact-Jaccard verify (near_dup_pairs) → connected
@@ -684,14 +510,19 @@ def near_dup_clusters(
 
     The end-to-end curation flow: ``df.join(out.filter("keep"), id)``
     yields the deduplicated corpus; the cluster column preserves the
-    duplicate-group lineage for audit.
+    duplicate-group lineage for audit. The verified pairs are collected
+    here (see ``connected_components``), after which the shingle table
+    they were computed from is released.
     """
-    pairs = near_dup_pairs(
-        df, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands,
-        threshold=threshold,
-    ).select("id_a", "id_b")
-    nodes = df.select(F.col(id_col).alias("id"))
-    comp = connected_components(pairs, nodes=nodes, max_iter=max_iter)
+    pairs, shingles = _near_dup_pairs(
+        df, id_col, text_col, n, num_hashes, bands, threshold
+    )
+    try:
+        comp = connected_components(
+            pairs.select("id_a", "id_b"), nodes=df.select(F.col(id_col).alias("id"))
+        )
+    finally:
+        shingles.unpersist()
     return comp.select(
         "id", "cluster", (F.col("id") == F.col("cluster")).alias("keep")
     )
@@ -1040,7 +871,7 @@ def incremental_near_dups(
     # this function exists to avoid repeating) would execute twice. The
     # blocks are batch-sized and released by ContextCleaner when the result
     # frame is GC'd (same ownership contract as near_dup_pairs' shingle
-    # cache and connected_components' labels).
+    # cache).
     new_sig = minhash_signatures(new_df, id_col, text_col, n, num_hashes).cache()
     a = _banded_buckets(new_sig, num_hashes, bands).alias("a")
     b = _banded_buckets(index, num_hashes, bands).alias("b")

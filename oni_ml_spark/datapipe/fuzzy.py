@@ -262,7 +262,6 @@ def fuzzy_dedup_groups(
     str_col: str,
     max_edits: int = 1,
     q: int = 3,
-    max_iter: int = 20,
     max_expansion_per_gram_row: float | None = 64.0,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
@@ -298,7 +297,7 @@ def fuzzy_dedup_groups(
         )
     )
     nodes = df.select(F.col(id_col).alias("id")).where(F.col("id").isNotNull())
-    comp = connected_components(pairs, nodes=nodes, max_iter=max_iter)
+    comp = connected_components(pairs, nodes=nodes)
     return comp.select(
         F.col("id").alias(id_col),
         "cluster",

@@ -81,10 +81,6 @@ def get_spark(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"),
         )
-        # reliable checkpoints (connected_components on a cluster with a
-        # checkpoint dir) are deleted when their frame is GC'd instead of
-        # accumulating until application stop
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # read TIMESTAMP(NANOS) parquet (e.g. the events table) as long nanos;
         # io.load_table converts back to a timestamp column
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

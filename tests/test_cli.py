@@ -8,6 +8,7 @@ import glob
 import pytest
 
 from oni_ml_spark.cli import build_parser, main
+from tests.conftest import SF_DIR
 from tests.test_pipelines import _dns_fixture, _flow_fixture
 
 
@@ -112,6 +113,24 @@ def test_cli_releases_what_the_analysis_cached(spark, tmp_path):
     )
     assert rc == 0
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_curate_releases_what_the_run_cached(spark, tmp_path):
+    """curate.run leaves nothing in the cache manager: the shingle table
+    the near-dup stage caches is released once its pairs are collected, so
+    repeated curations in one session do not pile up cached frames."""
+    from oni_ml_spark.curate import build_parser as curate_parser
+    from oni_ml_spark.curate import run as curate_run
+
+    spark.catalog.clearCache()
+    args = curate_parser().parse_args([
+        "--input", f"{SF_DIR}/documents.parquet",
+        "--output", str(tmp_path / "curated"),
+        "--min-tokens", "10", "--dedup-threshold", "0.5",
+    ])
+    report = curate_run(spark, args)
+    assert report["after_near_dup"] < report["after_quality_gate"]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 @pytest.mark.filterwarnings("error::RuntimeWarning")

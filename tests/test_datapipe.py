@@ -1164,46 +1164,89 @@ class TestNearDupClusters:
                for r in connected_components(edges, nodes=nodes).collect()}
         assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
 
-    def test_checkpoint_bounds_plan_depth_on_long_chain(self, spark):
-        """A 30-node path graph needs many propagation rounds; the periodic
-        checkpoint must keep the final plan bounded (lineage truncated at the
-        last checkpoint) instead of chaining all iterations, and still label
-        every node with the chain head."""
-        from oni_ml_spark.datapipe.dedup import connected_components
-
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(30)], "id_a long, id_b long"
-        )
-        labels = connected_components(edges, max_iter=40, checkpoint_interval=3)
-        got = {r["id"]: r["cluster"] for r in labels.collect()}
-        assert got == {i: 0 for i in range(31)}
-        # plan rooted at the last checkpoint: at most checkpoint_interval
-        # iterations of lineage (~6 KB). Without truncation the plan chains
-        # all ~30 iterations and Catalyst analysis alone takes minutes —
-        # the no-checkpoint control doesn't even finish planning here.
-        plan = labels._jdf.queryExecution().optimizedPlan().toString()
-        assert len(plan) < 20_000, f"plan not truncated ({len(plan)} chars)"
-
-    def test_nonconvergence_warns_and_oversegments(self, spark):
-        import warnings
+    def test_long_chain_labels_every_node_with_its_head(self, spark):
+        """A 200-node path graph, ids shuffled along the path: diameter 200.
+        The labelling converges whatever the diameter and gives every node
+        the smallest id."""
+        import random
 
         from oni_ml_spark.datapipe.dedup import connected_components
 
+        order = list(range(201))
+        random.Random(3).shuffle(order)
         edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(30)], "id_a long, id_b long"
+            list(zip(order, order[1:])), "id_a long, id_b long"
         )
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            labels = connected_components(edges, max_iter=2)
-            got = {r["id"]: r["cluster"] for r in labels.collect()}
-        assert any(
-            issubclass(w.category, RuntimeWarning)
-            and "not converged" in str(w.message)
-            for w in caught
+        got = {r["id"]: r["cluster"] for r in connected_components(edges).collect()}
+        assert got == {i: 0 for i in range(201)}
+
+    def test_isolated_nodes_and_empty_edges(self, spark):
+        from oni_ml_spark.datapipe.dedup import connected_components
+
+        edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long").filter(
+            "id_a < 0"
         )
-        # over-segmentation, never mis-merge: each label is a reachable
-        # smaller id within the same true component
-        assert all(c <= i for i, c in got.items())
+        nodes = spark.createDataFrame([(5,), (7,)], "id long")
+        got = {
+            r["id"]: r["cluster"]
+            for r in connected_components(edges, nodes=nodes).collect()
+        }
+        assert got == {5: 5, 7: 7}
+        assert connected_components(edges).count() == 0
+
+    def test_edge_set_past_max_result_size_fails_naming_it(self, spark):
+        """The one collect is bounded by spark.driver.maxResultSize: an edge
+        set larger than it fails the job with an error naming that setting,
+        before the driver has to hold it."""
+        from oni_ml_spark.datapipe.dedup import connected_components
+
+        edges = spark.range(200_000).select(
+            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+        )  # 3.2 MB of long pairs
+        conf = spark.sparkContext._jsc.sc().conf()
+        old = conf.get("spark.driver.maxResultSize", "1g")
+        conf.set("spark.driver.maxResultSize", "1m")
+        try:
+            with pytest.raises(Exception, match="spark.driver.maxResultSize"):
+                connected_components(edges)
+        finally:
+            conf.set("spark.driver.maxResultSize", old)
+
+    def test_job_count_does_not_grow_with_diameter(self, spark):
+        """near_dup_clusters runs as many jobs on a 300-document chain of
+        near-duplicates (doc i shares 9 of its 10 words with doc i+1 and 8
+        with doc i+2, so only neighbours pass the 0.7 threshold) as on a
+        2-document one: the components step is one collect, not one job
+        per round of label propagation."""
+        from oni_ml_spark.datapipe.dedup import near_dup_clusters
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+
+        def chain(n_docs, run):
+            docs = spark.createDataFrame(
+                [(i, " ".join(f"w{j}" for j in range(i, i + 10)))
+                 for i in range(n_docs)],
+                "doc_id long, text string",
+            )
+            group = f"near-dup-chain-{run}"
+            sc.setJobGroup(group, group)
+            try:
+                got = near_dup_clusters(
+                    docs, "doc_id", "text", n=1, num_hashes=16, bands=16,
+                    threshold=0.7,
+                ).collect()
+                jobs = tracker.getJobIdsForGroup(group)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            assert {(r["id"], r["cluster"], r["keep"]) for r in got} == {
+                (i, 0, i == 0) for i in range(n_docs)
+            }
+            return len(jobs)
+
+        chain(2, "warm-up")
+        assert chain(300, "long") == chain(2, "short")
 
     def test_clusters_match_duckdb_recursive_components(self, spark):
         """End-to-end near_dup_clusters vs DuckDB: same verified pairs →
@@ -1384,25 +1427,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 
-@settings(
-    max_examples=8, deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 24), st.integers(0, 24)),
-        min_size=0, max_size=30,
-    ),
-    st.integers(25, 30),
-)
-def test_connected_components_fuzz_vs_union_find(spark, raw_edges, n_nodes):
-    """Random graphs (self-loops and duplicate edges included) vs a
-    pure-Python union-find: every node must get the smallest id reachable
-    from it."""
-    from oni_ml_spark.datapipe.dedup import connected_components
-
-    edges = [(a, b) for a, b in raw_edges if a != b]
-    parent = list(range(n_nodes))
+def _union_find_labels(edges, nodes, key=lambda x: x):
+    """{node: smallest node (by ``key``) of its component} by union-find."""
+    parent = {x: x for x in nodes}
 
     def find(x):
         while parent[x] != x:
@@ -1413,65 +1440,76 @@ def test_connected_components_fuzz_vs_union_find(spark, raw_edges, n_nodes):
     for a, b in edges:
         ra, rb = find(a), find(b)
         if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {i: find(i) for i in range(n_nodes)}
+            lo, hi = sorted((ra, rb), key=key)
+            parent[hi] = lo
+    return {x: find(x) for x in nodes}
 
-    edf = spark.createDataFrame(edges or [(0, 0)], "id_a long, id_b long")
-    if not edges:
-        edf = edf.filter("id_a != id_a")  # empty edge frame, schema kept
+
+def _path(ids):
+    return list(zip(ids, ids[1:]))
+
+
+# random graphs (self-loops and duplicate edges included), plus 25-node
+# paths with shuffled ids (diameter 24)
+_GRAPHS = st.one_of(
+    st.lists(st.tuples(st.integers(0, 24), st.integers(0, 24)), max_size=30),
+    st.permutations(range(25)).map(_path),
+)
+
+
+@settings(
+    max_examples=8, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_GRAPHS, st.integers(25, 30))
+def test_connected_components_fuzz_vs_union_find(spark, raw_edges, n_nodes):
+    """Random graphs vs a pure-Python union-find: every node must get the
+    smallest id reachable from it, isolated nodes (ids 25+) their own."""
+    from oni_ml_spark.datapipe.dedup import connected_components
+
+    edges = [(a, b) for a, b in raw_edges if a != b]
+    want = _union_find_labels(edges, range(n_nodes))
+
+    edf = spark.createDataFrame(edges, "id_a long, id_b long")
     nodes = spark.createDataFrame([(i,) for i in range(n_nodes)], "id long")
     got = {
         r["id"]: r["cluster"]
-        for r in connected_components(edf, nodes=nodes, max_iter=40).collect()
+        for r in connected_components(edf, nodes=nodes).collect()
     }
     assert got == want
-    # the star-contraction variant must produce the identical labeling
-    got_star = {
-        r["id"]: r["cluster"]
-        for r in connected_components(
-            edf, nodes=nodes, max_iter=15, algorithm="star"
-        ).collect()
-    }
-    assert got_star == want
 
 
-class TestStarContraction:
-    def test_long_chain_converges_in_log_rounds(self, spark):
-        """A 200-node path graph has diameter 200 — propagation needs ~200
-        rounds, but large-star/small-star must finish within O(log² n)
-        rounds (10 here), labeling every node with the chain head. This is
-        exactly the adversarial-diameter case the algorithm knob exists
-        for."""
-        from oni_ml_spark.datapipe.dedup import connected_components
+# ids whose orders disagree: Spark compares strings as UTF-8 bytes (code
+# points), so "Ａ" (U+FF21) < "😀" (U+1F600), while UTF-16 code units put the
+# emoji's surrogate pair first; "Z" < "a" < "é" bytewise, not by locale
+_STRING_IDS = ["a", "Z", "é", "e", "\uff21", "\U0001f600", "中", "ab", "A", ""]
 
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(200)], "id_a long, id_b long"
-        )
-        labels = connected_components(edges, max_iter=10, algorithm="star")
-        got = {r["id"]: r["cluster"] for r in labels.collect()}
-        assert got == {i: 0 for i in range(201)}
 
-    def test_isolated_nodes_and_empty_edges(self, spark):
-        from oni_ml_spark.datapipe.dedup import connected_components
+@settings(
+    max_examples=6, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    st.lists(
+        st.tuples(st.sampled_from(_STRING_IDS), st.sampled_from(_STRING_IDS)),
+        max_size=12,
+    )
+)
+def test_connected_components_string_ids_follow_spark_order(spark, raw_edges):
+    """String ids, non-ASCII included: each cluster is the component's
+    smallest id in Spark's own ordering, and equals Spark's min() over it."""
+    from oni_ml_spark.datapipe.dedup import connected_components
 
-        edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long").filter(
-            "id_a < 0"
-        )
-        nodes = spark.createDataFrame([(5,), (7,)], "id long")
-        got = {
-            r["id"]: r["cluster"]
-            for r in connected_components(
-                edges, nodes=nodes, algorithm="star"
-            ).collect()
-        }
-        assert got == {5: 5, 7: 7}
-
-    def test_rejects_unknown_algorithm(self, spark):
-        from oni_ml_spark.datapipe.dedup import connected_components
-
-        edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-        with pytest.raises(ValueError, match="algorithm"):
-            connected_components(edges, algorithm="bfs")
+    edges = [(a, b) for a, b in raw_edges if a != b]
+    want = _union_find_labels(
+        edges, _STRING_IDS, key=lambda x: x.encode("utf-8")
+    )
+    edf = spark.createDataFrame(edges, "id_a string, id_b string")
+    nodes = spark.createDataFrame([(i,) for i in _STRING_IDS], "id string")
+    labels = connected_components(edf, nodes=nodes)
+    assert {r["id"]: r["cluster"] for r in labels.collect()} == want
+    spark_min = labels.groupBy("cluster").agg(F.min("id").alias("m"))
+    assert all(r["cluster"] == r["m"] for r in spark_min.collect())
 
 
 @settings(
@@ -1569,36 +1607,6 @@ class TestReviewRegressions:
                for r in group_centroids(df, "g", normalize=True).collect()}
         assert got["z"] == [0.0, 0.0]
         assert abs(got["a"][0] - 0.6) < 1e-12 and abs(got["a"][1] - 0.8) < 1e-12
-
-    def test_connected_components_releases_intermediate_caches(self, spark):
-        """Regression: unpersist targeted a projection of the cached frame
-        (a CacheManager no-op), pinning every iteration's label table. Only
-        the final labels (caller-owned), the edge checkpoint, and at most
-        one preceding checkpoint may stay pinned — never one block set per
-        iteration."""
-        from oni_ml_spark.datapipe.dedup import connected_components
-
-        spark.catalog.clearCache()
-        sc = spark.sparkContext
-        before = sc._jsc.getPersistentRDDs().size()
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(6)], "id_a long, id_b long"
-        )
-        labels = connected_components(edges, max_iter=20, checkpoint_interval=3)
-        got = {r["id"]: r["cluster"] for r in labels.collect()}
-        assert got == {i: 0 for i in range(7)}
-        pinned = sc._jsc.getPersistentRDDs().size() - before
-        # ~7 iterations ran; before the fix each stayed pinned (7+). Allowed:
-        # edge localCheckpoint + final labels + intermediate checkpoints
-        # (released only by GC, <= iterations/interval).
-        assert pinned <= 5, f"{pinned} RDD block sets leaked"
-
-    def test_connected_components_rejects_bad_interval(self, spark):
-        from oni_ml_spark.datapipe.dedup import connected_components
-
-        edges = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
-        with pytest.raises(ValueError):
-            connected_components(edges, checkpoint_interval=0)
 
     def test_rollup_sketch_keeps_custom_column_name(self, spark):
         from oni_ml_spark.datapipe.sketches import (

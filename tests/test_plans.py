@@ -284,6 +284,33 @@ def test_front_door_frames_have_no_global_window(front_door_plans):
     assert not offenders, f"single-partition-fed Window nodes in {offenders}"
 
 
+def test_curation_report_plans_as_local_relation(spark, tmp_path, monkeypatch):
+    """The stage report curate.run writes to _curation_report is a local
+    relation: built from a list of tuples it would plan as a scan of
+    an existing (Python) RDD, whose evaluation forks Python workers that
+    nothing else in the curation run needs."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from oni_ml_spark.curate import build_parser, run
+
+    written = {}
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written[path] = self._df
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    out = str(tmp_path / "curated")
+    run(spark, build_parser().parse_args([
+        "--input", f"{SF_DIR}/documents.parquet", "--output", out,
+        "--skip-quality", "--skip-dedup",
+    ]))
+    p = _plan_of(spark, written[f"{out}/_curation_report"], "extended")
+    assert "LocalRelation" in p or "LocalTableScan" in p
+    assert "ExistingRDD" not in p and "PythonRDD" not in p and "LogicalRDD" not in p
+
+
 # Battery entries whose single-partition windows are k-bounded: bucket-subtotal
 # ecdf windows over <= b rows (transforms/quantiles.py, classify.py),
 # drift-bin sums and distinct-dimension ranks (drift.py), the reservoir/top-k
