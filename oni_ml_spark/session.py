@@ -11,6 +11,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import shlex
 import shutil
 import subprocess
@@ -23,6 +24,8 @@ from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 JAVA_OPTS = "spark.driver.extraJavaOptions"
+DEFAULT_JAVA_OPTS = "spark.driver.defaultJavaOptions"
+COLLECTOR = "-XX:+UseParallelGC"
 
 
 def get_spark(
@@ -105,6 +108,13 @@ def get_spark(
             k, _, v = item.partition("=")
             overrides[k.strip()] = v.strip()
     overrides.update(extra_conf or {})
+    if not _jvm_running():
+        # a builder value replaces spark-defaults.conf's, so extend that one
+        defaults = _defaults_file()
+        java_opts, default_opts = (overrides.get(k) or defaults.get(k, "")
+                                   for k in (JAVA_OPTS, DEFAULT_JAVA_OPTS))
+        if java_opts := _with_collector(java_opts, default_opts):
+            overrides[JAVA_OPTS] = java_opts
     plan = plan_class_data(
         overrides.get("spark.driver.memory", driver_mem), overrides.get(JAVA_OPTS, "")
     )
@@ -127,6 +137,56 @@ def get_spark(
     print(f"oni_ml_spark.session: {plan.message}", file=sys.stderr)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _jvm_running() -> bool:
+    """A driver JVM is up (this process started one, or spark-submit started
+    this process): launch settings no longer apply."""
+    return SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
+
+
+def _conf_dir() -> str:
+    return os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+
+
+def _defaults_file() -> dict[str, str]:
+    """spark-defaults.conf in the conf directory, one value per key."""
+    try:
+        lines = Path(_conf_dir(), "spark-defaults.conf").read_text().splitlines()
+    except OSError:
+        return {}
+    conf = {}
+    for line in lines:  # "key value" or "key=value"; the last one wins
+        m = re.match(r"\s*([^\s#!=:]+)(?:\s*[=:]\s*|\s+)(.*)", line)
+        if m:
+            conf[m.group(1)] = m.group(2).strip()
+    return conf
+
+
+# -- Collector ---------------------------------------------------------------
+#
+# Under G1 most of the driver's resident memory is young generation, not
+# data: a perfbench curation at a fixed 2 GB heap grew eden to 1,220 one-MB
+# regions while 130-220 MB stayed live, so the JVM touched ~2.1 GB. The
+# parallel collector keeps its young generation within a third of the heap,
+# and the same curation peaks at ~1.35 GB instead of ~2.3 GB.
+
+_NAMES_A_COLLECTOR = re.compile(
+    r"-XX:\+Use(?:Serial|Parallel|ParallelOld|G1|Z|Shenandoah|Epsilon|ConcMarkSweep)GC\b"
+)
+
+
+def _with_collector(java_opts: str, default_opts: str) -> str:
+    """``java_opts`` with the parallel collector appended, unless a collector
+    is already chosen there, in the driver's default options or in the
+    environment the launcher and the JVM read: a JVM given two collectors
+    refuses to start."""
+    chosen = [java_opts, default_opts] + [os.environ.get(v, "") for v in (
+        "PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS",
+        "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS")]
+    if any(_NAMES_A_COLLECTOR.search(opts) for opts in chosen):
+        return java_opts
+    return f"{java_opts} {COLLECTOR}".lstrip()
 
 
 # -- Class-data sharing ------------------------------------------------------
@@ -256,14 +316,14 @@ def _publish(key: str, cache: Path, java: str, driver_mem: str, java_opts: str) 
 
 def plan_class_data(driver_mem: str, java_opts: str) -> ClassDataPlan:
     """Decide how the driver JVM about to launch uses the archive."""
-    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+    if _jvm_running():
         return ClassDataPlan("normal start: a JVM is already running")
     spark_home = _find_spark_home()
     # the launcher puts the conf directory first on the class path, and
     # CDS refuses a non-empty directory there: one holding only templates
     # (or none at all) is swapped for an empty one. Hadoop's and YARN's
     # conf directories are on it too when set, and cannot be swapped
-    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    conf_dir = _conf_dir()
     for d in (conf_dir, os.environ.get("HADOOP_CONF_DIR"), os.environ.get("YARN_CONF_DIR")):
         if d and os.path.isdir(d) and any(
             d != conf_dir or not n.endswith(".template") for n in os.listdir(d)

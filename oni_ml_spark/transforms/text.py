@@ -173,9 +173,11 @@ def top_domain_expr(
     proxy/ProxyWordCreation.scala:54-67 (safelist "intel", SURVEY.md §7.4.8 —
     parameterized here).
 
-    ``top_domains`` is the bare-name set (Alexa-style second-level names).
-    Materialized as a broadcast-able isin — for very large lists prefer a
-    broadcast left join (see io.load_top_domains_df).
+    ``top_domains`` is the bare-name set (Alexa-style second-level names),
+    inlined as a literal ``isin``. Plan construction grows with the list
+    (~47 s at 10⁵ names), so a list the size of the reference's Alexa
+    top-1M needs a broadcast left join instead: ROADMAP.md, "Flag top
+    domains with a broadcast join, not an inlined literal set".
     """
     d = F.col(domain) if isinstance(domain, str) else domain
     safelist = safelist if safelist is not None else ["intel"]

@@ -12,18 +12,9 @@ import duckdb
 import pytest
 
 from tests.conftest import SF_DIR_ORACLE as SF_DIR
-from tests.oracle_battery import ORACLES, QUERIES, TABLES
-
-# Entries with eager construction work (model fits, cached pins) pay it when
-# the frame is built; the type and value tests share one built frame.
-# Entries are seeded and deterministic, so every consumer sees the same rows.
-_FRAME_CACHE: dict[str, object] = {}
-
-
-def _frame(spark, name: str):
-    if name not in _FRAME_CACHE:
-        _FRAME_CACHE[name] = QUERIES[name](spark, SF_DIR)
-    return _FRAME_CACHE[name]
+# built() shares one frame per entry between the type and value tests here
+# and the plan guards of tests/test_plans.py that read the same scale factor
+from tests.oracle_battery import ORACLES, TABLES, built
 
 
 @pytest.fixture(scope="module")
@@ -86,7 +77,7 @@ _TYPE_OK = {
 def test_oracle_column_types_align(spark, duck, name):
     """Every oracle column's DuckDB type must be compatible with the Spark
     column's type, which the stringified value compare below cannot see."""
-    sdt = dict(_frame(spark, name).dtypes)
+    sdt = dict(built(spark, name, SF_DIR).dtypes)
     rel = duck.sql(ORACLES[name])
     ddt = dict(zip(rel.columns, (str(t) for t in rel.types)))
     bad = []
@@ -99,7 +90,7 @@ def test_oracle_column_types_align(spark, duck, name):
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, duck, name):
-    sdf = _frame(spark, name)
+    sdf = built(spark, name, SF_DIR)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
 

@@ -1,12 +1,15 @@
-"""The driver JVM's class-data-sharing archive (session.plan_class_data):
-its key, the conf-directory rule, publishing a part file only after a probe
-JVM mapped it, and a first process that writes the archive for a second one
-to map. Every test points XDG_CACHE_HOME at its own tmp_path."""
+"""How get_spark launches the driver JVM: on the parallel collector unless
+the caller chose one, and from a class-data-sharing archive
+(session.plan_class_data): its key, the conf-directory rule, publishing a
+part file only after a probe JVM mapped it, and a first process that writes
+the archive for a second one to map. Every test points XDG_CACHE_HOME at its
+own tmp_path."""
 
 from __future__ import annotations
 
 import json
 import os
+import shlex
 import subprocess
 import sys
 import time
@@ -29,6 +32,9 @@ def fresh_launch(tmp_path, monkeypatch):
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     monkeypatch.delenv("HADOOP_CONF_DIR", raising=False)
     monkeypatch.delenv("YARN_CONF_DIR", raising=False)
+    for var in ("PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS",
+                "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS"):
+        monkeypatch.delenv(var, raising=False)
     monkeypatch.setattr(SparkContext, "_gateway", None)
 
 
@@ -42,15 +48,16 @@ def _dead_pid() -> int:
     return p.pid
 
 
-def _part(tmp_path, mem, *, truncate=False, writer=None) -> Path:
+def _part(tmp_path, mem, *, opts="", truncate=False, writer=None) -> Path:
     """A real (tiny) dynamic archive dumped by ``java -version`` as a part
-    file of the key for ``mem``, with the sidecar a launch writes."""
+    file of the key for ``mem`` and ``opts``, with the sidecar a launch
+    writes."""
     classpath = tmp_path / "cp"
     classpath.mkdir(exist_ok=True)
     cache = session.cache_dir()
     cache.mkdir(parents=True, exist_ok=True)
-    part = cache / f"{_key(mem)}.{writer or _dead_pid()}.part"
-    subprocess.run([session._java(), f"-Xmx{mem}", "-Xlog:cds=error",
+    part = cache / f"{_key(mem, opts)}.{writer or _dead_pid()}.part"
+    subprocess.run([session._java(), f"-Xmx{mem}", *shlex.split(opts), "-Xlog:cds=error",
                     f"-XX:ArchiveClassesAtExit={part}", "-cp", str(classpath), "-version"],
                    check=True, capture_output=True)
     if truncate:
@@ -200,13 +207,90 @@ def test_extra_conf_java_options_survive_the_merge(monkeypatch):
                        "spark.ui.showConsoleProgress=false;spark.driver.extraJavaOptions=-Xms2g")
     options, conf_dir = _launch(monkeypatch)
     opts = options[session.JAVA_OPTS]
-    assert opts.startswith("-Xms2g -XX:ArchiveClassesAtExit=")
-    assert f"{_key('2g', '-Xms2g')}.{os.getpid()}.part" in opts
+    # the caller's options first, then the collector, then the archive flag
+    assert opts.startswith(f"-Xms2g {session.COLLECTOR} -XX:ArchiveClassesAtExit=")
+    assert f"{_key('2g', f'-Xms2g {session.COLLECTOR}')}.{os.getpid()}.part" in opts
     assert conf_dir == str(session.cache_dir() / "conf")
     assert "SPARK_CONF_DIR" not in os.environ  # restored after the launch
 
     options, _ = _launch(monkeypatch, {session.JAVA_OPTS: "-Xss4m"})
-    assert options[session.JAVA_OPTS].startswith("-Xss4m -XX:ArchiveClassesAtExit=")
+    assert options[session.JAVA_OPTS].startswith(
+        f"-Xss4m {session.COLLECTOR} -XX:ArchiveClassesAtExit=")
+
+
+def test_collector_is_in_the_key_and_the_probe(tmp_path, monkeypatch):
+    part = _part(tmp_path, "1g", opts=session.COLLECTOR)
+    probes = []
+    run = subprocess.run
+
+    def recording_run(cmd, **kwargs):
+        probes.append(cmd)
+        return run(cmd, **kwargs)
+
+    monkeypatch.setattr(session.subprocess, "run", recording_run)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
+    options, _ = _launch(monkeypatch)
+    jsa = session.cache_dir() / f"{_key('1g', session.COLLECTOR)}.jsa"
+    assert options[session.JAVA_OPTS] == f"{session.COLLECTOR} -XX:SharedArchiveFile={jsa}"
+    assert jsa.is_file() and not part.exists()
+    (probe,) = probes
+    assert session.COLLECTOR in probe and f"-XX:SharedArchiveFile={part}" in probe
+
+
+@pytest.mark.parametrize("where", [
+    "SPARK_GRAFT_EXTRA_CONF", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS",
+    "SPARK_SUBMIT_OPTS", "PYSPARK_SUBMIT_ARGS",
+])
+def test_callers_collector_is_kept(monkeypatch, where):
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    mine = "-Xms1g"
+    if where == "SPARK_GRAFT_EXTRA_CONF":
+        mine = "-Xms1g -XX:+UseG1GC"
+    elif where == "PYSPARK_SUBMIT_ARGS":
+        monkeypatch.setenv(where, "--driver-java-options -XX:+UseG1GC pyspark-shell")
+    else:
+        monkeypatch.setenv(where, "-XX:+UseG1GC")
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", f"spark.driver.extraJavaOptions={mine}")
+    options, _ = _launch(monkeypatch)
+    opts = options[session.JAVA_OPTS]
+    assert opts.startswith(f"{mine} -XX:ArchiveClassesAtExit=")
+    assert f"{_key('1g', mine)}." in opts and session.COLLECTOR not in opts
+
+
+def test_spark_defaults_java_options_are_extended(tmp_path, monkeypatch):
+    """A builder value replaces spark-defaults.conf's, so the file's options
+    are carried into the merged ones; a collector named there, or in the
+    driver's default options, is kept."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
+    defaults = conf / "spark-defaults.conf"
+    defaults.write_text("spark.driver.extraJavaOptions  -Dold=1\n"
+                        "spark.driver.extraJavaOptions=-Dfrom.file=1 -Xss4m\n")
+    options, _ = _launch(monkeypatch)
+    assert options[session.JAVA_OPTS] == f"-Dfrom.file=1 -Xss4m {session.COLLECTOR}"
+    # the caller's own options replace the file's, as Spark does
+    options, _ = _launch(monkeypatch, {session.JAVA_OPTS: "-Xss8m"})
+    assert options[session.JAVA_OPTS] == f"-Xss8m {session.COLLECTOR}"
+    defaults.write_text("spark.driver.extraJavaOptions -XX:+UseSerialGC\n")
+    options, _ = _launch(monkeypatch)
+    assert options[session.JAVA_OPTS] == "-XX:+UseSerialGC"
+    defaults.write_text("# an administrator's choice\n"
+                        "spark.driver.defaultJavaOptions=-XX:+UseG1GC\n")
+    options, _ = _launch(monkeypatch)
+    assert session.JAVA_OPTS not in options
+    options, _ = _launch(monkeypatch, {session.DEFAULT_JAVA_OPTS: "-XX:+UseZGC",
+                                       session.JAVA_OPTS: "-Xss8m"})
+    assert options[session.JAVA_OPTS] == "-Xss8m"
+
+
+def test_running_jvm_gets_no_collector(monkeypatch):
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
+    options, _ = _launch(monkeypatch)
+    assert session.JAVA_OPTS not in options
 
 
 def test_real_conf_dir_is_left_untouched(tmp_path, monkeypatch):
@@ -216,36 +300,63 @@ def test_real_conf_dir_is_left_untouched(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
     monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", "spark.driver.extraJavaOptions=-Xms1g")
     options, conf_dir = _launch(monkeypatch)
-    assert options[session.JAVA_OPTS] == "-Xms1g"
+    assert options[session.JAVA_OPTS] == f"-Xms1g {session.COLLECTOR}"
     assert conf_dir == str(conf) and os.environ["SPARK_CONF_DIR"] == str(conf)
 
 
 _CHILD = """
 import json
 from oni_ml_spark.session import get_spark
-spark = get_spark("cds_two_process")
+spark = get_spark("child")
 rows = spark.range(50).selectExpr("id % 7 AS k").groupBy("k").count().orderBy("k").collect()
-print(json.dumps([list(r) for r in rows]))
+beans = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+print(json.dumps({"rows": [list(r) for r in rows], "gcs": sorted(b.getName() for b in beans)}))
 """
+_ROWS = [[k, 8 if k == 0 else 7] for k in range(7)]
+_PARALLEL = ["PS MarkSweep", "PS Scavenge"]
+
+
+def _child_env(tmp_path, **env):
+    env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "xdg"), "PYTHONPATH": str(ROOT),
+           "SPARK_GRAFT_CPUS": "1", "SPARK_GRAFT_DRIVER_MEM": "1g",
+           "SPARK_GRAFT_WAREHOUSE": str(tmp_path / "warehouse"), **env}
+    for k in ("PYSPARK_GATEWAY_PORT", "PYSPARK_GATEWAY_SECRET", "SPARK_CONF_DIR"):
+        env.pop(k, None)
+    return env
+
+
+def _child(env):
+    """Run get_spark in a fresh process; returns what it printed and its
+    session line."""
+    r = subprocess.run([sys.executable, "-c", _CHILD], env=env, capture_output=True,
+                       text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-3000:]
+    line = [ln for ln in r.stderr.splitlines() if ln.startswith("oni_ml_spark.session:")]
+    return json.loads(r.stdout.strip().splitlines()[-1]), line
+
+
+@pytest.mark.parametrize("chosen", [None, "SPARK_GRAFT_EXTRA_CONF", "JAVA_TOOL_OPTIONS"])
+def test_launched_jvm_runs_the_chosen_collector(tmp_path, chosen):
+    """The parallel collector by default; a caller's own G1 is kept and the
+    JVM starts. The cache is a file, so no archive is written."""
+    (tmp_path / "xdg").write_text("")
+    env = _child_env(tmp_path)
+    if chosen == "SPARK_GRAFT_EXTRA_CONF":
+        env[chosen] = "spark.driver.extraJavaOptions=-XX:+UseG1GC"
+    elif chosen == "JAVA_TOOL_OPTIONS":
+        env[chosen] = "-XX:+UseG1GC"
+    out, line = _child(env)
+    assert line == [f"oni_ml_spark.session: normal start: the cache "
+                    f"{tmp_path / 'xdg' / 'oni_ml_spark' / 'cds'} is not writable"]
+    assert out["rows"] == _ROWS
+    assert out["gcs"] == (_PARALLEL if chosen is None
+                          else ["G1 Old Generation", "G1 Young Generation"])
 
 
 def test_first_process_writes_the_archive_the_second_maps(tmp_path):
-    env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "xdg"), "PYTHONPATH": str(ROOT),
-           "SPARK_GRAFT_CPUS": "1", "SPARK_GRAFT_DRIVER_MEM": "1g",
-           "SPARK_GRAFT_WAREHOUSE": str(tmp_path / "warehouse"),
-           "SPARK_GRAFT_EXTRA_CONF": "spark.driver.extraJavaOptions="
-                                     f"-Xlog:class+load=info:file={tmp_path}/load.%p.log"}
-    for k in ("PYSPARK_GATEWAY_PORT", "PYSPARK_GATEWAY_SECRET", "SPARK_CONF_DIR"):
-        env.pop(k, None)
-
-    def child():
-        r = subprocess.run([sys.executable, "-c", _CHILD], env=env, capture_output=True,
-                           text=True, timeout=300)
-        assert r.returncode == 0, r.stderr[-3000:]
-        line = [ln for ln in r.stderr.splitlines() if ln.startswith("oni_ml_spark.session:")]
-        return json.loads(r.stdout.strip().splitlines()[-1]), line
-
-    first_rows, first_line = child()
+    env = _child_env(tmp_path, SPARK_GRAFT_EXTRA_CONF="spark.driver.extraJavaOptions="
+                     f"-Xlog:class+load=info:file={tmp_path}/load.%p.log")
+    first, first_line = _child(env)
     cache = tmp_path / "xdg" / "oni_ml_spark" / "cds"
     (sidecar,) = cache.glob("*.part.json")
     assert first_line == [f"oni_ml_spark.session: writing {cache / sidecar.stem}"]
@@ -255,11 +366,13 @@ def test_first_process_writes_the_archive_the_second_maps(tmp_path):
         assert time.monotonic() < deadline, "the first JVM did not exit"
         time.sleep(0.5)
 
-    second_rows, second_line = child()
+    second, second_line = _child(env)
     (jsa,) = cache.glob("*.jsa")
     assert second_line == [f"oni_ml_spark.session: mapped {jsa}"]
     assert not list(cache.glob("*.part*"))
-    assert second_rows == first_rows == [[k, 8 if k == 0 else 7] for k in range(7)]
+    assert second["rows"] == first["rows"] == _ROWS
+    # both JVMs, the dumping and the mapping one, ran the parallel collector
+    assert second["gcs"] == first["gcs"] == _PARALLEL
     # the probe JVM logs too; the second driver is the other one that
     # loaded SparkContext
     (log,) = [p for p in tmp_path.glob("load.*.log") if p.name != f"load.{first_jvm}.log"
