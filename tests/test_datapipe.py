@@ -1236,6 +1236,9 @@ class TestNearDupClusters:
                     docs, "doc_id", "text", n=1, num_hashes=16, bands=16,
                     threshold=0.7,
                 ).collect()
+                # the tracker reads a store fed by the asynchronous listener
+                # bus: drain it, or the last job may not be recorded yet
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
                 jobs = tracker.getJobIdsForGroup(group)
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
