@@ -139,12 +139,19 @@ def test_quantile_cuts_plan_is_lazy_and_join_free(spark):
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     li.schema  # absorb the read-side footer job before counting
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    ec = ecdf(li, "l_quantity")
-    cuts = quantile_cuts_df(li, "l_extendedprice", DECILES)
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before, "building the quantile plans ran Spark jobs"
+    # counted in a job group of its own: a count of all jobs drops
+    # whenever the status store passes spark.ui.retainedJobs
+    sc = spark.sparkContext
+    sc.setJobGroup("quantile-plan-build", "quantile-plan-build")
+    try:
+        ec = ecdf(li, "l_quantity")
+        cuts = quantile_cuts_df(li, "l_extendedprice", DECILES)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not sc.statusTracker().getJobIdsForGroup("quantile-plan-build"), \
+        "building the quantile plans ran Spark jobs"
     p = _plan_of(spark, cuts)
     e = _plan_of(spark, ec)
     # the only nested-loop join allowed is the 1-row boundary-array attach

@@ -325,12 +325,19 @@ class TestSnapshotDiff:
         # calling snapshot_diff runs NO jobs either way: validation is part
         # of the diff plan (validate=True) or absent (validate=False) —
         # never an eager pre-scan. Assert laziness via the tracker.
-        tracker = spark.sparkContext.statusTracker()
-        before = len(tracker.getJobIdsForGroup(None) or [])
-        lazy = snapshot_diff(a, b, "id", "t")
-        lazy_off = snapshot_diff(a, b, "id", "t", validate=False)
-        after = len(tracker.getJobIdsForGroup(None) or [])
-        assert after == before, "snapshot_diff ran an eager validation job"
+        # counted in a job group of its own: a count of all jobs drops
+        # whenever the status store passes spark.ui.retainedJobs
+        sc = spark.sparkContext
+        sc.setJobGroup("snapshot-diff-build", "snapshot-diff-build")
+        try:
+            lazy = snapshot_diff(a, b, "id", "t")
+            lazy_off = snapshot_diff(a, b, "id", "t", validate=False)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert not sc.statusTracker().getJobIdsForGroup("snapshot-diff-build"), \
+            "snapshot_diff ran an eager validation job"
         want = {1: "removed", 2: "unchanged", 3: "added"}
         assert {r["id"]: r["status"] for r in lazy.collect()} == want
         assert {r["id"]: r["status"] for r in lazy_off.collect()} == want

@@ -64,12 +64,20 @@ class TestPipelineAudit:
             "after_filter",
             metrics={"value_sum": F.sum("value")},
         )
-        tracker = spark.sparkContext.statusTracker()
-        before = len(tracker.getJobIdsForGroup(None) or [])
-        df.write.format("noop").mode("overwrite").save()
-        report = audit.report()
-        after = len(tracker.getJobIdsForGroup(None) or [])
-        assert after == before + 1, "audit.report() triggered extra jobs"
+        # counted in a job group of its own, after draining the listener
+        # bus: a count of all jobs drops by 100 whenever the status store
+        # passes spark.ui.retainedJobs (1000) and evicts old ones
+        sc = spark.sparkContext
+        sc.setJobGroup("audit-one-action", "audit-one-action")
+        try:
+            df.write.format("noop").mode("overwrite").save()
+            report = audit.report()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup("audit-one-action")
+        assert len(jobs) == 1, "audit.report() triggered extra jobs"
         assert report["ingested"]["n_rows"] == e.count()
         assert report["ingested"]["n_null_props"] == \
             e.filter(F.col("props").isNull()).count()
