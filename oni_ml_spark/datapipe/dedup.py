@@ -518,6 +518,12 @@ def near_dup_clusters(
         df, id_col, text_col, n, num_hashes, bands, threshold
     )
     try:
+        # load the cache before the pairs query reads it in five places: AQE
+        # takes a cache that fills mid-query as ready as soon as any one read
+        # has filled it, so whether a join over another read is planned before
+        # or after its shuffle starts, and how many jobs run, would depend on
+        # timing
+        shingles.count()
         comp = connected_components(
             pairs.select("id_a", "id_b"), nodes=df.select(F.col(id_col).alias("id"))
         )

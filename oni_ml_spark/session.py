@@ -108,12 +108,14 @@ def get_spark(
             k, _, v = item.partition("=")
             overrides[k.strip()] = v.strip()
     overrides.update(extra_conf or {})
-    if not _jvm_running():
-        # a builder value replaces spark-defaults.conf's, so extend that one
-        defaults = _defaults_file()
-        java_opts, default_opts = (overrides.get(k) or defaults.get(k, "")
-                                   for k in (JAVA_OPTS, DEFAULT_JAVA_OPTS))
-        if java_opts := _with_collector(java_opts, default_opts):
+    # a builder value replaces spark-defaults.conf's: with that file in the
+    # conf directory the driver's options are left as they are
+    if not _jvm_running() and not os.path.isfile(
+        os.path.join(_conf_dir(), "spark-defaults.conf")
+    ):
+        if java_opts := _with_collector(
+            overrides.get(JAVA_OPTS, ""), overrides.get(DEFAULT_JAVA_OPTS, "")
+        ):
             overrides[JAVA_OPTS] = java_opts
     plan = plan_class_data(
         overrides.get("spark.driver.memory", driver_mem), overrides.get(JAVA_OPTS, "")
@@ -147,20 +149,6 @@ def _jvm_running() -> bool:
 
 def _conf_dir() -> str:
     return os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
-
-
-def _defaults_file() -> dict[str, str]:
-    """spark-defaults.conf in the conf directory, one value per key."""
-    try:
-        lines = Path(_conf_dir(), "spark-defaults.conf").read_text().splitlines()
-    except OSError:
-        return {}
-    conf = {}
-    for line in lines:  # "key value" or "key=value"; the last one wins
-        m = re.match(r"\s*([^\s#!=:]+)(?:\s*[=:]\s*|\s+)(.*)", line)
-        if m:
-            conf[m.group(1)] = m.group(2).strip()
-    return conf
 
 
 # -- Collector ---------------------------------------------------------------

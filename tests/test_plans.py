@@ -23,27 +23,21 @@ def _plan_of(spark, df, mode: str = "simple") -> str:
     return df._jdf.queryExecution().explainString(jmode)
 
 
-# Plan text per battery entry, built once per module run: entries with eager
-# construction (fits, cached pins) pay that work when built, and the
+# Plan text per battery entry, explained once per module run: the
 # battery-wide window walk below reads every entry again. Plans are
 # deterministic per session config, so the cache cannot mask a plan change
 # within one run.
 _PLAN_CACHE: dict[str, str] = {}
 
-# entries that fit models while their frame is built (ann_ivf_kmeans: nine
-# seeded k-means fits) are read at the parity test's scale factor, so the
-# frame tests/test_oracle_parity.py builds serves both files
-_FITTED = {"ann_ivf_kmeans"}
-
 
 def _plan(spark, name: str) -> str:
     if name not in _PLAN_CACHE:
-        if name in _FITTED:
-            # a new Dataset over the shared frame: once the parity test ran
-            # it, it explains AQE's final plan, not the one it starts from
-            df = built(spark, name, SF_DIR_ORACLE).select("*")
-        else:
-            df = QUERIES[name](spark, SF_DIR)
+        # the frame tests/test_oracle_parity.py builds at its scale factor:
+        # entries with eager construction (model fits, cached pins) pay it
+        # once for both files. A new Dataset over it, because once the
+        # parity test ran it, the frame explains AQE's final plan, not the
+        # one it starts from
+        df = built(spark, name, SF_DIR_ORACLE).select("*")
         _PLAN_CACHE[name] = _plan_of(spark, df)
     return _PLAN_CACHE[name]
 

@@ -258,32 +258,24 @@ def test_callers_collector_is_kept(monkeypatch, where):
     assert f"{_key('1g', mine)}." in opts and session.COLLECTOR not in opts
 
 
-def test_spark_defaults_java_options_are_extended(tmp_path, monkeypatch):
-    """A builder value replaces spark-defaults.conf's, so the file's options
-    are carried into the merged ones; a collector named there, or in the
-    driver's default options, is kept."""
+def test_spark_defaults_file_leaves_java_options_alone(tmp_path, monkeypatch):
+    """A builder value replaces spark-defaults.conf's, so with that file in
+    the conf directory no collector is appended; a collector the caller
+    names in the driver's default options is kept too."""
     conf = tmp_path / "conf"
     conf.mkdir()
     monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
     monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
-    defaults = conf / "spark-defaults.conf"
-    defaults.write_text("spark.driver.extraJavaOptions  -Dold=1\n"
-                        "spark.driver.extraJavaOptions=-Dfrom.file=1 -Xss4m\n")
-    options, _ = _launch(monkeypatch)
-    assert options[session.JAVA_OPTS] == f"-Dfrom.file=1 -Xss4m {session.COLLECTOR}"
-    # the caller's own options replace the file's, as Spark does
-    options, _ = _launch(monkeypatch, {session.JAVA_OPTS: "-Xss8m"})
-    assert options[session.JAVA_OPTS] == f"-Xss8m {session.COLLECTOR}"
-    defaults.write_text("spark.driver.extraJavaOptions -XX:+UseSerialGC\n")
-    options, _ = _launch(monkeypatch)
-    assert options[session.JAVA_OPTS] == "-XX:+UseSerialGC"
-    defaults.write_text("# an administrator's choice\n"
-                        "spark.driver.defaultJavaOptions=-XX:+UseG1GC\n")
+    (conf / "spark-defaults.conf").write_text("spark.driver.extraJavaOptions -Xss4m\n")
     options, _ = _launch(monkeypatch)
     assert session.JAVA_OPTS not in options
+    options, _ = _launch(monkeypatch, {session.JAVA_OPTS: "-Xss8m"})
+    assert options[session.JAVA_OPTS] == "-Xss8m"
+    (conf / "spark-defaults.conf").unlink()
     options, _ = _launch(monkeypatch, {session.DEFAULT_JAVA_OPTS: "-XX:+UseZGC",
                                        session.JAVA_OPTS: "-Xss8m"})
-    assert options[session.JAVA_OPTS] == "-Xss8m"
+    opts = options[session.JAVA_OPTS]
+    assert opts.startswith("-Xss8m -XX:ArchiveClassesAtExit=") and session.COLLECTOR not in opts
 
 
 def test_running_jvm_gets_no_collector(monkeypatch):
